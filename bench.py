@@ -184,6 +184,11 @@ _FP_COLLECT_METRICS_ID = re.compile(r"^(\s*(?:[+:|-]\s*)*CollectMetrics .*), \d+
 #: Partition COUNT never changes what a query computes, so the
 #: fingerprint normalizes it out; plan SHAPE (the Repartition node
 #:  itself, its keys) still fingerprints.
+#: Accepted blind spot: the normalization cannot tell an environment-
+#: derived count from a hard-coded one, so a deliberate change such as
+#: repartition(8) -> repartition(512), which can move a key's time, no
+#: longer invalidates its committed good-window minima. Whoever changes a
+#: hard-coded partition count re-measures that key by hand.
 _FP_REPARTITION_N = re.compile(
     r"^(\s*(?:[+:|-]\s*)*)Repartition \d+,", re.M
 )

@@ -23,10 +23,20 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def _daemon_preload_conf() -> dict[str, str]:
-    """``spark.python.daemon.module`` → the warm-import daemon
-    (:mod:`hbase_bulkload_spark.daemon_preload`): worker forks inherit
-    numpy/pandas/pyarrow copy-on-write instead of re-importing them on
-    every cold start (~0.5-1 s per worker, per fork storm).
+    """``spark.python.daemon.module`` → the preload daemon
+    (:mod:`hbase_bulkload_spark.daemon_preload`), which has two jobs:
+
+    - worker forks inherit numpy/pandas/pyarrow copy-on-write instead of
+      re-importing them on every cold start (~0.5-1 s per worker, per
+      fork storm);
+    - ``zipimporter.invalidate_caches`` re-reads an archive only when
+      its ``(st_mtime_ns, st_size, st_ino)`` differs from the stamp of
+      that importer's last read. Every task's ``worker.main`` calls
+      ``importlib.invalidate_caches()``, which otherwise re-parses
+      pyspark.zip's central directory once per importer on it (16
+      importers, ~26,700 entries): ~140 ms per task on an idle 4-vCPU
+      VM and more under load, against 0.1 ms gated. At ``local[2]`` an
+      empty 16-task mapInArrow went from ~2.1 s to ~0.65 s.
 
     Two preconditions, both probed here so a broken environment
     degrades to the stock daemon instead of killing every Python task:

@@ -1,8 +1,7 @@
-"""Finer-grained decomposition of the HFile round-trip keys than
-tools/hfile_ds_ab.py (r11 optimization round): separates the shared
-bulkload_pipeline compute from the encode work, and the scan decode
-from the summary aggregation, and adds stub-body arms that run the
-same plan shape with the codec work removed — so framework overhead
+"""Phase decomposition of the HFile round-trip keys: separates the
+shared bulkload_pipeline compute from the encode work, and the scan
+decode from the summary aggregation, and adds stub-body arms that run
+the same plan shape with the codec work removed — so framework overhead
 (DSv2 Python writer vs mapInArrow) has its own number.
 
     python tools/hfile_phase_profile.py [sf_dir] [n_runs]

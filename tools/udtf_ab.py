@@ -11,9 +11,10 @@ alternative, and the number is committed either way.
     python tools/udtf_ab.py [sf_dir] [n_runs]
 
 Prints one JSON line: min/median seconds per variant over n_runs
-noop-sink executions, plus a row-count cross-check (the two variants
-must emit identical row counts; full value parity is the oracle's job —
-q_udtf_cells is hash-checked against DuckDB).
+noop-sink executions, plus a row-count cross-check: the two variants
+must emit identical row counts, or the tool exits non-zero before any
+timing (full value parity is the oracle's job — q_udtf_cells is
+hash-checked against DuckDB).
 """
 
 from __future__ import annotations
@@ -81,6 +82,8 @@ def main() -> None:
         "map_in_arrow": lambda: _map_in_arrow_form(spark, sf_dir),
     }
     counts = {k: fn().count() for k, fn in variants.items()}
+    if counts["udtf"] != counts["map_in_arrow"]:
+        sys.exit(f"udtf_ab: variants emit different row counts {counts}; not timed")
     out: dict[str, dict] = {"rows": counts, "sf_dir": sf_dir}
     for name, fn in variants.items():
         times = []
