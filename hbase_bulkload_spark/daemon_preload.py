@@ -1,7 +1,7 @@
-"""``pyspark.daemon`` wrapper that warms the scientific stack and gates
-zip-directory re-reads before serving worker forks.
+"""``pyspark.daemon`` wrapper that warms the scientific stack, gates
+zip-directory re-reads and freezes its heap before serving worker forks.
 
-It has two jobs, both paid once in the daemon instead of once per
+It has three jobs, all paid once in the daemon instead of once per
 forked worker or once per task.
 
 **Warm imports.** The stock daemon imports only pyspark; numpy/pandas/
@@ -39,6 +39,17 @@ stamp (e.g. one for an ``addPyFile`` zip) re-reads as before, then
 carries a stamp; a changed archive is re-read; a missing archive gets
 the stock behaviour (an empty directory).
 
+**Frozen heap.** A reused worker runs ``gc.collect()`` after every task
+(``pyspark.daemon.manager``). Unfrozen, that full collection walks every
+object the daemon imported, numpy/pandas/pyarrow included: 26-34 ms per
+task, averaged over ~770 tasks on a 4-vCPU VM. After its imports and the
+zip gate the daemon runs ``gc.collect(); gc.freeze()``, the pre-fork
+recipe in the :mod:`gc` docs: the survivors move to the permanent
+generation, which forked workers inherit and the collector never walks,
+so a task's collection covers only what that task allocated. Since the
+collector no longer writes to those objects' headers, it should also copy
+fewer of the daemon's pages into each worker; that is not measured.
+
 Wired in by ``session.get_spark`` via ``spark.python.daemon.module``
 (the module must be importable by the worker-side Python — get_spark
 exports the repo root on PYTHONPATH before the JVM launches). Module
@@ -47,6 +58,7 @@ stock daemon is kept, so this never turns an optional dependency into
 a hard one.
 """
 
+import gc
 import os
 import sys
 import zipimport
@@ -99,4 +111,7 @@ if __name__ == "__main__":
 
     # after every import, so the importers they opened get stamps
     install_zip_stamp_gate()
+    # last before serving forks: everything allocated so far is frozen
+    gc.collect()
+    gc.freeze()
     manager()

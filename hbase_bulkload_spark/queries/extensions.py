@@ -658,11 +658,14 @@ def _lsh_pack_gate(sf_dir: str) -> bool:
 
     # A/B override for interleaved scale measurements (and an escape
     # hatch): SPARK_GRAFT_LSH_PACK=0 forces the unpacked plan, =1
-    # forces packed (caller asserts the id bound), unset → footer gate.
-    forced = os.environ.get("SPARK_GRAFT_LSH_PACK")
-    if forced is not None and forced != "":
-        return forced not in ("0", "false", "no")
+    # forces packed unless the footer stats prove an id out of u32
+    # (only absent stats take the caller's word), unset → footer gate.
+    forced = os.environ.get("SPARK_GRAFT_LSH_PACK", "")
+    if forced in ("0", "false", "no"):
+        return False
     mm = datasets.parquet_column_minmax(sf_dir, "embeddings", "vec_id")
+    if mm is None and forced:
+        return True
     if mm is not None and 0 <= mm[0] and mm[1] < (1 << 32):
         return True
     import warnings
@@ -670,6 +673,7 @@ def _lsh_pack_gate(sf_dir: str) -> bool:
     warnings.warn(
         "LSH pair packing disabled: embeddings.vec_id "
         + ("has no footer min/max stats" if mm is None else f"spans {mm}")
+        + (f" (SPARK_GRAFT_LSH_PACK={forced} overruled)" if forced else "")
         + " — candidate dedup shuffles two longs per pair instead of one",
         RuntimeWarning,
         stacklevel=2,

@@ -181,6 +181,54 @@ def test_lsh_pack_gate_refuses_huge_ids(tmp_path):
     assert any("pair packing disabled" in str(x.message) for x in w)
 
 
+def test_lsh_pack_force_still_checks_id_bound(tmp_path, monkeypatch):
+    """SPARK_GRAFT_LSH_PACK=1 packs only when the footer stats do not
+    prove an id out of u32: a ``vec_id`` reaching 2^32 warns and keeps
+    the unpacked plan; absent stats take the override's word."""
+    import warnings
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hbase_bulkload_spark.queries.extensions import _lsh_pack_gate
+
+    def write(ids, **kw):
+        t = pa.table(
+            {
+                "vec_id": pa.array(ids, pa.int64()),
+                "embedding": pa.array([[0.0]] * len(ids), pa.list_(pa.float32())),
+                "label": pa.array(["a"] * len(ids)),
+            }
+        )
+        pq.write_table(t, str(tmp_path / "embeddings.parquet"), **kw)
+
+    monkeypatch.setenv("SPARK_GRAFT_LSH_PACK", "1")
+    write([5, 1 << 32])
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        assert _lsh_pack_gate(str(tmp_path)) is False
+    assert any(
+        "pair packing disabled" in str(x.message) and "overruled" in str(x.message)
+        for x in w
+    )
+
+    write([-1, 5])
+    with pytest.warns(RuntimeWarning, match="pair packing disabled"):
+        assert _lsh_pack_gate(str(tmp_path)) is False
+
+    write([0, (1 << 32) - 1])
+    assert _lsh_pack_gate(str(tmp_path)) is True
+
+    write([5, 1 << 32], write_statistics=False)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert _lsh_pack_gate(str(tmp_path)) is True
+
+    monkeypatch.setenv("SPARK_GRAFT_LSH_PACK", "0")
+    write([0, 1])
+    assert _lsh_pack_gate(str(tmp_path)) is False
+
+
 def test_ivf_topk_precision_and_recall(spark, sf_dir):
     """IVF results must carry exact scores (precision exact); recall vs
     the exact top-k is probe-budget-dependent but must be substantial on
