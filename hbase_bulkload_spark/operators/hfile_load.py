@@ -442,11 +442,13 @@ def plan_block_splits(
         chunk: list[tuple[int, int]] = []
         acc = 0
         for i, (off, size, _key) in enumerate(entries):
-            # block i holds rows in [first_rows[i], first_rows[i+1])
+            # block i holds rows in [first_rows[i], first_rows[i+1]]:
+            # a row may straddle into the next block (HBase rolls blocks
+            # at cell boundaries)
             if (
                 start_row is not None
                 and i + 1 < len(first_rows)
-                and first_rows[i + 1] <= start_row
+                and first_rows[i + 1] < start_row
             ):
                 continue
             if stop_row is not None and first_rows[i] >= stop_row:
@@ -556,11 +558,16 @@ def multi_get(
     ``rowkeys`` is a list of canonical (string) keys or a DataFrame
     with a ``rowkey`` column — the DataFrame form makes this a keyed
     lookup JOIN against the HBase artifact: cells come back only for
-    requested keys, the table is never scanned. Output matches
-    scan_hfiles: (region, rowkey, family, qualifier, ts, value)."""
-    import pandas as pd
-
+    requested keys, the table is never scanned. A key list is deduped
+    in the driver, so the plan is one narrow stage (`LocalTableScan →
+    mapInArrow`, no exchange); a keyset DataFrame keeps its
+    ``distinct()`` shuffle, the only way to dedupe keys spread across
+    partitions. Output matches scan_hfiles: (region, rowkey, family,
+    qualifier, ts, value); string mode rejects non-UTF-8 cells."""
     import glob as _glob
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
 
     files = sorted(
         _glob.glob(os.path.join(table_dir, "region-*", "*", "*.hfile"))
@@ -577,17 +584,17 @@ def multi_get(
         keys_df = rowkeys.select("rowkey").distinct()
     else:
         keys_df = spark.createDataFrame(
-            [(k,) for k in rowkeys], "rowkey string"
-        ).distinct()
+            pa.table({"rowkey": pa.array(sorted(set(rowkeys)), pa.string())})
+        )
 
-    cell_t = "binary" if binary else "string"
-    out_schema = (
-        f"region string, rowkey {cell_t}, family {cell_t}, "
-        f"qualifier {cell_t}, ts long, value {cell_t}"
-    )
+    cell_t = pa.binary() if binary else pa.string()
+    out_schema = pa.schema([
+        ("region", pa.string()), ("rowkey", cell_t), ("family", cell_t),
+        ("qualifier", cell_t), ("ts", pa.int64()), ("value", cell_t),
+    ])
 
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def fetch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
             # route by bisecting the sorted keyset against each file's
             # range: O(files · log keys + hits), never O(keys · files) —
             # file ranges may overlap (multiple HFiles per region), so
@@ -596,36 +603,26 @@ def multi_get(
             ks = sorted(
                 {
                     k if isinstance(k, bytes) else k.encode()
-                    for k in pdf["rowkey"]
+                    for k in rb.column(0).to_pylist()
                 }
             )
-            per_file: dict[str, tuple[str, list[bytes]]] = {}
+            regions: list[str] = []
+            cells: list[tuple[bytes, bytes, bytes, int, bytes]] = []
             for path, region, fr, lr in routing:
                 lo = bisect_left(ks, fr)
                 hi = bisect_right(ks, lr)
                 if lo < hi:
-                    per_file[path] = (region, ks[lo:hi])
-            cols: dict[str, list] = {
-                "region": [], "rowkey": [], "family": [],
-                "qualifier": [], "ts": [], "value": [],
-            }
-            for path, (region, kbs) in sorted(per_file.items()):
-                for r, fam, qual, ts, value in hf.hfile_multi_get(path, kbs):
-                    cols["region"].append(region)
-                    if binary:
-                        cols["rowkey"].append(r)
-                        cols["family"].append(fam)
-                        cols["qualifier"].append(qual)
-                        cols["value"].append(value)
-                    else:
-                        cols["rowkey"].append(r.decode())
-                        cols["family"].append(fam.decode())
-                        cols["qualifier"].append(qual.decode())
-                        cols["value"].append(value.decode())
-                    cols["ts"].append(ts)
-            yield pd.DataFrame(cols)
+                    got = hf.hfile_multi_get(path, ks[lo:hi])
+                    regions += [region] * len(got)
+                    cells += got
+            cols = [regions, *zip(*cells)] if cells else [[]] * 6
+            # a string field rejects non-UTF-8 bytes here
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, out_schema)],
+                schema=out_schema,
+            )
 
-    return keys_df.mapInPandas(fetch, out_schema)
+    return keys_df.mapInArrow(fetch, from_arrow_schema(out_schema))
 
 
 def scan_hfiles(

@@ -85,7 +85,7 @@ import math
 import os
 import struct
 import zlib
-from bisect import bisect_right
+from bisect import bisect_left, bisect_right
 from collections.abc import Iterable, Iterator
 
 from hbase_bulkload_spark.sources.rcfile import dec_vlong, enc_vlong
@@ -286,6 +286,8 @@ def _decode_cells(plain: bytes) -> Iterator[tuple[bytes, bytes, bytes, int, byte
 _PACK_H = struct.Struct(">H").pack
 _PACK_II = struct.Struct(">ii").pack
 _PACK_QB = struct.Struct(">qB").pack
+_UNPACK_II = struct.Struct(">ii").unpack_from
+_UNPACK_Q = struct.Struct(">q").unpack_from
 
 
 def _enc_index_entries(entries: list[tuple[int, int, bytes]]) -> bytes:
@@ -302,8 +304,9 @@ class HFileWriter:
     (rowkey, qualifier) — the bulk-load contract the PutSortReducer
     establishes upstream (`BulkImporterFromText.java:108`). Blocks roll
     at row boundaries once past ``block_size`` so a row never straddles
-    blocks (HBase permits straddling; rolling on the boundary keeps the
-    point-get path single-pass without changing the format)."""
+    blocks (HBase rolls at cell boundaries and permits straddling, which
+    the readers handle; rolling on the row boundary keeps a point get to
+    one data block without changing the format)."""
 
     def __init__(
         self,
@@ -1195,117 +1198,112 @@ def iter_blocks_range(
             )
 
 
-def hfile_get(path: str, row: bytes) -> list[tuple[bytes, int, bytes]]:
-    """Point Get: binary-search each index level down the tree (one
-    block read per level — O(log n) IO on a multi-level index), then
-    decode the one candidate data block (plus successors while the row
-    continues — it won't, given the writer's row-boundary rolls, but the
-    format allows it). Returns [(qualifier, ts, value)] for the row; []
-    if absent. This is the HBase read path the bulk-loaded file serves
-    (`Table.get`).
+def _row_span(first_rows: list[bytes], row: bytes) -> range:
+    """Index entries that may hold cells of ``row``: from the last entry
+    whose first row is strictly below ``row`` (entry 0 if none is)
+    through the last whose first row is <= ``row``. HBase rolls blocks
+    at cell boundaries, so a row may straddle blocks and begin in the
+    entry before one whose first row it is. Empty if ``row`` sorts
+    before every entry."""
+    return range(
+        max(bisect_left(first_rows, row) - 1, 0), bisect_right(first_rows, row)
+    )
 
-    When the file carries a row bloom, it is consulted first: a miss
-    answers "absent" from one small block read, no index/data IO — the
-    point of BloomType.ROW. (HBase serves bloom + index from block
-    cache; here each get re-reads them, the open-file analog.)"""
-    with open(path, "rb") as f:
-        t = read_trailer(f)
-        bloom = read_bloom(f, t)
-        if bloom is not None and not bloom_may_contain(bloom, row):
-            return []
-        entries = read_root_index(f, t)
-        for _ in range(t.index_levels - 1):
-            rows0 = [decode_key(k)[0] for _, _, k in entries]
-            j = bisect_right(rows0, row) - 1
-            if j < 0:
-                return []
-            plain = _read_block(f, entries[j][0], t.compression, None)
-            entries = _parse_index_entries(plain)
-        first_rows = [decode_key(k)[0] for _, _, k in entries]
-        i = bisect_right(first_rows, row) - 1
-        if i < 0:
-            return []
-        out = []
-        while i < len(entries):
-            if first_rows[i] > row:
-                break
-            plain = _read_block(f, entries[i][0], t.compression, DATA_MAGIC)
-            for r, _fam, qual, ts, value in _decode_cells(plain):
-                if r == row:
-                    out.append((qual, ts, value))
-                elif r > row:
-                    return out
-            i += 1
-        return out
+
+def hfile_get(path: str, row: bytes) -> list[tuple[bytes, int, bytes]]:
+    """Point Get (`Table.get`): [(qualifier, ts, value)] for ``row``, []
+    if absent — :func:`hfile_multi_get` of one row. A row whose cells
+    straddle data blocks (HBase's writer rolls blocks at cell
+    boundaries; this package's rolls at row boundaries) comes back
+    whole."""
+    return [(q, ts, v) for _r, _f, q, ts, v in hfile_multi_get(path, [row])]
 
 
 def hfile_multi_get(
-    path: str, rows: list[bytes]
+    path: str, rows: Iterable[bytes]
 ) -> list[tuple[bytes, bytes, bytes, int, bytes]]:
-    """Point-get a BATCH of rows against one file: trailer, bloom and
-    root index are read once and index/data blocks are memoized by
+    """Point-get a batch of rows against one file (`Table.get(List<Get>)`).
+    Returns [(row, family, qualifier, ts, value)] in row order over the
+    distinct requested rows; absent rows contribute nothing.
+
+    Per row: the row bloom, when the file has one, answers "absent" from
+    one small block read with no index or data IO (BloomType.ROW). A
+    present row walks the index tree down the entries :func:`_row_span`
+    names at each level (one block read per level, O(log n) IO, unless
+    the row starts an index entry and so may straddle into it), then
+    seeks inside each candidate data block the way
+    `HFileReaderImpl.blockSeek` does: it steps over the 8-byte cell
+    headers and compares each key's length-prefixed row in place, so
+    only the cells it returns are decoded. The length prefix keeps a
+    row from matching a longer row it is a prefix of.
+
+    Trailer, bloom and root index are read at most once per call; index
+    blocks and plain (verified, decompressed) data blocks are cached by
     offset across the batch — the open-file analog of HBase's block
-    cache, which is what makes `Table.get(List<Get>)` cheaper than N
-    independent gets. Returns [(row, family, qualifier, ts, value)]
-    over all requested rows (absent rows contribute nothing); same
-    per-row semantics as :func:`hfile_get`."""
+    cache. (HBase serves bloom and index from that cache across calls;
+    here each call re-reads them.)"""
     out: list[tuple[bytes, bytes, bytes, int, bytes]] = []
+    unpack_ii = _UNPACK_II
     with open(path, "rb") as f:
         t = read_trailer(f)
         bloom = read_bloom(f, t)
-        root = read_root_index(f, t)
-        root_rows = [decode_key(k)[0] for _, _, k in root]
-        index_cache: dict[int, tuple[list, list]] = {}
-        # bounded data-block cache: keys are processed in sorted order,
-        # so hits are overwhelmingly on the most recent block — FIFO
-        # eviction at 256 entries (~16 MB of 64 KB blocks) bounds task
-        # memory on degenerate all-keys batches, like a real block
-        # cache's working set
-        data_cache: dict[int, list] = {}
+        # index blocks by offset; the root (key -1) is read on the first
+        # row the bloom lets through
+        index_cache: dict[int, tuple[list, list[bytes]]] = {}
+        # bounded block cache: rows are visited in sorted order, so hits
+        # are overwhelmingly on the most recent block; FIFO eviction at
+        # 256 entries (~16 MB of 64 KB blocks) bounds task memory on
+        # degenerate all-keys batches
+        plain_cache: dict[int, bytes] = {}
+
+        def data_blocks(row: bytes, off: int, depth: int) -> Iterator[int]:
+            cached = index_cache.get(off)
+            if cached is None:
+                child = (
+                    read_root_index(f, t) if off < 0 else
+                    _parse_index_entries(_read_block(f, off, t.compression, None))
+                )
+                cached = (child, [decode_key(k)[0] for _, _, k in child])
+                index_cache[off] = cached
+            entries, first_rows = cached
+            for j in _row_span(first_rows, row):
+                if depth == 1:
+                    yield entries[j][0]
+                else:
+                    yield from data_blocks(row, entries[j][0], depth - 1)
+
         for row in sorted(set(rows)):
             if bloom is not None and not bloom_may_contain(bloom, row):
                 continue
-            entries, first_rows = root, root_rows
-            descend = True
-            for _ in range(t.index_levels - 1):
-                j = bisect_right(first_rows, row) - 1
-                if j < 0:
-                    descend = False
-                    break
-                off = entries[j][0]
-                cached = index_cache.get(off)
-                if cached is None:
-                    plain = _read_block(f, off, t.compression, None)
-                    child = _parse_index_entries(plain)
-                    cached = (child, [decode_key(k)[0] for _, _, k in child])
-                    index_cache[off] = cached
-                entries, first_rows = cached
-            if not descend:
-                continue
-            i = bisect_right(first_rows, row) - 1
-            if i < 0:
-                continue
-            while i < len(entries):
-                if first_rows[i] > row:
-                    break
-                off = entries[i][0]
-                cells = data_cache.get(off)
-                if cells is None:
+            rl = len(row)
+            head = _PACK_H(rl) + row
+            matched = False
+            for off in data_blocks(row, -1, t.index_levels):
+                plain = plain_cache.get(off)
+                if plain is None:
                     plain = _read_block(f, off, t.compression, DATA_MAGIC)
-                    cells = list(_decode_cells(plain))
-                    if len(data_cache) >= 256:
-                        data_cache.pop(next(iter(data_cache)))
-                    data_cache[off] = cells
-                done = False
-                for r, fam, qual, ts, value in cells:
-                    if r == row:
-                        out.append((r, fam, qual, ts, value))
-                    elif r > row:
-                        done = True
+                    if len(plain_cache) >= 256:
+                        plain_cache.pop(next(iter(plain_cache)))
+                    plain_cache[off] = plain
+                pos, end = 0, len(plain)
+                while pos < end:
+                    klen, vlen = unpack_ii(plain, pos)
+                    k = pos + 8
+                    pos = k + klen + vlen
+                    if plain.startswith(head, k):
+                        matched = True
+                        fs = k + 3 + rl
+                        qs = fs + plain[k + 2 + rl]
+                        kend = k + klen
+                        out.append((
+                            row, plain[fs:qs], plain[qs : kend - 9],
+                            _UNPACK_Q(plain, kend - 9)[0], plain[kend:pos],
+                        ))
+                    elif matched:  # a row's cells are contiguous
                         break
-                if done:
-                    break
-                i += 1
+                else:
+                    continue  # block ended inside or before the row
+                break
     return out
 
 

@@ -290,6 +290,54 @@ def test_rows_never_straddle_blocks(tmp_path):
             last_rows = set(rows)
 
 
+def _straddling_table(tmp_path, index_chunk):
+    """A one-file table of 5 rows x 4 qualifiers whose data blocks roll
+    every 3 cells, mid-row, as HBase's writer may: every row straddles
+    a block boundary (and, at ``index_chunk=2``, index blocks too)."""
+    data = cells(5, quals=(b"a", b"b", b"c", b"d"))
+    fam_dir = tmp_path / "table" / "region-0000" / "c"
+    fam_dir.mkdir(parents=True)
+    path = str(fam_dir / "f.hfile")
+    w = hf.HFileWriter(path, "snappy", index_chunk=index_chunk)
+    for n, c in enumerate(data, 1):
+        w.add(*c)
+        if n % 3 == 0:
+            w._flush_data()
+    w.close()
+    return str(tmp_path / "table"), path, data
+
+
+@pytest.mark.parametrize("index_chunk", [128, 2])
+def test_straddling_rows_read_back_whole(tmp_path, index_chunk):
+    """A row whose cells span data blocks comes back whole from get,
+    multi_get and a start_row range scan: each equals the full scan
+    filtered to the wanted rows."""
+    table, path, data = _straddling_table(tmp_path, index_chunk)
+    with open(path, "rb") as f:
+        t = hf.read_trailer(f)
+        assert len(hf.read_data_index(f, t)) == 7
+    assert t.index_levels == (1 if index_chunk == 128 else 3)
+    assert list(hf.iter_hfile(path)) == data
+    rows = sorted({c[0] for c in data})
+    for row in rows:
+        assert hf.hfile_get(path, row) == [
+            (q, ts, v) for r, _f, q, ts, v in data if r == row
+        ]
+    assert hf.hfile_multi_get(path, rows[::-1]) == data
+    for start in rows:
+        got = [
+            c
+            for _path, _region, codec, blocks in hl.plan_block_splits(
+                table, start_row=start
+            )
+            for c in hf.iter_blocks_range(
+                path, [(off, size, b"") for off, size in blocks], codec
+            )
+            if c[0] >= start
+        ]
+        assert got == [c for c in data if c[0] >= start]
+
+
 def test_split_hfile(tmp_path):
     data = cells(100)
     src = str(tmp_path / "t.hfile")
@@ -617,6 +665,58 @@ try:
             assert got["qualifier"].to_pylist() == ref[2]
             assert got["ts"].to_pylist() == ref[3]
             assert got["value"].to_pylist() == ref[4]
+        finally:
+            os.unlink(path)
+
+    @given(
+        stems=st.lists(
+            st.binary(min_size=1, max_size=6), min_size=1, max_size=10, unique=True
+        ),
+        ext=st.binary(min_size=1, max_size=3),
+        n_quals=st.integers(1, 3),
+        roll_every=st.sampled_from([0, 1, 2, 5]),
+        bloom=st.booleans(),
+        index_chunk=st.sampled_from([2, 128]),
+        picks=st.lists(st.integers(0, 10**6), max_size=30),
+        absent=st.lists(st.binary(max_size=7), max_size=5),
+    )
+    @settings(max_examples=60, deadline=None)
+    def test_multi_get_seek_property(
+        stems, ext, n_quals, roll_every, bloom, index_chunk, picks, absent
+    ):
+        """The in-block seek equals the full scan filtered to the
+        requested rows: every stem is a prefix of another row, values
+        embed other rows' length-prefixed bytes, requests repeat, come
+        unsorted and mix in absent rows, blocks roll mid-row
+        (``roll_every`` cells; 0 = the writer's own row-boundary rolls),
+        and files are written with and without a row bloom."""
+        import tempfile
+
+        rows = sorted(set(stems) | {r + ext for r in stems})
+        data = []
+        for i, r in enumerate(rows):
+            other = rows[(i + 1) % len(rows)]
+            for q in range(n_quals):
+                value = struct.pack(">H", len(other)) + other + r
+                data.append((r, b"f", b"q%d" % q, q, value))
+        with tempfile.NamedTemporaryFile(suffix=".hfile", delete=False) as f:
+            path = f.name
+        try:
+            w = hf.HFileWriter(
+                path, "snappy", 512, index_chunk=index_chunk, bloom=bloom
+            )
+            for n, c in enumerate(data, 1):
+                w.add(*c)
+                if roll_every and n % roll_every == 0:
+                    w._flush_data()
+            w.close()
+            requested = [rows[p % len(rows)] for p in picks] + absent
+            want = [c for c in hf.iter_hfile(path) if c[0] in set(requested)]
+            assert hf.hfile_multi_get(path, requested) == want
+            for r in set(requested):
+                assert hf.hfile_get(path, r) == [
+                    (q, ts, v) for row, _f, q, ts, v in want if row == r
+                ]
         finally:
             os.unlink(path)
 

@@ -75,6 +75,76 @@ def test_multi_get_binary_mode(spark, table_dir):
     assert all(isinstance(r.rowkey, (bytes, bytearray)) for r in b_rows)
 
 
+@pytest.fixture(scope="module")
+def prefix_table(tmp_path_factory):
+    """Two regions of rows that are prefixes of one another (k1, k10,
+    k100, ...), three cells each, values holding other rows' bytes."""
+    from hbase_bulkload_spark.sources import hfile as hf
+
+    base = tmp_path_factory.mktemp("prefix_table")
+    rows = sorted(
+        f"{p}{i}{s}" for p in "km" for i in range(1, 6) for s in ("", "0", "00")
+    )
+    for region, part in (("region-0000", "k"), ("region-0001", "m")):
+        fam_dir = base / region / "c"
+        fam_dir.mkdir(parents=True)
+        w = hf.HFileWriter(str(fam_dir / "f.hfile"), "snappy")
+        for r in (r for r in rows if r[0] == part):
+            for q in ("a", "b", "c"):
+                w.add(r.encode(), b"c", q.encode(), 0, f"{q}:{r}:{r}0".encode())
+        w.close()
+    return str(base)
+
+
+def _cells(rows):
+    return sorted(
+        (r.region, r.rowkey, r.family, r.qualifier, r.ts, r.value) for r in rows
+    )
+
+
+#: requested keys: repeated, unsorted, absent ones in range, and rows
+#: that are prefixes of other rows
+_PREFIX_KEYS = ["k10", "k1", "m300", "k1", "k100", "m3", "k1000", "m3", "k", "m2"]
+
+
+def test_multi_get_key_list_is_one_narrow_stage(spark, prefix_table):
+    """A key list is deduped in the driver: no Exchange in the executed
+    plan, one job, and the cells equal the filtered full scan."""
+    sc = spark.sparkContext
+    df = hl.multi_get(spark, prefix_table, _PREFIX_KEYS)
+    sc.setJobGroup("multi-get-key-list", "plan shape")
+    try:
+        got = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("multi-get-key-list")) == 1
+    assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
+    full = hl.scan_hfiles(spark, prefix_table).collect()
+    want = [r for r in full if r.rowkey in set(_PREFIX_KEYS)]
+    assert _cells(got) == _cells(want) and len(want) == 6 * 3
+
+
+def test_multi_get_keyset_dataframe_duplicates(spark, prefix_table):
+    """A keyset DataFrame with repeated keys spread over partitions
+    returns each cell exactly once."""
+    kdf = spark.createDataFrame(
+        [(k,) for k in _PREFIX_KEYS * 3], "rowkey string"
+    ).repartition(4)
+    got = hl.multi_get(spark, prefix_table, kdf).collect()
+    full = hl.scan_hfiles(spark, prefix_table).collect()
+    want = [r for r in full if r.rowkey in set(_PREFIX_KEYS)]
+    assert _cells(got) == _cells(want)
+
+
+def test_multi_get_binary_matches_binary_scan(spark, prefix_table):
+    """binary=True returns the bytes a binary scan reads for the same
+    rows, prefix rows included."""
+    got = hl.multi_get(spark, prefix_table, _PREFIX_KEYS, binary=True).collect()
+    full = hl.scan_hfiles(spark, prefix_table, binary=True).collect()
+    want = [r for r in full if r.rowkey.decode() in set(_PREFIX_KEYS)]
+    assert _cells(got) == _cells(want) and len(want) > 0
+
+
 def test_value_index_seek(spark, sf_dir, table_dir, tmp_path):
     """The materialized secondary index: build the (value -> rowkey)
     index table with the bulkload contract, then index_seek = exact
