@@ -11,7 +11,7 @@ This module is the Spark-native equivalent, one tool with a format flag:
 
     python -m hbase_bulkload_spark --format {text,csv,columnar,avro} \
         [--columns 9] [--key-cols 0,1,2,3] [--n-buckets 16] \
-        [--sep $'\\x01'] INPUT OUTPUT
+        [--sep $'\\x01'] [--sink {parquet,hfile}] INPUT OUTPUT
 
 Per format, the pipeline is the reference lifecycle (SURVEY.md §3) as one
 declarative plan: scan → arity/null validate → composite MD5 rowkey over
@@ -21,6 +21,13 @@ sort → Snappy parquet, one sorted non-overlapping file per bucket — the
 analog of the HFile directory handed to `doBulkLoad`. The `hbase-site.xml`
 argument has no analog (no HBase cluster in scope); region count maps to
 `--n-buckets`.
+
+`--sink hfile` writes the reference's artifact itself: HFile v3 files
+placed into a 16-region table (`operators.hfile_load.bulkload_to_table`).
+That path exchanges and sorts WIDE rows (rowkey, bucket, one column per
+value) and explodes them into cells inside the writer task, so the
+shuffle and the Arrow hop carry each rowkey once instead of once per
+cell; `--n-buckets` then sets the number of write tasks.
 
 Deviations (documented, SURVEY.md §2.2/§2.14): key columns default to
 0-3 for every format (the RC variant's out-of-bounds `value.get(20)` is
@@ -164,7 +171,12 @@ def ingest(
     {n_input, n_valid, n_skipped} accumulated during the single pass —
     the reference's skip-log side channel without a second job (text/csv
     formats; the schema-gated formats have no row-skip path)."""
-    from hbase_bulkload_spark.operators.bulkload import bulkload_kv, write_bulkload
+    from hbase_bulkload_spark.operators.bulkload import (
+        bulkload_kv,
+        bulkload_wide,
+        region_align_wide,
+        write_bulkload,
+    )
 
     obs_in = obs_valid = None
     if collect_metrics and fmt in ("text", "csv"):
@@ -192,15 +204,10 @@ def ingest(
 
     cols = df.columns
     keys = [cols[i] for i in (key_cols or [0, 1, 2, 3])]
-    kv = bulkload_kv(
-        df,
-        key_cols=keys,
-        value_cols=cols,
-        raw_binary_keys=raw_binary_keys,
-        positional_qualifiers=positional_qualifiers,
+    fidelity = dict(
+        raw_binary_keys=raw_binary_keys, positional_qualifiers=positional_qualifiers
     )
     if sink == "hfile":
-        from hbase_bulkload_spark.operators.bulkload import region_align
         from hbase_bulkload_spark.operators.hfile_load import bulkload_to_table
 
         # region boundaries = the 16 hex-nibble buckets the key layer
@@ -214,9 +221,19 @@ def ingest(
         )
         if raw_binary_keys:
             boundaries[0] = b""  # region 0 starts at the empty key
-        bulkload_to_table(region_align(kv, n_buckets), output_path, boundaries)
+        # wide rows cross the exchange and the Arrow hop; the writer
+        # tasks explode them into cells
+        wide, qualifiers = bulkload_wide(df, keys, cols, **fidelity)
+        bulkload_to_table(
+            region_align_wide(wide, n_buckets), output_path, boundaries,
+            qualifiers=qualifiers,
+        )
     else:
-        write_bulkload(kv, output_path, n_buckets=n_buckets)
+        write_bulkload(
+            bulkload_kv(df, key_cols=keys, value_cols=cols, **fidelity),
+            output_path,
+            n_buckets=n_buckets,
+        )
 
     if fix_permissions is not None:  # op 8 post-processing (reference: 0o777)
         from hbase_bulkload_spark.sources.fsutil import set_permissions_recursive
@@ -263,7 +280,13 @@ def main(argv: list[str] | None = None) -> int:
         default="0,1,2,3",
         help="comma-separated key column indexes (default 0,1,2,3)",
     )
-    p.add_argument("--n-buckets", type=int, default=16, help="output buckets (default 16)")
+    p.add_argument(
+        "--n-buckets",
+        type=int,
+        default=16,
+        help="output buckets (default 16); with --sink hfile, the number "
+        "of write tasks — the table always has 16 regions",
+    )
     p.add_argument(
         "--sink",
         choices=["parquet", "hfile"],
@@ -334,6 +357,8 @@ def main(argv: list[str] | None = None) -> int:
         ),
         raw_binary_keys=args.raw_binary_keys,
         positional_qualifiers=args.positional_qualifiers,
+        sink=args.sink,
+        collect_metrics=True,
     )
     return 0
 

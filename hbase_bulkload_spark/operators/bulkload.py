@@ -19,6 +19,16 @@ shuffle, and the key's uniform distribution makes that shuffle skew-free
 by construction — the property that survives a 100 TB scale-up. Bucket
 count is a parameter (the reference hardcodes 10, `RowKeyConverter.java:8`);
 at cluster scale set it from data volume, not region count.
+
+Two exchange shapes share one key/bucket derivation:
+- cells (`bulkload_kv` → `region_align`): one shuffled record per
+  cell, each repeating its row's rowkey — the contract the parquet sink,
+  streaming and the registered HFile keys consume;
+- wide rows (`bulkload_wide` → `region_align_wide`, or
+  `bulkload_pipeline`): one shuffled record per input row. The pipeline
+  unpivots after the exchange; the CLI HFile sink ships the sorted wide
+  rows to its writer tasks, which explode them into cells in qualifier
+  byte order (`hfile_load.write_region_hfiles(..., qualifiers=...)`).
 """
 
 from __future__ import annotations
@@ -35,6 +45,22 @@ from hbase_bulkload_spark.functions.keys import (
     raw_binary_rowkey,
 )
 from hbase_bulkload_spark.operators.kv import CURRENT_FAMILY, unpivot_kv
+
+
+def _rowkey(key_cols: Sequence[str], raw_binary_keys: bool) -> Column:
+    return (
+        raw_binary_rowkey(*key_cols) if raw_binary_keys
+        else composite_rowkey(*key_cols)
+    )
+
+
+def _bucket(raw_binary_keys: bool) -> Column:
+    # the first hex nibble either way: raw digest bytes bucket on their
+    # hex form, so layout and sort order match the 128-hex key's
+    return (
+        F.lower(F.substring(F.hex(F.col("rowkey")), 1, 1)) if raw_binary_keys
+        else hex_bucket(F.col("rowkey"))
+    )
 
 
 def bulkload_kv(
@@ -66,11 +92,10 @@ def bulkload_kv(
       binary-typed, mapped from column names by a literal map — a
       legacy consumer of the reference reads these cells unchanged.
     """
-    rowkey = (
-        raw_binary_rowkey(*key_cols) if raw_binary_keys
-        else composite_rowkey(*key_cols)
+    kv = unpivot_kv(
+        df, _rowkey(key_cols, raw_binary_keys), value_cols,
+        family=family, ts=ts, drop_null=drop_null,
     )
-    kv = unpivot_kv(df, rowkey, value_cols, family=family, ts=ts, drop_null=drop_null)
     if positional_qualifiers:
         qmap = F.create_map(
             *[
@@ -80,11 +105,32 @@ def bulkload_kv(
             ]
         )
         kv = kv.withColumn("qualifier", F.element_at(qmap, F.col("qualifier")))
-    bucket = (
-        F.lower(F.substring(F.hex(F.col("rowkey")), 1, 1)) if raw_binary_keys
-        else hex_bucket(F.col("rowkey"))
-    )
-    return kv.withColumn("bucket", bucket)
+    return kv.withColumn("bucket", _bucket(raw_binary_keys))
+
+
+def bulkload_wide(
+    df: DataFrame,
+    key_cols: Sequence[str],
+    value_cols: Sequence[str],
+    raw_binary_keys: bool = False,
+    positional_qualifiers: bool = False,
+) -> tuple[DataFrame, list[bytes]]:
+    """The wide prelude shared by :func:`bulkload_pipeline` and the CLI
+    HFile sink: one row per record — ``rowkey``, one string column per
+    value column (same names, same order), ``bucket`` — plus the
+    qualifier bytes of those value columns: the UTF-8 column names, or
+    `Bytes.toBytes(i)` with ``positional_qualifiers``. Map-only, like
+    :func:`bulkload_kv`, whose key, bucket and fidelity modes it
+    shares; :func:`region_align_wide` is its exchange."""
+    wide = df.select(
+        _rowkey(key_cols, raw_binary_keys).alias("rowkey"),
+        *[F.col(c).cast("string").alias(c) for c in value_cols],
+    ).withColumn("bucket", _bucket(raw_binary_keys))
+    qualifiers = [
+        positional_qualifier_bytes(i) if positional_qualifiers else c.encode()
+        for i, c in enumerate(value_cols)
+    ]
+    return wide, qualifiers
 
 
 def bulkload_pipeline(
@@ -99,11 +145,12 @@ def bulkload_pipeline(
 
     ``bulkload_kv → region_align`` shuffles the exploded cell frame —
     every 128-hex rowkey crosses the wire 9×. Deriving key + bucket on
-    the wide frame and repartitioning *before* the unpivot moves ~7-8×
-    fewer bytes through the one exchange; `unpivot` is a narrow Generate,
-    so the bucket partitioning survives it and the terminal
-    `sortWithinPartitions` needs no further exchange. At 100 TB the
-    shuffle is the bottleneck, so this is the shape that scales.
+    the wide frame (:func:`bulkload_wide`) and repartitioning *before*
+    the unpivot moves ~7-8× fewer bytes through the one exchange;
+    `unpivot` is a narrow Generate, so the bucket partitioning survives
+    it and the terminal `sortWithinPartitions` needs no further
+    exchange. At 100 TB the shuffle is the bottleneck, so this is the
+    shape that scales.
 
     ``range_partitions`` switches the exchange to
     ``repartitionByRange(n, rowkey)`` — for sinks that allow multiple
@@ -115,10 +162,7 @@ def bulkload_pipeline(
     is the rowkey's first hex char, rowkey ranges never interleave
     buckets — each task still writes whole sorted bucket fragments.
     """
-    wide = df.select(
-        composite_rowkey(*key_cols).alias("rowkey"),
-        *[F.col(c).cast("string").alias(c) for c in value_cols],
-    ).withColumn("bucket", hex_bucket(F.col("rowkey")))
+    wide, _ = bulkload_wide(df, key_cols, value_cols)
     if range_partitions is not None:
         wide = wide.repartitionByRange(range_partitions, "rowkey")
     else:
@@ -129,7 +173,9 @@ def bulkload_pipeline(
     # re-emits its qualifiers from the top — ...z8, z0... inversions),
     # and the measured win was nil (2.2 s -> 2.4 s noop materialization
     # at sf0.1: the Expand + string copy dominates, not the sort). The
-    # exploded-frame sort is both correct and no slower.
+    # exploded-frame sort is both correct and no slower. (The CLI HFile
+    # sink does sort wide rows: its writer task re-orders each run of
+    # equal rowkeys by qualifier, see hfile_load.explode_wide_batches.)
     long = (
         wide.unpivot(["rowkey", "bucket"], list(value_cols), "qualifier", "value")
         .filter(F.col("value").isNotNull())
@@ -145,6 +191,17 @@ def region_align(kv: DataFrame, n_buckets: int = 16) -> DataFrame:
     PutSortReducer contract (`BulkImporterFromText.java:108`)."""
     return kv.repartition(n_buckets, "bucket").sortWithinPartitions(
         "bucket", "rowkey", "qualifier"
+    )
+
+
+def region_align_wide(wide: DataFrame, n_buckets: int = 16) -> DataFrame:
+    """:func:`region_align` for the wide frame of :func:`bulkload_wide`:
+    the same one bucket exchange, moving one row per record instead of
+    one per cell, sorted within partitions by (bucket, rowkey). Cell
+    order within a row is the writer's job
+    (`hfile_load.write_region_hfiles(..., qualifiers=...)`)."""
+    return wide.repartition(n_buckets, "bucket").sortWithinPartitions(
+        "bucket", "rowkey"
     )
 
 

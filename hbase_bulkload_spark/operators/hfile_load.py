@@ -16,8 +16,9 @@ artifact and are verified by reading the table back).
 
 Scale posture:
 - the HFiles are written by the EXECUTORS, one per region bucket, off
-  the same single wide-row exchange the parquet sink uses — the driver
-  only collects a tiny per-file manifest;
+  a single exchange — of wide rows for the CLI sink, which the writer
+  task explodes into cells, or of cells — and the driver only collects
+  a tiny per-file manifest;
 - `do_bulk_load` reads ~4 KB of metadata per file (trailer + index) to
   place it; split rounds are dispatched back through Spark so
   rewriting crossing files is cluster-parallel, mirroring
@@ -35,6 +36,7 @@ from collections.abc import Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hbase_bulkload_spark.operators.kv import CURRENT_FAMILY
 from hbase_bulkload_spark.sources import hfile as hf
 
 
@@ -143,6 +145,74 @@ def write_partition_cells_arrow(
     return out
 
 
+def explode_wide_batches(batches, qualifiers: Sequence[bytes]):
+    """Arrow batches of sorted wide rows → batches of the KV contract
+    `write_partition_cells_arrow` consumes.
+
+    Input rows carry ``rowkey``, ``bucket`` and one value column per
+    entry of ``qualifiers`` (every other column, in that order), sorted
+    by (bucket, rowkey) — `operators.bulkload.region_align_wide`. Each
+    row becomes one cell per non-null value (empty values are kept),
+    family ``c``, qualifiers in byte order (``z10`` < ``z2``).
+    Rows sharing a rowkey are exploded together and their cells
+    stable-sorted by (rowkey, qualifier), so duplicate rows interleave
+    per qualifier exactly as a sort of the exploded cell frame would
+    order them; the trailing rowkey run of each batch waits for the
+    next batch, since Spark cuts batches at ``maxRecordsPerBatch``
+    regardless of keys."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    by_bytes = sorted(range(len(qualifiers)), key=qualifiers.__getitem__)
+    quals = pa.array([qualifiers[j] for j in by_bytes], pa.binary())
+    fam = pa.array([CURRENT_FAMILY.encode()], pa.binary())
+
+    def explode(rb, new_run):
+        names = rb.schema.names
+        rk = rb.column(names.index("rowkey"))
+        bkt = rb.column(names.index("bucket"))
+        value_cols = [rb.column(i) for i, c in enumerate(names)
+                      if c not in ("rowkey", "bucket")]
+        n, k = rb.num_rows, len(value_cols)
+        # column-major: value j of row i sits at j*n + i
+        values = pa.concat_arrays([value_cols[j] for j in by_bytes])
+        cell = (np.arange(n)[:, None] + n * np.arange(k)[None, :]).ravel()
+        cell = cell[values.is_valid().to_numpy(zero_copy_only=False)[cell]]
+        row, q = cell % n, cell // n
+        if not new_run.all():  # duplicate rowkeys: interleave their cells
+            order = np.lexsort((q, np.cumsum(new_run)[row]))
+            cell, row, q = cell[order], row[order], q[order]
+        return pa.RecordBatch.from_arrays(
+            [rk.take(row), fam.take(np.zeros(len(cell), np.int64)),
+             quals.take(q), values.take(cell), bkt.take(row)],
+            ["rowkey", "family", "qualifier", "value", "bucket"],
+        )
+
+    def runs(rb):
+        rk = rb.column(rb.schema.names.index("rowkey"))
+        new_run = np.ones(rb.num_rows, bool)
+        if rb.num_rows > 1:
+            new_run[1:] = pc.fill_null(
+                pc.not_equal(rk.slice(1), rk.slice(0, rb.num_rows - 1)), True
+            ).to_numpy(zero_copy_only=False)
+        return new_run
+
+    carry = None
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        if carry is not None:
+            rb = pa.Table.from_batches([carry, rb]).combine_chunks().to_batches()[0]
+        new_run = runs(rb)
+        last = int(np.flatnonzero(new_run)[-1])
+        if last:
+            yield explode(rb.slice(0, last), new_run[:last])
+        carry = rb.slice(last)
+    if carry is not None:
+        yield explode(carry, runs(carry))
+
+
 _MANIFEST_SCHEMA = "path string, bucket string, entry_count long, n_blocks long"
 
 
@@ -151,13 +221,25 @@ def write_region_hfiles(
     out_dir: str,
     ts: int = 0,
     compression: str | None = "snappy",
+    qualifiers: Sequence[bytes] | None = None,
 ) -> list[dict]:
-    """Write one HFile per region bucket from a region-aligned KV frame
-    (columns rowkey, family, qualifier, value, bucket — sorted within
-    partitions by (bucket, rowkey, qualifier), i.e. the output of
-    `operators.bulkload.region_align`). Executors stream Arrow batches
-    into at most a handful of open writers (buckets are contiguous in
-    the sort); the returned manifest is one row per file.
+    """Write one HFile per region bucket from a region-aligned frame.
+    Executors stream Arrow batches into at most a handful of open
+    writers (buckets are contiguous in the sort); the returned manifest
+    is one row per file.
+
+    Two input shapes:
+    - cells (``qualifiers=None``): columns rowkey, family, qualifier,
+      value, bucket — sorted within partitions by (bucket, rowkey,
+      qualifier), i.e. the output of `operators.bulkload.region_align`;
+    - wide rows (``qualifiers`` given): columns rowkey, bucket and one
+      value column per qualifier, in ``qualifiers`` order — sorted
+      within partitions by (bucket, rowkey), i.e. the output of
+      `operators.bulkload.region_align_wide`. The writer task explodes
+      them (:func:`explode_wide_batches`, family ``c``), so the
+      exchange and the Arrow hop move one row per record instead of one
+      cell per value, each repeating the rowkey. The written files are
+      byte-identical to the cell shape's for the same records.
 
     Cell columns are cast to binary JVM-side before the Python hop:
     codegen does the UTF-8 encode once per value, so the executor loop
@@ -170,7 +252,15 @@ def write_region_hfiles(
     import pyarrow as pa
     from pyspark.sql import functions as F
 
-    cell_cols = ("rowkey", "family", "qualifier", "value")
+    if qualifiers is None:
+        cell_cols = {"rowkey", "family", "qualifier", "value"}
+    else:
+        cell_cols = set(kv.columns) - {"bucket"}
+        if "rowkey" not in cell_cols or len(cell_cols) != len(qualifiers) + 1:
+            raise ValueError(
+                f"{len(qualifiers)} qualifiers for the wide frame {kv.columns}"
+            )
+        qualifiers = list(qualifiers)
     kv = kv.select(
         *[
             F.col(c).cast("binary").alias(c) if c in cell_cols else F.col(c)
@@ -181,6 +271,8 @@ def write_region_hfiles(
     os.makedirs(out_dir, exist_ok=True)
 
     def write_parts(batches):
+        if qualifiers is not None:
+            batches = explode_wide_batches(batches, qualifiers)
         out = write_partition_cells_arrow(
             batches, out_dir, task_file_label(), compression, ts
         )
@@ -302,17 +394,23 @@ def bulkload_to_table(
     boundaries: list[bytes],
     family: str = "c",
     compression: str | None = "snappy",
+    qualifiers: Sequence[bytes] | None = None,
 ) -> list[dict]:
     """Ops 7+9 as a sink (no read-back): executor-written region HFiles
     staged under ``out_dir/_staging``, then doBulkLoad placement into
     ``out_dir`` — the loaded-table layout the reference leaves behind.
-    ``kv`` must be region-aligned (`operators.bulkload.region_align`).
-    Returns the per-file load manifest."""
+    ``kv`` must be region-aligned: region-aligned cells
+    (`operators.bulkload.region_align`), or, with ``qualifiers``, the
+    region-aligned wide rows the CLI HFile sink ships
+    (`operators.bulkload.region_align_wide`; see
+    :func:`write_region_hfiles`). Returns the per-file load manifest."""
     spark = kv.sparkSession
     if os.path.exists(out_dir):
         shutil.rmtree(out_dir)
     staging = os.path.join(out_dir, "_staging")
-    manifest = write_region_hfiles(kv, staging, compression=compression)
+    manifest = write_region_hfiles(
+        kv, staging, compression=compression, qualifiers=qualifiers
+    )
     loaded = do_bulk_load(
         [m["path"] for m in manifest],
         out_dir,

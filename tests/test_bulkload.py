@@ -9,12 +9,15 @@ import glob
 import os
 
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from hbase_bulkload_spark.operators.bulkload import (
     bulkload_kv,
     bulkload_pipeline,
+    bulkload_wide,
     region_align,
+    region_align_wide,
     write_bulkload,
 )
 from hbase_bulkload_spark.sources.records import RECORD_COLS, wide9
@@ -123,3 +126,112 @@ def test_parallelism_floor(spark, tmp_path):
     assert (
         floored2.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
     )
+
+
+# ---------------------------------------------------------------------------
+# Wide rows through the HFile writer (the CLI HFile sink's shape)
+# ---------------------------------------------------------------------------
+
+def _records(spark, n_rows, n_cols, dup=1, seed=7):
+    """``n_rows`` distinct key tuples over ``n_cols`` string columns,
+    each tuple repeated ``dup`` times with different values; every 7th
+    value is null and every 11th is empty, and rows arrive shuffled."""
+    import random
+
+    rng = random.Random(seed)
+    rows = []
+    for i in range(n_rows):
+        for d in range(dup):
+            vals = [
+                None if (i + j + d) % 7 == 0 else
+                "" if (i + j + d) % 11 == 0 else f"v{i}.{j}.{d}"
+                for j in range(n_cols)
+            ]
+            rows.append([f"k{i}", f"{i % 5}", "a", "b", *vals[4:]])
+    rng.shuffle(rows)
+    schema = ", ".join(f"z{j} string" for j in range(n_cols))
+    return spark.createDataFrame(rows, schema)
+
+
+def _file_cells(paths):
+    from hbase_bulkload_spark.sources import hfile as hf
+
+    return {p: [(r, q, v) for r, f, q, _ts, v in hf.iter_hfile(p)] for p in paths}
+
+
+@pytest.mark.parametrize("fidelity", [False, True], ids=["names", "reference"])
+def test_wide_writer_byte_identical_to_cells(spark, tmp_path, fidelity):
+    """Per bucket, the wide-row writer emits exactly the bytes of the
+    cell-frame writer (`region_align(bulkload_kv(...))`) on a dup-free
+    input — nulls dropped, empty strings kept, 12 qualifiers in byte
+    order — in both qualifier/key modes."""
+    from hbase_bulkload_spark.operators import hfile_load as hl
+
+    cols = [f"z{j}" for j in range(12)]
+    df = _records(spark, 300, 12)
+    modes = dict(raw_binary_keys=fidelity, positional_qualifiers=fidelity)
+    cells = hl.write_region_hfiles(
+        region_align(bulkload_kv(df, cols[:4], cols, **modes)),
+        str(tmp_path / "cells"),
+    )
+    wide, quals = bulkload_wide(df, cols[:4], cols, **modes)
+    rows = hl.write_region_hfiles(
+        region_align_wide(wide), str(tmp_path / "wide"), qualifiers=quals
+    )
+
+    def by_bucket(manifest):
+        out = {}
+        for m in manifest:
+            with open(m["path"], "rb") as f:
+                out[m["bucket"]] = f.read()
+        return out
+
+    want, got = by_bucket(cells), by_bucket(rows)
+    assert len(want) == 16 and set(got) == set(want)
+    for b in want:
+        assert got[b] == want[b], f"bucket {b} differs"
+
+
+def test_wide_writer_duplicate_keys_across_batches(spark, tmp_path):
+    """Triplicated key tuples with 2-row Arrow batches: every run of
+    equal rowkeys straddles a batch cut, so the writer must carry the
+    run over. Cells stay in (rowkey, qualifier) order and each row's
+    cell multiset equals the input's."""
+    from collections import Counter
+
+    from hbase_bulkload_spark.operators import hfile_load as hl
+
+    cols = RECORD_COLS
+    df = _records(spark, 60, len(cols), dup=3)
+    want: dict[bytes, Counter] = {}
+    for r in bulkload_kv(df, cols[:4], cols).collect():
+        want.setdefault(r.rowkey.encode(), Counter())[
+            (r.qualifier.encode(), r.value.encode())
+        ] += 1
+
+    wide, quals = bulkload_wide(df, cols[:4], cols)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        manifest = hl.write_region_hfiles(
+            region_align_wide(wide, 4), str(tmp_path / "wide"), qualifiers=quals
+        )
+    finally:
+        spark.conf.set(key, prior)
+
+    got: dict[bytes, Counter] = {}
+    for path, cells in _file_cells([m["path"] for m in manifest]).items():
+        keys = [(r, q) for r, q, _ in cells]
+        assert keys == sorted(keys), f"{path}: cells out of order"
+        for r, q, v in cells:
+            got.setdefault(r, Counter())[(q, v)] += 1
+    assert got == want
+
+
+def test_wide_writer_rejects_mismatched_qualifiers(spark, tmp_path):
+    from hbase_bulkload_spark.operators import hfile_load as hl
+
+    wide, quals = bulkload_wide(_records(spark, 4, 5), ["z0"], ["z0", "z1"])
+    with pytest.raises(ValueError, match="qualifiers"):
+        hl.write_region_hfiles(wide, str(tmp_path / "w"), qualifiers=quals[:1])

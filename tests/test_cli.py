@@ -291,3 +291,76 @@ def test_ingest_metrics_one_pass(spark, inputs, tmp_path):
     # duplicate (z0..z3) tuples share a rowkey, so distinct keys ≤ valid
     distinct_keys = _load_out(spark, out).select("rowkey").distinct().count()
     assert distinct_keys <= m["n_valid"]
+
+
+def test_cli_main_hfile_sink(spark, tmp_path, capsys):
+    """`--sink hfile` from the command line writes the loaded region
+    table (not parquet), and a csv run prints the reference's
+    in/valid/skipped line."""
+    import glob
+
+    src = str(tmp_path / "main_src")
+    os.makedirs(src)
+    with open(os.path.join(src, "p.csv"), "w") as fh:
+        fh.write("a,b,c\nd,e,f\ng,h\n")  # the short row is skipped
+    out = str(tmp_path / "main_out")
+    rc = cli.main([
+        src, out, "--format", "csv", "--columns", "3", "--key-cols", "0",
+        "--n-buckets", "2", "--sink", "hfile",
+    ])
+    assert rc == 0
+    assert glob.glob(os.path.join(out, "region-*", "c", "*.hfile"))
+    assert not glob.glob(os.path.join(out, "*.parquet"))
+    assert "ingest: 3 records in, 2 valid, 1 skipped" in capsys.readouterr().err
+
+
+def _table_cells(out):
+    import glob
+
+    from hbase_bulkload_spark.sources import hfile as hf
+
+    return [
+        [(r.decode(), f.decode(), q.decode(), v.decode())
+         for r, f, q, _ts, v in hf.iter_hfile(p)]
+        for p in sorted(glob.glob(os.path.join(out, "region-*", "c", "*.hfile")))
+    ]
+
+
+def test_cli_hfile_sink_qualifier_byte_order(spark, tmp_path):
+    """12 columns through the HFile sink: each row's cells come out in
+    qualifier byte order, so z10 and z11 sort before z2."""
+    src = str(tmp_path / "q12_src")
+    os.makedirs(src)
+    with open(os.path.join(src, "p.csv"), "w") as fh:
+        for i in range(20):
+            fh.write(",".join(f"r{i}c{j}" for j in range(12)) + "\n")
+    out = str(tmp_path / "q12_out")
+    cli.ingest(spark, src, out, fmt="csv", n_columns=12, sink="hfile")
+    want = sorted(f"z{j}" for j in range(12))
+    assert want[:4] == ["z0", "z1", "z10", "z11"]
+    rows: dict[str, list[str]] = {}
+    for cells in _table_cells(out):
+        for rk, _f, q, _v in cells:
+            rows.setdefault(rk, []).append(q)
+    assert len(rows) == 20
+    assert all(qs == want for qs in rows.values())
+
+
+def test_cli_hfile_sink_null_and_empty_fields(spark, tmp_path):
+    """Null fields produce no cell through the HFile sink; empty strings
+    are values and produce a cell."""
+    import json
+
+    src = str(tmp_path / "nulls_src")
+    os.makedirs(src)
+    with open(os.path.join(src, "p.json"), "w") as fh:
+        fh.write(json.dumps({"z0": "a", "z1": "b", "z2": None, "z3": ""}) + "\n")
+        fh.write(json.dumps({"z0": "c", "z1": "d", "z3": "x"}) + "\n")
+    out = str(tmp_path / "nulls_out")
+    cli.ingest(
+        spark, src, out, fmt="jsonl", n_columns=4, key_cols=[0, 1], sink="hfile"
+    )
+    got = {(v, q) for cells in _table_cells(out) for _rk, f, q, v in cells}
+    assert {f for cells in _table_cells(out) for _rk, f, _q, _v in cells} == {"c"}
+    assert got == {("a", "z0"), ("b", "z1"), ("", "z3"),
+                   ("c", "z0"), ("d", "z1"), ("x", "z3")}
