@@ -310,7 +310,7 @@ def _recycle_python_workers(spark) -> str:
 #: MEASURED for each, not extrapolated from one key. Override with
 #: SPARK_GRAFT_ISOLATED_PROBE=k1,k2 (empty string disables the probe).
 ISOLATED_PROBE_DEFAULT = (
-    "q_bulkload_hfile,q_bulkload_hfile_ds,q_scan_rcfile,q_scan_avro,"
+    "q_bulkload_hfile,q_scan_rcfile,q_scan_avro,"
     "q_multimodal_decode_real,q_dedup_incremental_minhash"
 )
 

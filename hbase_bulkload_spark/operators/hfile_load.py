@@ -54,6 +54,10 @@ def task_file_label() -> str:
     return f"{ctx.partitionId():05d}-{ctx.taskAttemptId()}"
 
 
+#: The region-aligned KV contract a cell-shape frame must carry.
+CELL_COLUMNS = ("rowkey", "family", "qualifier", "value", "bucket")
+
+
 def write_partition_cells_arrow(
     batches,
     out_dir: str,
@@ -61,10 +65,9 @@ def write_partition_cells_arrow(
     compression: str | None = "snappy",
     ts: int = 0,
 ) -> list[dict]:
-    """Executor-side body shared by `write_region_hfiles` (mapInArrow)
-    and the `format("hfile")` DataSource writer: stream Arrow record
-    batches of the region-aligned KV contract (rowkey, family,
-    qualifier, value, bucket — sorted by (bucket, rowkey, qualifier))
+    """Executor-side body of `write_region_hfiles` (mapInArrow): stream
+    Arrow record batches of the region-aligned KV contract (rowkey,
+    family, qualifier, value, bucket — sorted by (bucket, rowkey, qualifier))
     into one open HFileWriter per bucket; returns one manifest dict per
     file. ``task_label`` should come from :func:`task_file_label`.
     Batch columns feed ``HFileWriter.add_many_arrow`` directly — no
@@ -83,9 +86,8 @@ def write_partition_cells_arrow(
     across batches.
 
     Attempts stream into a ``.tmp``-suffixed name (outside the
-    ``part-*.hfile`` namespace committed readers and the job-commit
-    orphan sweep look at) and rename to the final name only on task
-    completion, so a file is visible under its final name either fully
+    ``part-*.hfile`` namespace readers look at) and rename to the final
+    name only on task completion, so a file is visible under its final name either fully
     written or not at all — a killed/zombie attempt leaves at worst a
     ``.tmp`` straggler, not a half-written ``part-*`` file."""
     import numpy as np
@@ -98,8 +100,7 @@ def write_partition_cells_arrow(
         if n == 0:
             continue
         names = rb.schema.names
-        col = {c: rb.column(names.index(c)) for c in
-               ("rowkey", "family", "qualifier", "value", "bucket")}
+        col = {c: rb.column(names.index(c)) for c in CELL_COLUMNS}
         bkt = col["bucket"]
         if bkt.null_count:
             raise ValueError(
@@ -253,6 +254,12 @@ def write_region_hfiles(
     from pyspark.sql import functions as F
 
     if qualifiers is None:
+        missing = [c for c in CELL_COLUMNS if c not in kv.columns]
+        if missing:
+            raise ValueError(
+                f"the cell shape needs the KV contract columns {CELL_COLUMNS}; "
+                f"missing {missing}"
+            )
         cell_cols = {"rowkey", "family", "qualifier", "value"}
     else:
         cell_cols = set(kv.columns) - {"bucket"}
@@ -478,11 +485,10 @@ def _iter_block_chunks(blocks, chunk_bytes: int = DECODE_CHUNK_BYTES):
 def _adaptive_split_bytes(total_bytes: int, cores: int | None) -> int:
     """split_bytes for ``total_bytes`` of on-disk data blocks: target
     OVERSUB_TASKS_PER_CORE tasks per core, clamped to
-    [DEFAULT_SPLIT_BYTES, MAX_SPLIT_BYTES]."""
+    [DEFAULT_SPLIT_BYTES, MAX_SPLIT_BYTES]. ``cores=None`` falls back
+    to this machine's CPU count."""
     if cores is None or cores <= 0:
-        cores = int(
-            os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 32)
-        )
+        cores = os.cpu_count() or 32
     want = total_bytes // max(OVERSUB_TASKS_PER_CORE * cores, 1)
     return max(DEFAULT_SPLIT_BYTES, min(MAX_SPLIT_BYTES, want))
 
@@ -494,15 +500,15 @@ def plan_block_splits(
     stop_row: bytes | None = None,
     cores: int | None = None,
 ) -> list[tuple[str, str, str, list[tuple[int, int]]]]:
-    """Driver-side scan planning shared by `scan_hfiles` and the
-    `format("hfile")` Python DataSource: read each file's trailer + root
-    index (a few KB), prune whole files by key range from metadata
-    alone, prune blocks against the index's first-key fences, and pack
-    surviving blocks into ~``split_bytes`` chunks — one task each.
+    """Driver-side scan planning of `scan_hfiles`: read each file's
+    trailer + root index (a few KB), prune whole files by key range
+    from metadata alone, prune blocks against the index's first-key
+    fences, and pack surviving blocks into ~``split_bytes`` chunks —
+    one task each.
     ``split_bytes=None`` (the default) derives the chunk size from the
     surviving files' total data-block bytes via
     :func:`_adaptive_split_bytes` (``cores`` = the scan's available
-    parallelism; falls back to $SPARK_GRAFT_CPUS / os.cpu_count()).
+    parallelism; falls back to os.cpu_count()).
     Returns (path, region, codec, [(off, size), ...]) per split."""
     import glob as _glob
 
@@ -746,7 +752,17 @@ def scan_hfiles(
     range are skipped from their metadata alone, blocks are pruned
     against the index's first-key fences before any data byte is read,
     and the residual cell filter runs in the decode task — the same
-    prune-then-filter discipline as a parquet min/max scan."""
+    prune-then-filter discipline as a parquet min/max scan. A name in
+    ``columns`` that is not an output column raises ``ValueError``."""
+    prunable = ("family", "qualifier", "ts", "value")
+    keep = prunable
+    if columns is not None:
+        unknown = set(columns) - set(prunable) - {"region", "rowkey"}
+        if unknown:
+            raise ValueError(
+                f"unknown columns {sorted(unknown)}; prunable: {prunable}"
+            )
+        keep = tuple(c for c in prunable if c in columns)
     plan = plan_block_splits(
         table_dir,
         split_bytes,
@@ -759,11 +775,6 @@ def scan_hfiles(
     # the reference-fidelity raw-key/positional modes, whose keys and
     # qualifiers are not UTF-8
     cell_t = "binary" if binary else "string"
-    keep = (
-        ("family", "qualifier", "ts", "value")
-        if columns is None
-        else tuple(c for c in ("family", "qualifier", "ts", "value") if c in columns)
-    )
     _types = {"family": cell_t, "qualifier": cell_t, "ts": "long", "value": cell_t}
     out_schema = ", ".join(
         [f"region string, rowkey {cell_t}"] + [f"{c} {_types[c]}" for c in keep]
@@ -786,7 +797,7 @@ def scan_hfiles(
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        wants = {f"want_{c}": (c in keep) for c in ("family", "qualifier", "ts", "value")}
+        wants = {f"want_{c}": (c in keep) for c in prunable}
         for rb in batches:
 
             for task in rb.to_pylist():
@@ -794,7 +805,7 @@ def scan_hfiles(
                 # payloads and decode once, vectorized — chunked at
                 # DECODE_CHUNK_BYTES so decode scratch stays flat no
                 # matter how large the (scale-adaptive) split is (see
-                # _iter_block_chunks; hfile_datasource.read mirrors it)
+                # _iter_block_chunks)
                 with open(task["path"], "rb") as f:
                     for chunk in _iter_block_chunks(task["blocks"]):
                         plain = b"".join(

@@ -28,8 +28,7 @@ _MODULES = ("ingest", "relational", "semantics", "streaming", "udf", "extensions
 _DRIVER_WINDOW_FIRST = (
     # round 9 head — keys that are new or whose semantics/schema changed
     # this round, so they need a fresh driver row:
-    # - q_bulkload_hfile_ds: NEW — format("hfile") DataSource WRITE path
-    #   upgraded from test-pinned to full-oracle
+    # - q_bulkload_hfile_ds: an alias of q_bulkload_hfile
     # - q_multimodal_phash_real: NEW — real-pixel pHash arm (PNG decode
     #   → DCT) with the banding-vs-brute verdict
     # - q_dedup_near: semantics restored to the round-1 raw production

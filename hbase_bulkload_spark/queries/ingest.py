@@ -122,62 +122,25 @@ def q_scan_rcfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return records.scan_rcfile(spark, sf_dir)
 
 
-def q_scan_avro_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Op 5b: the Avro OCF scan through the registered Spark Python
-    DataSource (`spark.read.format("avro_ocf")`) — the same codec as
-    q_scan_avro, but Catalyst-planned: header-inferred schema,
-    sync-anchored byte-range partitions, Arrow-batch reads. Same full
-    oracle, so the DataSource read path is value-checked end to end."""
-    from hbase_bulkload_spark.sources.format_datasources import register
-
-    oracle_safe(spark)
-    register(spark)
-    path = records.avro_path(spark, sf_dir)
-    return spark.read.format("avro_ocf").load(path).select(*RECORD_COLS)
-
-
-def q_scan_rcfile_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Op 4b: the RCFile scan through the registered Spark Python
-    DataSource (`spark.read.format("rcfile")`, names via option) —
-    same codec and oracle as q_scan_rcfile."""
-    from hbase_bulkload_spark.sources.format_datasources import register
-
-    oracle_safe(spark)
-    register(spark)
-    path = records.rcfile_path(spark, sf_dir)
-    return (
-        spark.read.format("rcfile")
-        .option("names", ",".join(RECORD_COLS))
-        .load(path)
-        .select(*RECORD_COLS)
-    )
-
-
 def q_scan_hfile_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Op 7b read side as a FULL-ORACLE query (round 8 — previously
-    pinned only by tests/test_hfile_datasource.py): the bulk-loaded
-    HFile base table (fixture-cached, `_hfile_artifacts`) scanned
-    through the registered `spark.read.format("hfile")` DataSource with
-    a rowkey-prefix predicate. `pushFilters` harvests the prefix into
-    [start, stop) block fences, so only bucket-'4' blocks are decoded —
-    the HFile-tier analog of parquet partition pruning — and
-    `.option("columns", ...)` prunes family/ts decode per cell. The
-    oracle recomputes the same cells relationally, so a green row
-    certifies DataSource planning, fence pruning, column pruning, and
-    cell decode value-for-value (the reader the reference's loaded
-    table serves, BulkImporterFromText.java:129-130)."""
-    from hbase_bulkload_spark.sources.hfile_datasource import register
+    """Op 7b read side as a FULL-ORACLE query: the bulk-loaded HFile
+    base table (fixture-cached, `_hfile_artifacts`) range-scanned over
+    the rowkeys of bucket '4' ([b"4", b"5")). Whole files and blocks
+    outside the range are pruned from metadata before any data byte is
+    read — the HFile-tier analog of parquet partition pruning — and
+    ``columns`` prunes family/ts decode per cell. The oracle recomputes
+    the same cells relationally, so a green row certifies range
+    planning, fence pruning, column pruning, and cell decode
+    value-for-value (the reader the reference's loaded table serves,
+    BulkImporterFromText.java:129-130)."""
+    from hbase_bulkload_spark.operators.hfile_load import scan_hfiles
 
     oracle_safe(spark)
     table_dir, _ = _hfile_artifacts(spark, sf_dir)
-    register(spark)
-    return (
-        spark.read.format("hfile")
-        .option("columns", "qualifier,value")
-        .load(table_dir)
-        .filter(F.col("rowkey").startswith("4"))
-        .select("rowkey", "qualifier", "value")
-    )
+    return scan_hfiles(
+        spark, table_dir, start_row=b"4", stop_row=b"5",
+        columns=("qualifier", "value"),
+    ).select("rowkey", "qualifier", "value")
 
 
 def q_filter_arity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -521,62 +484,6 @@ def _hfile_bucket_summary(scanned: DataFrame) -> DataFrame:
     )
 
 
-def q_bulkload_hfile_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Op 7b WRITE side as a FULL-ORACLE query (round 9 — previously
-    pinned only by the test_hfile_datasource.py round trip): the same
-    ops-7+9 dataflow as q_bulkload_hfile, but the HFiles are written by
-    the registered Python DataSource SINK (`df.write.format("hfile")`,
-    two-phase commit via `_MANIFEST.json`), placed by the `doBulkLoad`
-    analog from the committed manifest (never a directory glob — files
-    from aborted attempts are invisible), and scanned back through the
-    `spark.read.format("hfile")` DataSource reader. The oracle computes
-    the identical per-bucket summary relationally from the raw table,
-    so a green row certifies the ENTIRE DataSource write → manifest
-    commit → bulk-load placement → DataSource read round trip
-    value-for-value (HFileOutputFormat2 + doBulkLoad,
-    BulkImporterFromText.java:108-111,129-130)."""
-    import json
-    import shutil
-    import tempfile
-
-    from hbase_bulkload_spark.operators import hfile_load as hl
-    from hbase_bulkload_spark.sources.hfile_datasource import register
-
-    oracle_safe(spark)
-    register(spark)
-    kv = bulkload_pipeline(
-        records.wide9(spark, sf_dir), KEY_COLS, RECORD_COLS, range_partitions=32
-    )
-    # same tmpfs-scratch rationale as q_bulkload_hfile: verification
-    # artifact, not a deliverable
-    scratch_root = (
-        "/dev/shm" if os.access("/dev/shm", os.W_OK) else tempfile.gettempdir()
-    )
-    work = os.path.join(
-        scratch_root,
-        f"hfile_ds_load_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
-    if os.path.exists(work):
-        shutil.rmtree(work)
-    staging = os.path.join(work, "staging")
-    table_dir = os.path.join(work, "table")
-    kv.write.format("hfile").mode("overwrite").save(staging)
-    with open(os.path.join(staging, "_MANIFEST.json")) as f:
-        manifest = json.load(f)
-    boundaries = [format(i, "x").encode() for i in range(16)]
-    hl.do_bulk_load(
-        [m["path"] for m in manifest], table_dir, boundaries, spark=spark
-    )
-    register(spark)  # idempotent; keeps the reader registered post-load
-    scanned = (
-        spark.read.format("hfile")
-        .option("columns", "value")
-        .load(table_dir)
-        .select("rowkey", "value")
-    )
-    return _hfile_bucket_summary(scanned)
-
-
 #: Deterministic multi-get keyset: rows with l_orderkey % MULTIGET_MOD
 #: == 0 (~0.1% of rows — point-read-selective, like a real Get batch).
 MULTIGET_MOD = 991
@@ -664,8 +571,10 @@ QUERIES = {
     "q_scan_columnar": q_scan_columnar,
     "q_scan_avro": q_scan_avro,
     "q_scan_rcfile": q_scan_rcfile,
-    "q_scan_avro_ds": q_scan_avro_ds,
-    "q_scan_rcfile_ds": q_scan_rcfile_ds,
+    # aliases kept for the driver contract: each *_ds key runs, and is
+    # checked against the oracle of, its operator-path key
+    "q_scan_avro_ds": q_scan_avro,
+    "q_scan_rcfile_ds": q_scan_rcfile,
     "q_scan_hfile_ds": q_scan_hfile_ds,
     "q_filter_arity": q_filter_arity,
     "q_filter_notnull": q_filter_notnull,
@@ -684,7 +593,7 @@ QUERIES = {
     "q_sorted_ingest": q_sorted_ingest,
     "q_bulkload_pipeline": q_bulkload_pipeline,
     "q_bulkload_hfile": q_bulkload_hfile,
-    "q_bulkload_hfile_ds": q_bulkload_hfile_ds,
+    "q_bulkload_hfile_ds": q_bulkload_hfile,
     "q_index_seek": q_index_seek,
     "q_multi_get": q_multi_get,
 }
@@ -724,8 +633,6 @@ ORACLES = {
     "q_scan_columnar": f"WITH {WIDE9_CTE} SELECT {_Z} FROM wide9",
     "q_scan_avro": f"WITH {WIDE9_CTE} SELECT {_Z} FROM wide9",
     "q_scan_rcfile": f"WITH {WIDE9_CTE} SELECT {_Z} FROM wide9",
-    "q_scan_avro_ds": f"WITH {WIDE9_CTE} SELECT {_Z} FROM wide9",
-    "q_scan_rcfile_ds": f"WITH {WIDE9_CTE} SELECT {_Z} FROM wide9",
     "q_scan_hfile_ds": f"""
         WITH {WIDE9_CTE}, {KV_CTE}
         SELECT rowkey, qualifier, value FROM kv
@@ -862,16 +769,8 @@ ORACLES = {
                CAST(SUM(LENGTH(value)) AS BIGINT) AS sum_value_len
         FROM kv GROUP BY 1
     """,
-    # DataSource-sink round trip: identical relational certificate —
-    # the write/load/read machinery differs, the cells must not
-    "q_bulkload_hfile_ds": f"""
-        WITH {WIDE9_CTE}, {KV_CTE}
-        SELECT substr(rowkey, 1, 1) AS bucket,
-               CAST(COUNT(*) AS BIGINT) AS n_cells,
-               CAST(COUNT(DISTINCT rowkey) AS BIGINT) AS n_keys,
-               MIN(rowkey) AS min_rk,
-               MAX(rowkey) AS max_rk,
-               CAST(SUM(LENGTH(value)) AS BIGINT) AS sum_value_len
-        FROM kv GROUP BY 1
-    """,
 }
+# the aliased *_ds keys share their operator-path key's oracle
+ORACLES.update(
+    {f"{k}_ds": ORACLES[k] for k in ("q_scan_avro", "q_scan_rcfile", "q_bulkload_hfile")}
+)

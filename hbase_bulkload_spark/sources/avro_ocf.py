@@ -371,21 +371,19 @@ def iter_ocf_range(
             pos = p + block_size + sl
 
 
-DEFAULT_SPLIT_SIZE = 128 << 20  # HDFS-block-ish; override in tests
-
-
 def scan_splits(spark, path: str, split_size: int | None = None):
     """The Avro scan operator (op 5): sync-marker byte-range splits →
     one Arrow-batched ``mapInPandas`` decode stage.
 
     The driver reads one tiny header per file (schema, sync, data
-    offset) and emits ``ceil(size / split_size)`` splits per file, so
-    scan parallelism tracks DATA volume, not file count — a single
-    misaligned 10 GB container becomes ~80 tasks at the default split.
-    ``split_size=None`` (default) sizes splits adaptively à la Spark's
-    own file planner (min(128 MB, max(1 MB, bytes/core))), so a small
-    table still fans out across every core of the CPU-bound Python
-    decode instead of one task per file.
+    offset) and plans byte-range splits
+    (`sources.split_planning.byte_split_frame`), so scan parallelism
+    tracks DATA volume, not file count — a single misaligned 10 GB
+    container becomes ~80 tasks at a 128 MB split. ``split_size=None``
+    (default) sizes splits adaptively à la Spark's own file planner
+    (min(128 MB, max(1 MB, bytes/core))), so a small table still fans
+    out across every core of the CPU-bound Python decode instead of one
+    task per file.
     All files must share one record schema (the reference's
     `AvroKeyInputFormat<PWData>` assumes the same). Returns a DataFrame
     of the record fields as nullable strings/primitives per the schema.
@@ -394,37 +392,18 @@ def scan_splits(spark, path: str, split_size: int | None = None):
 
     import pandas as pd
 
-    from hbase_bulkload_spark.sources.split_planning import adaptive_split_size
+    from hbase_bulkload_spark.sources.split_planning import byte_split_frame
 
     files = sorted(_glob.glob(os.path.join(path, "*.avro")))
     if not files:
         raise FileNotFoundError(f"no .avro files under {path}")
 
     headers = [(p, header_info(p)) for p in files]
-    if split_size is None:
-        total = sum(h[3] - h[2] for _, h in headers)
-        split_size = adaptive_split_size(
-            total, spark.sparkContext.defaultParallelism
-        )
-    plan = []
-    schema = None
-    for p, (s, sync, data_start, fsize, codec) in headers:
-        if schema is None:
-            schema = s
-        b = data_start
-        while b < fsize:
-            e = min(b + split_size, fsize)
-            plan.append((p, b, e, data_start, sync.hex(), codec))
-            b = e
+    schema = headers[0][1][0]
     types = _field_types(schema)
     names = [f["name"] for f in schema["fields"]]
-
-    # one split per partition WITHOUT an Exchange node: numSlices at
-    # parallelize time, not a post-hoc repartition shuffle
-    sdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(plan, len(plan)),
-        "path string, start long, end long, data_start long, sync string, codec string",
-    )
+    # header_info: (schema, sync, data_start, size, codec)
+    sdf = byte_split_frame(spark, [(p, *h[1:]) for p, h in headers], split_size)
 
     def decode(batches):
         for pdf in batches:
@@ -443,8 +422,7 @@ def scan_splits(spark, path: str, split_size: int | None = None):
 
 def spark_type(t) -> str:
     """Avro field type → Spark DDL type (nullable-union unwrapped;
-    int→long / float→double widenings are deliberate). The single
-    mapping shared by the operator scan and the `avro_ocf` DataSource."""
+    int→long / float→double widenings are deliberate)."""
     if isinstance(t, list):  # union: type of the non-null branch
         t = next(x for x in t if x != "null")
     return {

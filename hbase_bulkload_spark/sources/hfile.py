@@ -1054,9 +1054,8 @@ def decode_cells_arrow(
     casts to utf8 (validated, like the scalar path's ``.decode()``).
 
     Returns a dict of ``pa.Array`` keyed ``rowkey/family/qualifier/ts/
-    value`` (pruned columns absent). Both scan callers (``scan_hfiles``
-    mapInPandas and the ``format('hfile')`` DataSource) feed
-    Arrow/pandas, so measured end-to-end (decode THROUGH an Arrow
+    value`` (pruned columns absent). Its caller (the ``scan_hfiles``
+    mapInArrow task) feeds Arrow, so measured end-to-end (decode THROUGH an Arrow
     record batch, 32 warm workers) this is ~1.4x the scalar
     decode-to-lists+pa.array path; feed it a whole split's
     concatenated block payloads, not single 64 KB blocks, or the

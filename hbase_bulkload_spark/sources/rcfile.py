@@ -377,9 +377,6 @@ def iter_rcfile_range(
             i = j if j < len(buf) else -1
 
 
-DEFAULT_SPLIT_SIZE = 128 << 20
-
-
 def scan_splits(
     spark,
     path: str,
@@ -388,7 +385,8 @@ def scan_splits(
     columns: list[str] | None = None,
 ):
     """The RCFile scan operator (op 4, `BulkImporterFromRC.java:94-95`):
-    byte-range splits planned from per-file headers, Arrow-batched
+    byte-range splits planned from per-file headers
+    (`sources.split_planning.byte_split_frame`), Arrow-batched
     ``mapInPandas`` row-group decode. ``columns`` prunes decode to a
     projection — skipped columns are never decompressed (the columnar
     property; Hive reads `hive.io.file.readcolumn.ids` the same way).
@@ -398,6 +396,8 @@ def scan_splits(
 
     import pandas as pd
 
+    from hbase_bulkload_spark.sources.split_planning import byte_split_frame
+
     files = sorted(_glob.glob(os.path.join(path, "*.rc")))
     if not files:
         raise FileNotFoundError(f"no .rc files under {path}")
@@ -405,28 +405,13 @@ def scan_splits(
     out_names = names if columns is None else [c for c in names if c in columns]
     proj = None if columns is None else [names.index(c) for c in out_names]
 
-    headers = [(p, header_info(p)) for p in files]
-    if split_size is None:
-        from hbase_bulkload_spark.sources.split_planning import adaptive_split_size
-
-        total = sum(h[4] - h[3] for _, h in headers)
-        split_size = adaptive_split_size(
-            total, spark.sparkContext.defaultParallelism
-        )
-    plan = []
-    for p, (n_cols, codec, sync, data_start, fsize) in headers:
+    headers = []
+    for p in files:
+        n_cols, codec, sync, data_start, fsize = header_info(p)
         if n_cols != len(names):
             raise ValueError(f"{p}: {n_cols} columns, {len(names)} names")
-        b = data_start
-        while b < fsize:
-            e = min(b + split_size, fsize)
-            plan.append((p, b, e, data_start, sync.hex(), codec or ""))
-            b = e
-
-    sdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(plan, len(plan)),
-        "path string, start long, end long, data_start long, sync string, codec string",
-    )
+        headers.append((p, sync, data_start, fsize, codec or ""))
+    sdf = byte_split_frame(spark, headers, split_size)
 
     def decode(batches):
         for pdf in batches:

@@ -1,5 +1,5 @@
-"""Adaptive byte-range split sizing for the Python-codec container
-scans (Avro OCF, RCFile, and their DataSource forms).
+"""Byte-range split planning for the Python-codec container scans
+(Avro OCF, RCFile): one plan row per split, sized adaptively.
 
 Spark's own file-source planner sizes splits as
 ``min(maxPartitionBytes, max(openCostInBytes, totalBytes/cores))``
@@ -19,6 +19,12 @@ from __future__ import annotations
 DEFAULT_MAX_SPLIT = 128 << 20  # HDFS-block-ish upper bound
 DEFAULT_OPEN_COST = 1 << 20  # Python decode ≫ task overhead at 1 MB
 
+#: One row per split: the byte range plus the header facts its decode
+#: task needs, so the task opens the data file cold.
+SPLIT_SCHEMA = (
+    "path string, start long, end long, data_start long, sync string, codec string"
+)
+
 
 def adaptive_split_size(
     total_bytes: int,
@@ -31,3 +37,28 @@ def adaptive_split_size(
     and never go below ``open_cost`` per split."""
     bytes_per_core = total_bytes // max(parallelism, 1) + 1
     return int(min(max_split, max(open_cost, bytes_per_core)))
+
+
+def byte_split_frame(spark, files, split_size: int | None = None):
+    """The plan frame of a sync-anchored container scan. ``files`` holds
+    ``(path, sync, data_start, file_size, codec)`` per file; each file's
+    data region ``[data_start, file_size)`` is cut into ``split_size``
+    byte ranges, so scan parallelism tracks data volume, not file count.
+    ``split_size=None`` sizes splits with :func:`adaptive_split_size`
+    over the total data bytes and the session's default parallelism.
+    Returns one row (:data:`SPLIT_SCHEMA`) and one partition per split."""
+    if split_size is None:
+        split_size = adaptive_split_size(
+            sum(size - start for _, _, start, size, _ in files),
+            spark.sparkContext.defaultParallelism,
+        )
+    plan = [
+        (path, b, min(b + split_size, size), start, sync.hex(), codec)
+        for path, sync, start, size, codec in files
+        for b in range(start, size, split_size)
+    ]
+    # one split per partition WITHOUT an Exchange node: numSlices at
+    # parallelize time, not a post-hoc repartition shuffle
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(plan, len(plan)), SPLIT_SCHEMA
+    )

@@ -548,6 +548,24 @@ def test_cli_hfile_sink(spark, tmp_path):
         assert r.rowkey.startswith(region_start)
 
 
+def test_write_region_hfiles_rejects_missing_cell_columns(spark, tmp_path):
+    """A cell-shape frame without the whole KV contract is rejected on
+    the driver, naming the missing columns, before any job starts."""
+    kv = spark.createDataFrame(
+        [("0a", "v", "0")], "rowkey string, value string, bucket string"
+    )
+    out = tmp_path / "out"
+    sc = spark.sparkContext
+    sc.setJobGroup("hfile-missing-columns", "input check")
+    try:
+        with pytest.raises(ValueError, match=r"missing \['family', 'qualifier'\]"):
+            hl.write_region_hfiles(kv, str(out))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("hfile-missing-columns") == []
+    assert not out.exists()
+
+
 def test_spark_roundtrip_with_splits(spark, tmp_path):
     """Staging files written for 4 coarse buckets, loaded into 8 finer
     regions — every file must split, through the Spark-parallel path."""
@@ -790,7 +808,7 @@ def test_adaptive_split_bytes_clamps_and_targets():
     got = hl._adaptive_split_bytes(1 << 30, 32)
     assert got == (1 << 30) // (hl.OVERSUB_TASKS_PER_CORE * 32)
     assert hl.DEFAULT_SPLIT_BYTES <= got <= hl.MAX_SPLIT_BYTES
-    # cores=None falls back to an env/cpu count, still clamped
+    # cores=None falls back to os.cpu_count(), still clamped
     assert (
         hl.DEFAULT_SPLIT_BYTES
         <= hl._adaptive_split_bytes(1 << 40, None)

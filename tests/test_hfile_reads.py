@@ -1,17 +1,12 @@
-"""format('hfile') Python DataSource: same cells as the operator-path
-scan, task count = planned block splits, and rowkey predicates prune
-files/blocks at planning time while Spark re-applies them for
-correctness (filters are never claimed)."""
+"""HFile table reads beside the full scan: distributed multi-get
+(string and binary modes, key lists and keyset DataFrames), decode-side
+column pruning, and the materialized secondary-index seek."""
 
 from __future__ import annotations
 
 import pytest
 
 from hbase_bulkload_spark.operators import hfile_load as hl
-from hbase_bulkload_spark.sources.hfile_datasource import (
-    HFileReader,
-    register,
-)
 
 
 @pytest.fixture(scope="module")
@@ -208,159 +203,15 @@ def test_value_index_seek(spark, sf_dir, table_dir, tmp_path):
     assert 0 < pruned_blocks < full_blocks, (pruned_blocks, full_blocks)
 
 
-def test_datasource_matches_operator_scan(spark, table_dir):
-    register(spark)
-    ds = spark.read.format("hfile").load(table_dir)
-    op = hl.scan_hfiles(spark, table_dir)
-    cols = ["region", "rowkey", "family", "qualifier", "value"]
-    got = sorted(map(tuple, ds.select(*cols).collect()))
-    want = sorted(map(tuple, op.select(*cols).collect()))
-    assert got == want and len(got) > 0
-
-
-def test_datasource_task_count_follows_split_bytes(spark, table_dir):
-    register(spark)
-    few = spark.read.format("hfile").option("split_bytes", 1 << 30).load(table_dir)
-    many = spark.read.format("hfile").option("split_bytes", 4 << 10).load(table_dir)
-    n_few = few.rdd.getNumPartitions()
-    n_many = many.rdd.getNumPartitions()
-    assert n_few < n_many
-    assert many.count() == few.count()
-
-
-def test_datasource_rowkey_filter_prunes_and_stays_correct(spark, table_dir):
-    from pyspark.sql import functions as F
-
-    register(spark)
-    ds = spark.read.format("hfile").load(table_dir)
-    all_rows = ds.collect()
-    keys = sorted({r.rowkey for r in all_rows})
-    lo = keys[len(keys) // 4]
-    filtered = ds.filter(F.col("rowkey") >= lo)
-    want = [r for r in all_rows if r.rowkey >= lo]
-    assert sorted(map(tuple, filtered.collect())) == sorted(map(tuple, want))
-    # whole region files below lo disappear at PLANNING time
-    assert filtered.rdd.getNumPartitions() < ds.rdd.getNumPartitions()
-
-
-def test_push_filters_tighten_bounds_without_claiming():
-    from pyspark.sql.datasource import (
-        EqualTo,
-        GreaterThanOrEqual,
-        LessThan,
-        StringStartsWith,
-    )
-
-    r = HFileReader({"path": "/nonexistent"})
-    fs = [
-        GreaterThanOrEqual(("rowkey",), "ab"),
-        LessThan(("rowkey",), "f0"),
-        StringStartsWith(("other_col",), "x"),  # not rowkey: ignored
-    ]
-    back = list(r.pushFilters(fs))
-    assert back == fs  # everything handed back to Spark
-    assert r.start_row == b"ab" and r.stop_row == b"f0"
-
-    r2 = HFileReader({"path": "/nonexistent"})
-    list(r2.pushFilters([EqualTo(("rowkey",), "cc")]))
-    assert r2.start_row == b"cc" and r2.stop_row == b"cc\x00"
-
-    r3 = HFileReader({"path": "/nonexistent"})
-    list(r3.pushFilters([StringStartsWith(("rowkey",), "ab")]))
-    assert r3.start_row == b"ab" and r3.stop_row == b"ac"
-
-    # superset property: stop must exceed every possible continuation
-    # of the prefix, including ones extending with 0xFF bytes
-    r4 = HFileReader({"path": "/nonexistent"})
-    list(r4.pushFilters([StringStartsWith(("rowkey",), "a\xff")]))
-    pfx = "a\xff".encode()
-    assert r4.start_row == pfx and r4.stop_row is not None
-    assert r4.stop_row > pfx + b"\xff" * 8
-
-    # empty prefix matches everything: NO stop bound may be set (the
-    # old prefix+b'\xff' fallback pruned rows above b'\xff')
-    r5 = HFileReader({"path": "/nonexistent"})
-    list(r5.pushFilters([StringStartsWith(("rowkey",), "")]))
-    assert r5.stop_row is None
-
-
-def test_datasource_writer_roundtrip(spark, sf_dir, tmp_path):
-    """df.write.format('hfile') must produce files that bulk-load and
-    scan back to exactly the KV frame, with a committed manifest; a
-    frame missing the KV contract columns is rejected."""
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    from hbase_bulkload_spark.operators.bulkload import bulkload_pipeline
-    from hbase_bulkload_spark.sources import records
-
-    register(spark)
-    kv = bulkload_pipeline(
-        records.wide9(spark, sf_dir), records.RECORD_COLS[:4], records.RECORD_COLS
-    )
-    out = str(tmp_path / "staging")
-    kv.write.format("hfile").mode("overwrite").save(out)
-    assert os.path.exists(os.path.join(out, "_SUCCESS"))
-    manifest = json.load(open(os.path.join(out, "_MANIFEST.json")))
-    assert manifest and all(os.path.exists(m["path"]) for m in manifest)
-    assert sum(m["entry_count"] for m in manifest) == kv.count()
-
-    boundaries = [format(i, "x").encode() for i in range(16)]
-    hl.do_bulk_load(
-        [m["path"] for m in manifest], str(tmp_path / "table"), boundaries,
-        spark=spark,
-    )
-    scanned = hl.scan_hfiles(spark, str(tmp_path / "table"))
-    cols = ["rowkey", "family", "qualifier", "value"]
-    got = sorted(map(tuple, scanned.select(*cols).collect()))
-    want = sorted(map(tuple, kv.select(*cols).collect()))
-    assert got == want
-
-    with pytest.raises(Exception, match="missing"):
-        kv.select("rowkey", "value").write.format("hfile").mode(
-            "overwrite"
-        ).save(str(tmp_path / "bad"))
-
-
-def test_datasource_writer_rejects_append(spark, sf_dir, tmp_path):
-    from hbase_bulkload_spark.operators.bulkload import bulkload_pipeline
-    from hbase_bulkload_spark.sources import records
-
-    register(spark)
-    kv = bulkload_pipeline(
-        records.wide9(spark, sf_dir), records.RECORD_COLS[:4], records.RECORD_COLS
-    ).limit(50)
-    out = str(tmp_path / "staging")
-    kv.write.format("hfile").mode("overwrite").save(out)
-    with pytest.raises(Exception, match="overwrite"):
-        kv.write.format("hfile").mode("append").save(out)
-    # overwrite replaces cleanly
-    kv.write.format("hfile").mode("overwrite").save(out)
-
-
-def test_datasource_binary_read_mode(spark, table_dir):
-    register(spark)
-    b = spark.read.format("hfile").option("binary", "true").load(table_dir)
-    s = spark.read.format("hfile").load(table_dir)
-    assert dict(b.dtypes)["rowkey"] == "binary" and dict(s.dtypes)["rowkey"] == "string"
-    got = sorted(r.rowkey.decode() for r in b.select("rowkey").collect())
-    want = sorted(r.rowkey for r in s.select("rowkey").collect())
-    assert got == want
-
-
-def test_datasource_column_pruning_option(spark, table_dir):
-    register(spark)
-    pruned = (
-        spark.read.format("hfile").option("columns", "value").load(table_dir)
-    )
+def test_scan_hfiles_column_pruning(spark, table_dir):
+    """``columns`` prunes the decode to the named cells: region and
+    rowkey are always kept, the values equal the full scan's
+    projection, and an unknown name raises before any planning."""
+    pruned = hl.scan_hfiles(spark, table_dir, columns=("value",))
     assert pruned.columns == ["region", "rowkey", "value"]
-    full = spark.read.format("hfile").load(table_dir)
+    full = hl.scan_hfiles(spark, table_dir)
     assert sorted(map(tuple, pruned.collect())) == sorted(
         map(tuple, full.select("region", "rowkey", "value").collect())
     )
-    with pytest.raises(Exception, match="unknown columns"):
-        spark.read.format("hfile").option("columns", "bogus").load(
-            table_dir
-        ).schema
+    with pytest.raises(ValueError, match="unknown columns"):
+        hl.scan_hfiles(spark, "/nonexistent", columns=("bogus",))

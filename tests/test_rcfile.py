@@ -156,6 +156,16 @@ def test_scan_splits_column_pruning(spark, tmp_path):
     assert {r["c2"] for r in df.collect()} == {None, "yy", "z", "end"}
 
 
+def test_rcfile_name_count_mismatch_rejected(spark, tmp_path):
+    """A names list that does not match the files' column count is
+    rejected on the driver, naming the file."""
+    path = str(tmp_path / "rc_names")
+    os.makedirs(path)
+    rcfile.write_rcfile(os.path.join(path, "p.rc"), ROWS, 3)
+    with pytest.raises(ValueError, match=r"p\.rc: 3 columns, 2 names"):
+        rcfile.scan_splits(spark, path, ["a", "b"])
+
+
 try:
     from hypothesis import given, settings
     from hypothesis import strategies as st
