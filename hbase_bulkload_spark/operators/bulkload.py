@@ -20,15 +20,14 @@ by construction — the property that survives a 100 TB scale-up. Bucket
 count is a parameter (the reference hardcodes 10, `RowKeyConverter.java:8`);
 at cluster scale set it from data volume, not region count.
 
-Two exchange shapes share one key/bucket derivation:
-- cells (`bulkload_kv` → `region_align`): one shuffled record per
-  cell, each repeating its row's rowkey — the contract the parquet sink,
-  streaming and the registered HFile keys consume;
-- wide rows (`bulkload_wide` → `region_align_wide`, or
-  `bulkload_pipeline`): one shuffled record per input row. The pipeline
-  unpivots after the exchange; the CLI HFile sink ships the sorted wide
-  rows to its writer tasks, which explode them into cells in qualifier
-  byte order (`hfile_load.write_region_hfiles(..., qualifiers=...)`).
+Every HFile sink exchanges wide rows: `bulkload_wide` →
+`region_align_wide` moves one shuffled record per input row, and the
+writer tasks explode the sorted rows into cells in qualifier byte order
+(`hfile_load.write_region_hfiles`, behind `hfile_load.bulkload_to_table`
+and the streaming HFile sink). `bulkload_pipeline` exchanges the same
+wide rows and unpivots after the exchange. The parquet sinks still
+exchange cells (`bulkload_kv` → `region_align`): one shuffled record
+per cell, each repeating its row's rowkey.
 """
 
 from __future__ import annotations
@@ -115,7 +114,7 @@ def bulkload_wide(
     raw_binary_keys: bool = False,
     positional_qualifiers: bool = False,
 ) -> tuple[DataFrame, list[bytes]]:
-    """The wide prelude shared by :func:`bulkload_pipeline` and the CLI
+    """The wide prelude shared by :func:`bulkload_pipeline` and every
     HFile sink: one row per record — ``rowkey``, one string column per
     value column (same names, same order), ``bucket`` — plus the
     qualifier bytes of those value columns: the UTF-8 column names, or
@@ -139,7 +138,6 @@ def bulkload_pipeline(
     value_cols: Sequence[str],
     family: str = CURRENT_FAMILY,
     n_buckets: int = 16,
-    range_partitions: int | None = None,
 ) -> DataFrame:
     """Shuffle-lean flagship plan: exchange *wide* rows, unpivot after.
 
@@ -151,30 +149,17 @@ def bulkload_pipeline(
     it and the terminal `sortWithinPartitions` needs no further
     exchange. At 100 TB the shuffle is the bottleneck, so this is the
     shape that scales.
-
-    ``range_partitions`` switches the exchange to
-    ``repartitionByRange(n, rowkey)`` — for sinks that allow multiple
-    files per region (HFile bulk load does; minor compaction merges
-    them). Hash-partitioning 16 bucket labels into 16 partitions leaves
-    collision stragglers holding 2-3 buckets each (observed: ~10 of 16
-    partitions occupied); range partitioning balances write tasks and
-    lets the partition count exceed the region count. Since the bucket
-    is the rowkey's first hex char, rowkey ranges never interleave
-    buckets — each task still writes whole sorted bucket fragments.
     """
     wide, _ = bulkload_wide(df, key_cols, value_cols)
-    if range_partitions is not None:
-        wide = wide.repartitionByRange(range_partitions, "rowkey")
-    else:
-        wide = wide.repartition(n_buckets, "bucket")
+    wide = wide.repartition(n_buckets, "bucket")
     # NOTE (round-7 A/B): sorting the WIDE frame before the unpivot and
     # relying on Generate's order-preservation is ~9x less sort work on
     # paper, but it is WRONG for duplicate rowkeys (each duplicate row
     # re-emits its qualifiers from the top — ...z8, z0... inversions),
     # and the measured win was nil (2.2 s -> 2.4 s noop materialization
     # at sf0.1: the Expand + string copy dominates, not the sort). The
-    # exploded-frame sort is both correct and no slower. (The CLI HFile
-    # sink does sort wide rows: its writer task re-orders each run of
+    # exploded-frame sort is both correct and no slower. (The HFile
+    # sinks do sort wide rows: their writer task re-orders each run of
     # equal rowkeys by qualifier, see hfile_load.explode_wide_batches.)
     long = (
         wide.unpivot(["rowkey", "bucket"], list(value_cols), "qualifier", "value")
@@ -194,15 +179,29 @@ def region_align(kv: DataFrame, n_buckets: int = 16) -> DataFrame:
     )
 
 
-def region_align_wide(wide: DataFrame, n_buckets: int = 16) -> DataFrame:
+def region_align_wide(
+    wide: DataFrame, n_buckets: int = 16, range_partitions: int | None = None
+) -> DataFrame:
     """:func:`region_align` for the wide frame of :func:`bulkload_wide`:
     the same one bucket exchange, moving one row per record instead of
     one per cell, sorted within partitions by (bucket, rowkey). Cell
     order within a row is the writer's job
-    (`hfile_load.write_region_hfiles(..., qualifiers=...)`)."""
-    return wide.repartition(n_buckets, "bucket").sortWithinPartitions(
-        "bucket", "rowkey"
-    )
+    (`hfile_load.write_region_hfiles`).
+
+    ``range_partitions`` switches the exchange to
+    ``repartitionByRange(n, rowkey)`` — for sinks that allow multiple
+    files per region (HFile bulk load does; minor compaction merges
+    them). Hash-partitioning 16 bucket labels into 16 partitions leaves
+    collision stragglers holding 2-3 buckets each (observed: ~10 of 16
+    partitions occupied); range partitioning balances write tasks and
+    lets the partition count exceed the region count. Since the bucket
+    is the rowkey's first hex char, rowkey ranges never interleave
+    buckets — each task still writes whole sorted bucket fragments."""
+    if range_partitions is not None:
+        wide = wide.repartitionByRange(range_partitions, "rowkey")
+    else:
+        wide = wide.repartition(n_buckets, "bucket")
+    return wide.sortWithinPartitions("bucket", "rowkey")
 
 
 def write_bulkload(kv: DataFrame, path: str, n_buckets: int = 16) -> None:

@@ -16,9 +16,9 @@ artifact and are verified by reading the table back).
 
 Scale posture:
 - the HFiles are written by the EXECUTORS, one per region bucket, off
-  a single exchange — of wide rows for the CLI sink, which the writer
-  task explodes into cells, or of cells — and the driver only collects
-  a tiny per-file manifest;
+  a single exchange of wide rows (one per record), which the writer
+  task explodes into cells; the driver only collects a tiny per-file
+  manifest;
 - `do_bulk_load` reads ~4 KB of metadata per file (trailer + index) to
   place it; split rounds are dispatched back through Spark so
   rewriting crossing files is cluster-parallel, mirroring
@@ -36,7 +36,6 @@ from collections.abc import Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-from hbase_bulkload_spark.operators.kv import CURRENT_FAMILY
 from hbase_bulkload_spark.sources import hfile as hf
 
 
@@ -54,36 +53,28 @@ def task_file_label() -> str:
     return f"{ctx.partitionId():05d}-{ctx.taskAttemptId()}"
 
 
-#: The region-aligned KV contract a cell-shape frame must carry.
-CELL_COLUMNS = ("rowkey", "family", "qualifier", "value", "bucket")
-
-
 def write_partition_cells_arrow(
     batches,
     out_dir: str,
     task_label: str,
     compression: str | None = "snappy",
-    ts: int = 0,
 ) -> list[dict]:
     """Executor-side body of `write_region_hfiles` (mapInArrow): stream
-    Arrow record batches of the region-aligned KV contract (rowkey,
-    family, qualifier, value, bucket — sorted by (bucket, rowkey, qualifier))
-    into one open HFileWriter per bucket; returns one manifest dict per
-    file. ``task_label`` should come from :func:`task_file_label`.
-    Batch columns feed ``HFileWriter.add_many_arrow`` directly — no
+    the cell batches of :func:`explode_wide_batches` (rowkey, family,
+    qualifier, value, bucket — sorted by (bucket, rowkey, qualifier))
+    into one open HFileWriter per bucket, every cell at timestamp 0;
+    returns one manifest dict per file. ``task_label`` should come from
+    :func:`task_file_label`. Batch columns feed ``HFileWriter.add_many_arrow`` directly — no
     pandas object arrays, no per-cell Python bytes on the write path at
-    all (string columns are cast to binary once, C-level — the
-    reference-fidelity raw-key/positional modes pass binary already).
-    Contract (stronger than the old pandas groupby's): the bucket
-    column is NON-NULL and equal buckets are CONTIGUOUS within the
-    partition — grouping is a run-length split over the bucket column
-    (one C-level compare pass per batch), so a non-contiguous bucket
-    would open a second writer mid-file and nulls would propagate
-    through ``pc.not_equal`` and silently merge adjacent runs into the
-    wrong bucket's HFile. The KV contract (sorted by (bucket, rowkey,
-    qualifier), bucket from a non-null key) guarantees both; the null
-    half is asserted loudly per batch. A writer per bucket persists
-    across batches.
+    all. Contract: the bucket column is NON-NULL and equal buckets are
+    CONTIGUOUS within the partition — grouping is a run-length split
+    over the bucket column (one C-level compare pass per batch), so a
+    non-contiguous bucket would open a second writer mid-file and nulls
+    would propagate through ``pc.not_equal`` and silently merge adjacent
+    runs into the wrong bucket's HFile. The region-aligned sort
+    (bucket from a non-null key) guarantees both; the null half is
+    asserted loudly per batch. A writer per bucket persists across
+    batches.
 
     Attempts stream into a ``.tmp``-suffixed name (outside the
     ``part-*.hfile`` namespace readers look at) and rename to the final
@@ -99,13 +90,11 @@ def write_partition_cells_arrow(
         n = rb.num_rows
         if n == 0:
             continue
-        names = rb.schema.names
-        col = {c: rb.column(names.index(c)) for c in CELL_COLUMNS}
-        bkt = col["bucket"]
+        rowkey, family, qualifier, value, bkt = rb.columns
         if bkt.null_count:
             raise ValueError(
-                f"bucket column has {bkt.null_count} null(s); the KV "
-                "contract guarantees a non-null bucket and the "
+                f"bucket column has {bkt.null_count} null(s); the "
+                "region-aligned sort guarantees a non-null bucket and the "
                 "run-length split would silently merge runs across a "
                 "null boundary"
             )
@@ -125,11 +114,11 @@ def write_partition_cells_arrow(
                 finals[bucket] = path
                 w = writers[bucket] = hf.HFileWriter(path + ".tmp", compression)
             w.add_many_arrow(
-                col["rowkey"].slice(s, e - s),
-                col["family"].slice(s, e - s),
-                col["qualifier"].slice(s, e - s),
-                ts,
-                col["value"].slice(s, e - s),
+                rowkey.slice(s, e - s),
+                family.slice(s, e - s),
+                qualifier.slice(s, e - s),
+                0,
+                value.slice(s, e - s),
             )
     out = []
     for bucket, w in writers.items():
@@ -146,15 +135,16 @@ def write_partition_cells_arrow(
     return out
 
 
-def explode_wide_batches(batches, qualifiers: Sequence[bytes]):
-    """Arrow batches of sorted wide rows → batches of the KV contract
-    `write_partition_cells_arrow` consumes.
+def explode_wide_batches(batches, qualifiers: Sequence[bytes], family: str = "c"):
+    """Arrow batches of sorted wide rows → the cell batches
+    `write_partition_cells_arrow` consumes: columns rowkey, family,
+    qualifier, value, bucket, in that order.
 
     Input rows carry ``rowkey``, ``bucket`` and one value column per
     entry of ``qualifiers`` (every other column, in that order), sorted
     by (bucket, rowkey) — `operators.bulkload.region_align_wide`. Each
     row becomes one cell per non-null value (empty values are kept),
-    family ``c``, qualifiers in byte order (``z10`` < ``z2``).
+    all of ``family``, qualifiers in byte order (``z10`` < ``z2``).
     Rows sharing a rowkey are exploded together and their cells
     stable-sorted by (rowkey, qualifier), so duplicate rows interleave
     per qualifier exactly as a sort of the exploded cell frame would
@@ -167,7 +157,7 @@ def explode_wide_batches(batches, qualifiers: Sequence[bytes]):
 
     by_bytes = sorted(range(len(qualifiers)), key=qualifiers.__getitem__)
     quals = pa.array([qualifiers[j] for j in by_bytes], pa.binary())
-    fam = pa.array([CURRENT_FAMILY.encode()], pa.binary())
+    fam = pa.array([family.encode()], pa.binary())
 
     def explode(rb, new_run):
         names = rb.schema.names
@@ -218,70 +208,63 @@ _MANIFEST_SCHEMA = "path string, bucket string, entry_count long, n_blocks long"
 
 
 def write_region_hfiles(
-    kv: DataFrame,
+    wide: DataFrame,
     out_dir: str,
-    ts: int = 0,
+    qualifiers: Sequence[bytes],
+    family: str = "c",
     compression: str | None = "snappy",
-    qualifiers: Sequence[bytes] | None = None,
 ) -> list[dict]:
-    """Write one HFile per region bucket from a region-aligned frame.
+    """Write one HFile per region bucket from region-aligned wide rows.
     Executors stream Arrow batches into at most a handful of open
     writers (buckets are contiguous in the sort); the returned manifest
     is one row per file.
 
-    Two input shapes:
-    - cells (``qualifiers=None``): columns rowkey, family, qualifier,
-      value, bucket — sorted within partitions by (bucket, rowkey,
-      qualifier), i.e. the output of `operators.bulkload.region_align`;
-    - wide rows (``qualifiers`` given): columns rowkey, bucket and one
-      value column per qualifier, in ``qualifiers`` order — sorted
-      within partitions by (bucket, rowkey), i.e. the output of
-      `operators.bulkload.region_align_wide`. The writer task explodes
-      them (:func:`explode_wide_batches`, family ``c``), so the
-      exchange and the Arrow hop move one row per record instead of one
-      cell per value, each repeating the rowkey. The written files are
-      byte-identical to the cell shape's for the same records.
+    ``wide`` has columns rowkey, bucket and one value column per entry
+    of ``qualifiers``, in ``qualifiers`` order — sorted within
+    partitions by (bucket, rowkey), i.e. the output of
+    `operators.bulkload.region_align_wide`. The writer task explodes
+    each row into cells of ``family`` (:func:`explode_wide_batches`),
+    so the exchange and the Arrow hop move one row per record instead
+    of one cell per value, each repeating the rowkey. A frame missing
+    rowkey or bucket, or whose value columns do not match
+    ``qualifiers``, is rejected here, before any job starts.
 
-    Cell columns are cast to binary JVM-side before the Python hop:
-    codegen does the UTF-8 encode once per value, so the executor loop
-    never runs 4×n_cells Python ``str.encode`` calls (measured ~5-10%
-    off the write wall at sf0.1, byte-identical output; a no-op for
-    callers already passing binary columns). The hop itself is
-    ``mapInArrow`` feeding ``add_many_arrow`` — the mapInPandas
+    Rowkey and value columns are cast to binary JVM-side before the
+    Python hop: codegen does the UTF-8 encode once per value, so the
+    executor loop never runs per-cell Python ``str.encode`` calls (a
+    no-op for callers already passing binary columns). The hop itself
+    is ``mapInArrow`` feeding ``add_many_arrow`` — the mapInPandas
     object-array materialization was ~2 s of a ~4.7 s write wall at
     sf0.1 (A/B with a no-op executor body, round 7)."""
     import pyarrow as pa
     from pyspark.sql import functions as F
 
-    if qualifiers is None:
-        missing = [c for c in CELL_COLUMNS if c not in kv.columns]
-        if missing:
-            raise ValueError(
-                f"the cell shape needs the KV contract columns {CELL_COLUMNS}; "
-                f"missing {missing}"
-            )
-        cell_cols = {"rowkey", "family", "qualifier", "value"}
-    else:
-        cell_cols = set(kv.columns) - {"bucket"}
-        if "rowkey" not in cell_cols or len(cell_cols) != len(qualifiers) + 1:
-            raise ValueError(
-                f"{len(qualifiers)} qualifiers for the wide frame {kv.columns}"
-            )
-        qualifiers = list(qualifiers)
-    kv = kv.select(
-        *[
-            F.col(c).cast("binary").alias(c) if c in cell_cols else F.col(c)
-            for c in kv.columns
-        ]
+    cols = wide.columns
+    missing = [c for c in ("rowkey", "bucket") if c not in cols]
+    if missing:
+        raise ValueError(
+            f"the wide frame {cols} needs rowkey and bucket columns; "
+            f"missing {missing}"
+        )
+    value_cols = [c for c in cols if c not in ("rowkey", "bucket")]
+    if len(value_cols) != len(qualifiers):
+        raise ValueError(
+            f"{len(qualifiers)} qualifiers for the value columns {value_cols}"
+        )
+    qualifiers = list(qualifiers)
+    wide = wide.select(
+        *[F.col(c).cast("binary").alias(c) for c in ("rowkey", *value_cols)],
+        "bucket",
     )
 
     os.makedirs(out_dir, exist_ok=True)
 
     def write_parts(batches):
-        if qualifiers is not None:
-            batches = explode_wide_batches(batches, qualifiers)
         out = write_partition_cells_arrow(
-            batches, out_dir, task_file_label(), compression, ts
+            explode_wide_batches(batches, qualifiers, family),
+            out_dir,
+            task_file_label(),
+            compression,
         )
         yield pa.RecordBatch.from_pydict(
             {
@@ -300,7 +283,7 @@ def write_region_hfiles(
             ),
         )
 
-    manifest = kv.mapInArrow(write_parts, _MANIFEST_SCHEMA).collect()
+    manifest = wide.mapInArrow(write_parts, _MANIFEST_SCHEMA).collect()
     return [r.asDict() for r in manifest]
 
 
@@ -396,27 +379,27 @@ def do_bulk_load(
 
 
 def bulkload_to_table(
-    kv: DataFrame,
+    wide: DataFrame,
     out_dir: str,
     boundaries: list[bytes],
+    qualifiers: Sequence[bytes],
     family: str = "c",
     compression: str | None = "snappy",
-    qualifiers: Sequence[bytes] | None = None,
 ) -> list[dict]:
-    """Ops 7+9 as a sink (no read-back): executor-written region HFiles
-    staged under ``out_dir/_staging``, then doBulkLoad placement into
-    ``out_dir`` — the loaded-table layout the reference leaves behind.
-    ``kv`` must be region-aligned: region-aligned cells
-    (`operators.bulkload.region_align`), or, with ``qualifiers``, the
-    region-aligned wide rows the CLI HFile sink ships
-    (`operators.bulkload.region_align_wide`; see
-    :func:`write_region_hfiles`). Returns the per-file load manifest."""
-    spark = kv.sparkSession
+    """Ops 7+9 as a sink — the one batch write-and-load entry point:
+    executor-written region HFiles staged under ``out_dir/_staging``,
+    then doBulkLoad placement into ``out_dir`` — the loaded-table
+    layout the reference leaves behind. ``wide`` must be region-aligned
+    wide rows (`operators.bulkload.region_align_wide`) whose value
+    columns map onto ``qualifiers`` (see :func:`write_region_hfiles`);
+    every cell is written with ``family`` and placed under a store
+    directory of that name. Returns the per-file load manifest."""
+    spark = wide.sparkSession
     if os.path.exists(out_dir):
         shutil.rmtree(out_dir)
     staging = os.path.join(out_dir, "_staging")
     manifest = write_region_hfiles(
-        kv, staging, compression=compression, qualifiers=qualifiers
+        wide, staging, qualifiers, family=family, compression=compression
     )
     loaded = do_bulk_load(
         [m["path"] for m in manifest],
@@ -577,46 +560,41 @@ INDEX_KEY_SEP = "\x00"
 
 
 def build_value_index(
-    kv: DataFrame,
+    wide: DataFrame,
     qualifier: str,
     index_dir: str,
     boundaries: list[bytes] | None = None,
     compression: str | None = "snappy",
 ) -> list[dict]:
     """Phoenix-style GLOBAL secondary index, materialized: the
-    (value → base rowkey) projection of one qualifier's cells as its
-    own bulk-loaded sorted table — the stored artifact the
-    q_kv_index_lookup docstring's scale story names. Index cell =
-    (value ‖ NUL ‖ base_rowkey, family 'i', qualifier 'r',
-    value = base rowkey): the composite key makes entries unique and
-    clusters them by indexed value, so a lookup is an exact range scan.
-    Built with the SAME machinery as the base table (executor-written
-    region HFiles → doBulkLoad placement with boundary splits), so the
-    index shares the table's operational contract: compaction,
+    (value → base rowkey) projection of one value column of a
+    :func:`operators.bulkload.bulkload_wide` frame as its own
+    bulk-loaded sorted table — the stored artifact the
+    q_kv_index_lookup docstring's scale story names. One index row per
+    non-null value: rowkey = value ‖ NUL ‖ base_rowkey, one cell of
+    family 'i', qualifier 'r', value = base rowkey. The composite key
+    makes entries unique and clusters them by indexed value, so a
+    lookup is an exact range scan. Written and placed by
+    :func:`bulkload_to_table`, like the base table, so the index shares
+    the table's operational contract: boundary splits, compaction,
     multi-level block indexes, blooms, block-range scan splits."""
     from pyspark.sql import functions as F
 
-    idx = kv.filter(F.col("qualifier") == qualifier).select(
-        F.concat(
-            F.col("value"), F.lit(INDEX_KEY_SEP), F.col("rowkey")
-        ).alias("rowkey"),
-        F.lit("i").alias("family"),
-        F.lit("r").alias("qualifier"),
-        F.col("rowkey").alias("value"),
-        F.substring(F.col("value"), 1, 1).alias("bucket"),
-    )
-    from hbase_bulkload_spark.operators.bulkload import region_align
+    from hbase_bulkload_spark.operators.bulkload import region_align_wide
 
-    staging = os.path.join(index_dir, "_staging")
-    manifest = write_region_hfiles(
-        region_align(idx), staging, compression=compression
+    idx = wide.filter(F.col(qualifier).isNotNull()).select(
+        F.concat(
+            F.col(qualifier), F.lit(INDEX_KEY_SEP), F.col("rowkey")
+        ).alias("rowkey"),
+        F.col("rowkey").alias("r"),
+        F.substring(F.col(qualifier), 1, 1).alias("bucket"),
     )
-    return do_bulk_load(
-        [m["path"] for m in manifest],
+    return bulkload_to_table(
+        region_align_wide(idx),
         index_dir,
         boundaries if boundaries is not None else [b""],
+        [b"r"],
         family="i",
-        spark=kv.sparkSession,
         compression=compression,
     )
 
@@ -929,31 +907,3 @@ def compact_table(
             m["family_dir"] = fam_dir
             out.append(m)
     return out
-
-
-def bulkload_hfile_roundtrip(
-    kv: DataFrame,
-    work_dir: str,
-    boundaries: list[bytes],
-    family: str = "c",
-    compression: str | None = "snappy",
-    columns: Sequence[str] | None = None,
-) -> DataFrame:
-    """The full op-7+9 dataflow: executor-written region HFiles →
-    doBulkLoad placement (splitting any boundary-crossers) → distributed
-    read-back of the loaded table. Returns the scanned cell frame."""
-    spark = kv.sparkSession
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)
-    staging = os.path.join(work_dir, "staging")
-    table_dir = os.path.join(work_dir, "table")
-    manifest = write_region_hfiles(kv, staging, compression=compression)
-    do_bulk_load(
-        [m["path"] for m in manifest],
-        table_dir,
-        boundaries,
-        family=family,
-        spark=spark,
-        compression=compression,
-    )
-    return scan_hfiles(spark, table_dir, columns=columns)

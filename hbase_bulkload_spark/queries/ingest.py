@@ -23,9 +23,9 @@ from hbase_bulkload_spark.functions.keys import (
     zvalue,
 )
 from hbase_bulkload_spark.operators.bulkload import (
-    bulkload_kv,
     bulkload_pipeline,
-    region_align,
+    bulkload_wide,
+    region_align_wide,
 )
 from hbase_bulkload_spark.operators.kv import pivot_wide, unpivot_kv
 from hbase_bulkload_spark.session import oracle_safe
@@ -422,8 +422,8 @@ def q_bulkload_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bulkload_hfile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ops 7+9 end-to-end in the reference's ACTUAL sink format: the KV
-    pipeline's cells are written as HFile v3 files by the executors
+    """Ops 7+9 end-to-end in the reference's ACTUAL sink format: the
+    records' cells are written as HFile v3 files by the executors
     (`HFileOutputFormat2`, BulkImporterFromText.java:108-111), placed
     into a 16-region table by the `doBulkLoad` analog
     (BulkImporterFromText.java:129-130), then the loaded table is
@@ -435,15 +435,13 @@ def q_bulkload_hfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from hbase_bulkload_spark.operators.hfile_load import (
-        bulkload_hfile_roundtrip,
+        bulkload_to_table,
+        scan_hfiles,
     )
 
     oracle_safe(spark)
-    # range-partitioned alignment: 32 balanced write tasks instead of 16
-    # hash-collided ones (multiple HFiles per region are legal — minor
-    # compaction merges them; operators.bulkload.bulkload_pipeline doc)
-    kv = bulkload_pipeline(
-        records.wide9(spark, sf_dir), KEY_COLS, RECORD_COLS, range_partitions=32
+    wide, qualifiers = bulkload_wide(
+        records.wide9(spark, sf_dir), KEY_COLS, RECORD_COLS
     )
     # scratch table on tmpfs when available: the roundtrip writes + reads
     # ~2x the table's on-disk bytes per run, and routing that through a
@@ -457,10 +455,15 @@ def q_bulkload_hfile(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"hfile_load_{os.path.basename(os.path.normpath(sf_dir))}",
     )
     boundaries = [format(i, "x").encode() for i in range(16)]
+    # range-partitioned alignment: 32 balanced write tasks instead of 16
+    # hash-collided ones (multiple HFiles per region are legal — minor
+    # compaction merges them; operators.bulkload.region_align_wide doc)
+    bulkload_to_table(
+        region_align_wide(wide, range_partitions=32), work, boundaries, qualifiers
+    )
     # columns: the summary below needs only rowkey + value — decode-side
     # pruning skips the family/qualifier/ts slice work per cell
-    scanned = bulkload_hfile_roundtrip(kv, work, boundaries, columns=("value",))
-    return _hfile_bucket_summary(scanned)
+    return _hfile_bucket_summary(scan_hfiles(spark, work, columns=("value",)))
 
 
 def _hfile_bucket_summary(scanned: DataFrame) -> DataFrame:
@@ -498,22 +501,21 @@ def _hfile_artifacts(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     rebuilds. Returns (table_dir, index_dir)."""
     from hbase_bulkload_spark.operators import hfile_load as hl
 
-    root = records._fixture_path(sf_dir, "hfile_table_v1")
+    root = records._fixture_path(sf_dir, "hfile_table_v2")
     table_dir = os.path.join(root, "table")
     idx_dir = os.path.join(root, "z8_index")
     marker = os.path.join(root, "_SUCCESS")
     if not os.path.exists(marker):
         os.makedirs(root, exist_ok=True)
-        kv = bulkload_pipeline(
-            records.wide9(spark, sf_dir), KEY_COLS, RECORD_COLS,
-            range_partitions=32,
+        wide, qualifiers = bulkload_wide(
+            records.wide9(spark, sf_dir), KEY_COLS, RECORD_COLS
         )
         boundaries = [format(i, "x").encode() for i in range(16)]
-        manifest = hl.write_region_hfiles(kv, os.path.join(root, "_staging"))
-        hl.do_bulk_load(
-            [m["path"] for m in manifest], table_dir, boundaries, spark=spark
+        hl.bulkload_to_table(
+            region_align_wide(wide, range_partitions=32), table_dir, boundaries,
+            qualifiers,
         )
-        hl.build_value_index(kv, "z8", idx_dir, boundaries=boundaries)
+        hl.build_value_index(wide, "z8", idx_dir, boundaries=boundaries)
         with open(marker, "w"):
             pass
     return table_dir, idx_dir

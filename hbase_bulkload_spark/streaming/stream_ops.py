@@ -264,16 +264,20 @@ def start_bulkload_sink(cells: DataFrame, path: str, checkpoint: str):
 
 
 def start_bulkload_hfile_sink(
-    cells: DataFrame,
+    wide: DataFrame,
+    qualifiers: list[bytes],
     table_dir: str,
     checkpoint: str,
     n_buckets: int = 16,
     compression: str | None = "snappy",
 ):
-    """Stream → loaded HFile table: each microbatch is region-aligned,
-    written as executor-side region HFiles under a batch-scoped staging
-    dir (file names batch-stamped so successive loads never collide),
-    and placed by the doBulkLoad analog — HBase's own incremental
+    """Stream → loaded HFile table: each microbatch of wide rows and
+    their ``qualifiers`` (`operators.bulkload.bulkload_wide`, which is
+    narrow and attaches to a readStream source unchanged) is
+    region-aligned (`region_align_wide`), written as executor-side
+    region HFiles under a batch-scoped staging dir (file names
+    batch-stamped so successive loads never collide), and placed by
+    the doBulkLoad analog — HBase's own incremental
     bulk-load pattern. Successive batches leave overlapping files per
     region, exactly as successive `doBulkLoad` calls do on a live
     table; `hfile_load.compact_table` restores the one-sorted-file
@@ -282,14 +286,15 @@ def start_bulkload_hfile_sink(
     import shutil
 
     from hbase_bulkload_spark.operators import hfile_load
-    from hbase_bulkload_spark.operators.bulkload import region_align
+    from hbase_bulkload_spark.operators.bulkload import region_align_wide
 
     boundaries = [format(i, "x").encode() for i in range(n_buckets)]
 
     def load_batch(batch_df: DataFrame, batch_id: int) -> None:
         staging = os.path.join(table_dir, f"_staging_{batch_id:05d}")
         manifest = hfile_load.write_region_hfiles(
-            region_align(batch_df, n_buckets), staging, compression=compression
+            region_align_wide(batch_df, n_buckets), staging, qualifiers,
+            compression=compression,
         )
         paths = []
         for m in manifest:
@@ -332,7 +337,7 @@ def start_bulkload_hfile_sink(
         shutil.rmtree(staging, ignore_errors=True)
 
     return (
-        cells.writeStream.foreachBatch(load_batch)
+        wide.writeStream.foreachBatch(load_batch)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()

@@ -129,7 +129,7 @@ def test_parallelism_floor(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Wide rows through the HFile writer (the CLI HFile sink's shape)
+# Wide rows through the HFile writer (every HFile sink's shape)
 # ---------------------------------------------------------------------------
 
 def _records(spark, n_rows, n_cols, dup=1, seed=7):
@@ -161,32 +161,44 @@ def _file_cells(paths):
 
 @pytest.mark.parametrize("fidelity", [False, True], ids=["names", "reference"])
 def test_wide_writer_byte_identical_to_cells(spark, tmp_path, fidelity):
-    """Per bucket, the wide-row writer emits exactly the bytes of the
-    cell-frame writer (`region_align(bulkload_kv(...))`) on a dup-free
-    input — nulls dropped, empty strings kept, 12 qualifiers in byte
-    order — in both qualifier/key modes."""
+    """Per bucket, the wide-row writer emits exactly the bytes of a
+    reference that does not use Spark to write: the collected
+    `bulkload_kv` cells of a dup-free input, sorted per bucket by
+    (rowkey, qualifier) and written by `sources.hfile.write_hfile` —
+    nulls dropped, empty strings kept, 12 qualifiers in byte order — in
+    both qualifier/key modes."""
     from hbase_bulkload_spark.operators import hfile_load as hl
+    from hbase_bulkload_spark.sources import hfile as hf
+
+    def as_bytes(x):
+        return x.encode() if isinstance(x, str) else bytes(x)
 
     cols = [f"z{j}" for j in range(12)]
     df = _records(spark, 300, 12)
     modes = dict(raw_binary_keys=fidelity, positional_qualifiers=fidelity)
-    cells = hl.write_region_hfiles(
-        region_align(bulkload_kv(df, cols[:4], cols, **modes)),
-        str(tmp_path / "cells"),
-    )
+    per_bucket: dict[str, list] = {}
+    for r in bulkload_kv(df, cols[:4], cols, **modes).collect():
+        per_bucket.setdefault(r.bucket, []).append(
+            (as_bytes(r.rowkey), as_bytes(r.family), as_bytes(r.qualifier), 0,
+             as_bytes(r.value))
+        )
+    want = {}
+    for b, cells in per_bucket.items():
+        path = tmp_path / f"ref-{b}.hfile"
+        hf.write_hfile(
+            str(path), sorted(cells, key=lambda c: (c[0], c[2])),
+            compression="snappy",
+        )
+        want[b] = path.read_bytes()
+
     wide, quals = bulkload_wide(df, cols[:4], cols, **modes)
     rows = hl.write_region_hfiles(
         region_align_wide(wide), str(tmp_path / "wide"), qualifiers=quals
     )
-
-    def by_bucket(manifest):
-        out = {}
-        for m in manifest:
-            with open(m["path"], "rb") as f:
-                out[m["bucket"]] = f.read()
-        return out
-
-    want, got = by_bucket(cells), by_bucket(rows)
+    got = {}
+    for m in rows:
+        with open(m["path"], "rb") as f:
+            got[m["bucket"]] = f.read()
     assert len(want) == 16 and set(got) == set(want)
     for b in want:
         assert got[b] == want[b], f"bucket {b} differs"

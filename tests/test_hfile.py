@@ -8,7 +8,6 @@ read."""
 
 from __future__ import annotations
 
-import glob
 import os
 import struct
 
@@ -474,16 +473,22 @@ def test_compact_region_version_cap(tmp_path):
 # ---------------------------------------------------------------------------
 
 def test_spark_roundtrip(spark, sf_dir, tmp_path):
-    from hbase_bulkload_spark.operators.bulkload import bulkload_pipeline
+    from hbase_bulkload_spark.operators.bulkload import (
+        bulkload_pipeline,
+        bulkload_wide,
+        region_align_wide,
+    )
     from hbase_bulkload_spark.sources import records
 
-    kv = bulkload_pipeline(
+    args = (
         records.wide9(spark, sf_dir), records.RECORD_COLS[:4], records.RECORD_COLS
     )
+    kv = bulkload_pipeline(*args)
+    wide, quals = bulkload_wide(*args)
     boundaries = [format(i, "x").encode() for i in range(16)]
-    scanned = hl.bulkload_hfile_roundtrip(
-        kv, str(tmp_path / "load"), boundaries
-    )
+    out = str(tmp_path / "load")
+    hl.bulkload_to_table(region_align_wide(wide), out, boundaries, quals)
+    scanned = hl.scan_hfiles(spark, out)
     want = kv.select("rowkey", "family", "qualifier", "value").orderBy(
         "rowkey", "qualifier"
     )
@@ -548,22 +553,52 @@ def test_cli_hfile_sink(spark, tmp_path):
         assert r.rowkey.startswith(region_start)
 
 
-def test_write_region_hfiles_rejects_missing_cell_columns(spark, tmp_path):
-    """A cell-shape frame without the whole KV contract is rejected on
-    the driver, naming the missing columns, before any job starts."""
-    kv = spark.createDataFrame(
-        [("0a", "v", "0")], "rowkey string, value string, bucket string"
+def test_write_region_hfiles_rejects_missing_key_columns(spark, tmp_path):
+    """A wide frame without rowkey or bucket is rejected on the driver,
+    naming the missing column, before any job starts — also when the
+    value columns still match the qualifiers."""
+    no_bucket = spark.createDataFrame(
+        [("0a", "v")], "rowkey string, z0 string"
+    )
+    no_rowkey = spark.createDataFrame(
+        [("0a", "v", "0")], "key string, z0 string, bucket string"
     )
     out = tmp_path / "out"
     sc = spark.sparkContext
     sc.setJobGroup("hfile-missing-columns", "input check")
     try:
-        with pytest.raises(ValueError, match=r"missing \['family', 'qualifier'\]"):
-            hl.write_region_hfiles(kv, str(out))
+        with pytest.raises(ValueError, match=r"missing \['bucket'\]"):
+            hl.write_region_hfiles(no_bucket, str(out), qualifiers=[b"z0"])
+        with pytest.raises(ValueError, match=r"missing \['rowkey'\]"):
+            hl.write_region_hfiles(
+                no_rowkey, str(out), qualifiers=[b"key", b"z0"]
+            )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup("hfile-missing-columns") == []
     assert not out.exists()
+
+
+def test_bulkload_to_table_family(spark, tmp_path):
+    """One family end to end: ``bulkload_to_table(..., family="i")``
+    writes every cell with family ``i`` and places the files under
+    store directories named ``i``."""
+    from hbase_bulkload_spark.operators.bulkload import region_align_wide
+
+    wide = spark.createDataFrame(
+        [("0a", "v0", "0"), ("1b", "v1", "1")],
+        "rowkey string, r string, bucket string",
+    )
+    out = str(tmp_path / "t")
+    loaded = hl.bulkload_to_table(
+        region_align_wide(wide), out, [b"", b"1"], qualifiers=[b"r"], family="i"
+    )
+    assert {m["region"] for m in loaded} == {0, 1}
+    assert {os.path.basename(os.path.dirname(m["path"])) for m in loaded} == {"i"}
+    got = hl.scan_hfiles(spark, out).select("rowkey", "family", "qualifier")
+    assert sorted(map(tuple, got.collect())) == [
+        ("0a", "i", "r"), ("1b", "i", "r")
+    ]
 
 
 def test_spark_roundtrip_with_splits(spark, tmp_path):
@@ -574,22 +609,22 @@ def test_spark_roundtrip_with_splits(spark, tmp_path):
     pdf = pd.DataFrame(
         {
             "rowkey": [f"{i:04d}" for i in range(400)],
-            "family": "c",
-            "qualifier": "q",
-            "value": [f"v{i}" for i in range(400)],
+            "q": [f"v{i}" for i in range(400)],
         }
     )
     pdf["bucket"] = pdf.rowkey.str[0]
-    kv = spark.createDataFrame(pdf).repartition(4, "bucket").sortWithinPartitions(
-        "bucket", "rowkey", "qualifier"
+    wide = spark.createDataFrame(pdf).repartition(4, "bucket").sortWithinPartitions(
+        "bucket", "rowkey"
     )
     boundaries = [f"{i:04d}".encode() for i in range(0, 400, 50)]
-    scanned = hl.bulkload_hfile_roundtrip(kv, str(tmp_path / "load"), boundaries)
+    load = tmp_path / "load"
+    hl.bulkload_to_table(wide, str(load), boundaries, [b"q"])
+    scanned = hl.scan_hfiles(spark, str(load))
     out = scanned.select("region", "rowkey", "value").collect()
     assert len(out) == 400
     assert {r.rowkey for r in out} == set(pdf.rowkey)
-    staged = glob.glob(str(tmp_path / "load" / "staging" / "*"))
-    assert staged == []  # everything moved or replaced by halves
+    # everything moved or replaced by halves
+    assert not (load / "_staging").exists()
     # 8 regions x >=1 file each
     regions = {r.region for r in out}
     assert len(regions) == 8

@@ -11,17 +11,19 @@ from hbase_bulkload_spark.operators import hfile_load as hl
 
 @pytest.fixture(scope="module")
 def table_dir(spark, sf_dir, tmp_path_factory):
-    from hbase_bulkload_spark.operators.bulkload import bulkload_pipeline
+    from hbase_bulkload_spark.operators.bulkload import (
+        bulkload_wide,
+        region_align_wide,
+    )
     from hbase_bulkload_spark.sources import records
 
     base = tmp_path_factory.mktemp("hfile_ds")
-    kv = bulkload_pipeline(
+    wide, quals = bulkload_wide(
         records.wide9(spark, sf_dir), records.RECORD_COLS[:4], records.RECORD_COLS
     )
     boundaries = [format(i, "x").encode() for i in range(16)]
-    manifest = hl.write_region_hfiles(kv, str(base / "staging"))
-    hl.do_bulk_load(
-        [m["path"] for m in manifest], str(base / "table"), boundaries, spark=spark
+    hl.bulkload_to_table(
+        region_align_wide(wide), str(base / "table"), boundaries, quals
     )
     return str(base / "table")
 
@@ -147,19 +149,29 @@ def test_value_index_seek(spark, sf_dir, table_dir, tmp_path):
     equal the relational answer (all cells of rows whose z8 cell holds
     the value), and the index range scan must not read other values'
     entries."""
-    from hbase_bulkload_spark.operators.bulkload import bulkload_pipeline
+    from hbase_bulkload_spark.operators.bulkload import (
+        bulkload_pipeline,
+        bulkload_wide,
+    )
     from hbase_bulkload_spark.sources import records
     from pyspark.sql import functions as F
 
-    kv = bulkload_pipeline(
+    args = (
         records.wide9(spark, sf_dir), records.RECORD_COLS[:4], records.RECORD_COLS
-    ).select("rowkey", "family", "qualifier", "value", "bucket")
+    )
+    kv = bulkload_pipeline(*args).select(
+        "rowkey", "family", "qualifier", "value", "bucket"
+    )
+    wide, _ = bulkload_wide(*args)
     idx_dir = str(tmp_path / "z8_index")
     # two regions to prove boundary splitting applies to the index too
-    manifest = hl.build_value_index(kv, "z8", idx_dir, boundaries=[b"", b"5"])
+    manifest = hl.build_value_index(wide, "z8", idx_dir, boundaries=[b"", b"5"])
     assert {m["region"] for m in manifest} == {0, 1}
     assert all("/region-0000-" in m["path"] for m in manifest if m["region"] == 0)
     assert all("/region-0001-" in m["path"] for m in manifest if m["region"] == 1)
+    # one index cell per entry: family i, qualifier r
+    idx_cells = hl.scan_hfiles(spark, idx_dir).select("family", "qualifier")
+    assert [tuple(r) for r in idx_cells.distinct().collect()] == [("i", "r")]
 
     val = (
         kv.filter(F.col("qualifier") == "z8")

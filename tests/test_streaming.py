@@ -216,7 +216,7 @@ def test_stream_bulkload_hfile_sink(spark, sf_dir, tmp_path):
     import glob
 
     from hbase_bulkload_spark.operators import hfile_load
-    from hbase_bulkload_spark.operators.bulkload import bulkload_kv
+    from hbase_bulkload_spark.operators.bulkload import bulkload_kv, bulkload_wide
     from hbase_bulkload_spark.sources import records
     from hbase_bulkload_spark.sources.records import RECORD_COLS
 
@@ -228,10 +228,10 @@ def test_stream_bulkload_hfile_sink(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)  # force multiple microbatches
         .parquet(src)
     )
-    cells = stream_ops.stream_bulkload_cells(stream, RECORD_COLS[:4], RECORD_COLS)
+    wide_s, quals = bulkload_wide(stream, RECORD_COLS[:4], RECORD_COLS)
     table = str(tmp_path / "table")
     q = stream_ops.start_bulkload_hfile_sink(
-        cells, table, str(tmp_path / "ckpt_h")
+        wide_s, quals, table, str(tmp_path / "ckpt_h")
     )
     q.awaitTermination(180)
 
@@ -281,6 +281,7 @@ def test_stream_bulkload_hfile_sink_sf01(spark, tmp_path):
     import glob
 
     from hbase_bulkload_spark.operators import hfile_load
+    from hbase_bulkload_spark.operators.bulkload import bulkload_wide
     from hbase_bulkload_spark.sources import records
     from hbase_bulkload_spark.sources.records import RECORD_COLS
 
@@ -296,9 +297,11 @@ def test_stream_bulkload_hfile_sink_sf01(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    cells = stream_ops.stream_bulkload_cells(stream, RECORD_COLS[:4], RECORD_COLS)
+    wide_s, quals = bulkload_wide(stream, RECORD_COLS[:4], RECORD_COLS)
     table = str(tmp_path / "table")
-    q = stream_ops.start_bulkload_hfile_sink(cells, table, str(tmp_path / "ckpt_h"))
+    q = stream_ops.start_bulkload_hfile_sink(
+        wide_s, quals, table, str(tmp_path / "ckpt_h")
+    )
     q.awaitTermination(600)
 
     got = hfile_load.scan_hfiles(spark, table).count()

@@ -165,7 +165,7 @@ def test_bulkload_hfile_sink_survives_crash(spark, sf_dir, tmp_path, point):
     make the restarted run converge to exactly the clean-run content —
     no duplicated or lost cells."""
     from hbase_bulkload_spark.operators import hfile_load
-    from hbase_bulkload_spark.operators.bulkload import bulkload_kv
+    from hbase_bulkload_spark.operators.bulkload import bulkload_kv, bulkload_wide
     from hbase_bulkload_spark.sources import records
     from hbase_bulkload_spark.sources.records import RECORD_COLS
 
@@ -179,10 +179,8 @@ def test_bulkload_hfile_sink_survives_crash(spark, sf_dir, tmp_path, point):
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        cells = stream_ops.stream_bulkload_cells(
-            stream, RECORD_COLS[:4], RECORD_COLS
-        )
-        return stream_ops.start_bulkload_hfile_sink(cells, table, ck)
+        wide_s, quals = bulkload_wide(stream, RECORD_COLS[:4], RECORD_COLS)
+        return stream_ops.start_bulkload_hfile_sink(wide_s, quals, table, ck)
 
     table = str(tmp_path / f"htable_{point}")
     ck = str(tmp_path / f"hck_{point}")
