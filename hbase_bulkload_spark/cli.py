@@ -23,11 +23,17 @@ argument has no analog (no HBase cluster in scope); region count maps to
 `--n-buckets`.
 
 `--sink hfile` writes the reference's artifact itself: HFile v3 files
-placed into a 16-region table (`operators.hfile_load.bulkload_to_table`).
-That path exchanges and sorts WIDE rows (rowkey, bucket, one column per
-value) and explodes them into cells inside the writer task, so the
-shuffle and the Arrow hop carry each rowkey once instead of once per
-cell; `--n-buckets` then sets the number of write tasks.
+placed into a table of 16 regions, one per hex-nibble bucket, whatever
+`--n-buckets` says (`operators.hfile_load.bulkload_to_table`). That path
+exchanges and sorts WIDE rows (rowkey, bucket, one column per value) and
+explodes them into cells inside the writer task, so the shuffle and the
+Arrow hop carry each rowkey once instead of once per cell. The reference
+sizes its job by region count (one reducer per region); here the work
+is sized by the input and the cores: a text/csv/columnar/jsonl scan
+splits at about two tasks per core (`scan_split_bytes`), and the write
+runs `min(--n-buckets, 16, 2 × cores)` tasks, each writing whole
+buckets (`operators.bulkload.write_tasks`), so `--n-buckets` is only an
+upper bound on write tasks.
 
 Deviations (documented, SURVEY.md §2.2/§2.14): key columns default to
 0-3 for every format (the RC variant's out-of-bounds `value.get(20)` is
@@ -38,12 +44,31 @@ mixes positional ints and field names).
 from __future__ import annotations
 
 import argparse
+import contextlib
+import os
+import re
 import sys
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hbase_bulkload_spark.operators.bulkload import TASKS_PER_CORE
+from hbase_bulkload_spark.sources.split_planning import adaptive_split_size
+
 SOH = "\x01"  # hive default delimiter, BulkImporterFromText.java:54
+
+#: Formats scanned by Spark's file sources, whose splits the two confs
+#: below size; avro and rcfile plan their own byte-range splits.
+FILE_SOURCE_FORMATS = ("text", "csv", "columnar", "jsonl")
+MAX_PARTITION_BYTES = "spark.sql.files.maxPartitionBytes"
+OPEN_COST_BYTES = "spark.sql.files.openCostInBytes"
+#: Smallest scan split, and the per-file open cost the split planner
+#: counts: an input below this is one scan task. Small next to the
+#: split of a few-MB input, so that input's last split is not much
+#: shorter than the others (at local[2] a 2.46 MB CSV cuts into 3 ×
+#: 679 KB + 417 KB).
+SCAN_SPLIT_FLOOR = 256 << 10
+_BYTE_UNITS = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
 
 
 def _cols(n: int) -> list[str]:
@@ -149,6 +174,70 @@ def read_rcfile(spark: SparkSession, path: str, n_columns: int) -> DataFrame:
     return rcfile.scan_splits(spark, path, _cols(n_columns))
 
 
+def input_file_sizes(path: str) -> list[int] | None:
+    """Sizes of the files a scan of ``path`` lists — a local file, or
+    every file under a local directory whose name does not start with
+    ``_`` or ``.`` (Spark skips those); ``None`` when ``path`` is not a
+    local path (a URI or a glob)."""
+    if os.path.isfile(path):
+        return [os.path.getsize(path)]
+    if not os.path.isdir(path):
+        return None
+    sizes = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        sizes += [
+            os.path.getsize(os.path.join(root, f))
+            for f in files
+            if not f.startswith(("_", "."))
+        ]
+    return sizes
+
+
+def _conf_bytes(spark: SparkSession, key: str) -> int:
+    """A byte-size conf ("134217728b", "64m", "1g") in bytes."""
+    m = re.fullmatch(r"(\d+)([kmgtp]?)b?", spark.conf.get(key).strip().lower())
+    return int(m[1]) << _BYTE_UNITS[m[2]]
+
+
+def scan_split_bytes(spark: SparkSession, sizes: list[int]) -> int:
+    """Scan split size for files of ``sizes`` bytes: Spark's own
+    maxSplitBytes formula (`split_planning.adaptive_split_size`, each
+    file counted with an open cost) aimed at ``TASKS_PER_CORE`` tasks
+    per core, with :data:`SCAN_SPLIT_FLOOR` as the open cost and floor
+    instead of the 4 MiB default (which kept a 2.4 MB CSV in one task),
+    capped at the session's maxPartitionBytes."""
+    return adaptive_split_size(
+        sum(sizes) + len(sizes) * SCAN_SPLIT_FLOOR,
+        spark.sparkContext.defaultParallelism * TASKS_PER_CORE,
+        max_split=_conf_bytes(spark, MAX_PARTITION_BYTES),
+        open_cost=SCAN_SPLIT_FLOOR,
+    )
+
+
+@contextlib.contextmanager
+def _scan_splits(spark: SparkSession, split_bytes: int | None):
+    """File scans planned inside split at ``split_bytes``, with
+    :data:`SCAN_SPLIT_FLOOR` as the per-file open cost. ``None``, or a
+    split at the session's maxPartitionBytes cap, leaves the confs
+    alone, so a large input plans as it always did. Spark reads the
+    two file confs when it plans an action (a per-read
+    maxPartitionBytes option is ignored in 4.1), so they are set around
+    the action and restored after it, as `write_bulkload` does for
+    partition coalescing."""
+    if split_bytes is None or split_bytes >= _conf_bytes(spark, MAX_PARTITION_BYTES):
+        yield
+        return
+    prior = {k: spark.conf.get(k) for k in (MAX_PARTITION_BYTES, OPEN_COST_BYTES)}
+    spark.conf.set(MAX_PARTITION_BYTES, str(split_bytes))
+    spark.conf.set(OPEN_COST_BYTES, str(SCAN_SPLIT_FLOOR))
+    try:
+        yield
+    finally:
+        for k, v in prior.items():
+            spark.conf.set(k, v)
+
+
 def ingest(
     spark: SparkSession,
     input_path: str,
@@ -167,15 +256,23 @@ def ingest(
     """One importer run, end to end (the `run()` body of each reference
     entry point, SURVEY.md §3.1, as a single Spark plan).
 
-    ``collect_metrics=True`` attaches `Observation`s so the run returns
-    {n_input, n_valid, n_skipped} accumulated during the single pass —
-    the reference's skip-log side channel without a second job (text/csv
-    formats; the schema-gated formats have no row-skip path)."""
+    Task sizing: a file-source scan (text, csv, columnar, jsonl) of a
+    local input splits at :func:`scan_split_bytes`; the HFile sink
+    writes with ``operators.bulkload.write_tasks(spark, n_buckets)``
+    tasks, the parquet sink with ``n_buckets``.
+
+    ``collect_metrics=True`` returns that sizing decision —
+    {input_bytes, scan_split_bytes, write_tasks}, ``None`` for what was
+    not sized here — and, for text/csv, attaches `Observation`s so the
+    run also returns {n_input, n_valid, n_skipped} accumulated during
+    the single pass: the reference's skip-log side channel without a
+    second job (the schema-gated formats have no row-skip path)."""
     from hbase_bulkload_spark.operators.bulkload import (
         bulkload_kv,
         bulkload_wide,
         region_align_wide,
         write_bulkload,
+        write_tasks,
     )
 
     obs_in = obs_valid = None
@@ -207,55 +304,69 @@ def ingest(
     fidelity = dict(
         raw_binary_keys=raw_binary_keys, positional_qualifiers=positional_qualifiers
     )
-    if sink == "hfile":
-        from hbase_bulkload_spark.operators.hfile_load import bulkload_to_table
+    sizes = input_file_sizes(input_path)
+    split_bytes = (
+        scan_split_bytes(spark, sizes)
+        if fmt in FILE_SOURCE_FORMATS and sizes is not None
+        else None
+    )
+    sizing = {
+        "input_bytes": sum(sizes) if sizes is not None else None,
+        "scan_split_bytes": split_bytes,
+        "write_tasks": write_tasks(spark, n_buckets) if sink == "hfile" else n_buckets,
+    }
+    with _scan_splits(spark, split_bytes):
+        if sink == "hfile":
+            from hbase_bulkload_spark.operators.hfile_load import bulkload_to_table
 
-        # region boundaries = the 16 hex-nibble buckets the key layer
-        # emits (create_table.rb:1 pre-splits analogously on '0'..'9');
-        # raw-key mode buckets on the digest's first nibble, so the
-        # byte boundaries are the same fences over raw bytes
-        boundaries = (
-            [bytes([i << 4]) for i in range(16)]
-            if raw_binary_keys
-            else [format(i, "x").encode() for i in range(16)]
-        )
-        if raw_binary_keys:
-            boundaries[0] = b""  # region 0 starts at the empty key
-        # wide rows cross the exchange and the Arrow hop; the writer
-        # tasks explode them into cells
-        wide, qualifiers = bulkload_wide(df, keys, cols, **fidelity)
-        bulkload_to_table(
-            region_align_wide(wide, n_buckets), output_path, boundaries,
-            qualifiers=qualifiers,
-        )
-    else:
-        write_bulkload(
-            bulkload_kv(df, key_cols=keys, value_cols=cols, **fidelity),
-            output_path,
-            n_buckets=n_buckets,
-        )
+            # region boundaries = the 16 hex-nibble buckets the key layer
+            # emits (create_table.rb:1 pre-splits analogously on '0'..'9');
+            # raw-key mode buckets on the digest's first nibble, so the
+            # byte boundaries are the same fences over raw bytes
+            boundaries = (
+                [bytes([i << 4]) for i in range(16)]
+                if raw_binary_keys
+                else [format(i, "x").encode() for i in range(16)]
+            )
+            if raw_binary_keys:
+                boundaries[0] = b""  # region 0 starts at the empty key
+            # wide rows cross the exchange and the Arrow hop; the writer
+            # tasks explode them into cells
+            wide, qualifiers = bulkload_wide(df, keys, cols, **fidelity)
+            bulkload_to_table(
+                region_align_wide(wide, n_buckets), output_path, boundaries,
+                qualifiers=qualifiers,
+            )
+        else:
+            write_bulkload(
+                bulkload_kv(df, key_cols=keys, value_cols=cols, **fidelity),
+                output_path,
+                n_buckets=n_buckets,
+            )
 
     if fix_permissions is not None:  # op 8 post-processing (reference: 0o777)
         from hbase_bulkload_spark.sources.fsutil import set_permissions_recursive
 
         set_permissions_recursive(output_path, fix_permissions)
 
-    if obs_in is not None:
-        n_input = obs_in.get["n_input"]
-        n_valid = obs_valid.get["n_valid"]
-        metrics = {
-            "n_input": n_input,
-            "n_valid": n_valid,
-            "n_skipped": n_input - n_valid,
-        }
-        # the reference's "skipping record" println, aggregated
-        print(
-            f"ingest: {n_input} records in, {n_valid} valid, "
-            f"{metrics['n_skipped']} skipped",
-            file=sys.stderr,
-        )
-        return metrics
-    return None
+    if not collect_metrics:
+        return None
+    if obs_in is None:
+        return sizing
+    n_input = obs_in.get["n_input"]
+    n_valid = obs_valid.get["n_valid"]
+    # the reference's "skipping record" println, aggregated
+    print(
+        f"ingest: {n_input} records in, {n_valid} valid, "
+        f"{n_input - n_valid} skipped",
+        file=sys.stderr,
+    )
+    return {
+        "n_input": n_input,
+        "n_valid": n_valid,
+        "n_skipped": n_input - n_valid,
+        **sizing,
+    }
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -284,8 +395,9 @@ def main(argv: list[str] | None = None) -> int:
         "--n-buckets",
         type=int,
         default=16,
-        help="output buckets (default 16); with --sink hfile, the number "
-        "of write tasks — the table always has 16 regions",
+        help="output buckets (default 16); with --sink hfile, an upper "
+        "bound on write tasks, which follow the cores (at most 2 per "
+        "core) — the table always has 16 regions, one file each",
     )
     p.add_argument(
         "--sink",

@@ -11,14 +11,17 @@ Reference dataflow being re-expressed:
 - Regions are pre-split 10 ways on '0'..'9' (`create_table.rb:1`).
 
 Spark-first: the bucket is an *explicit column* (first hex char of the
-uniformly-distributed MD5 key — 16-way by default; the reference's raw
-digest bytes vs ASCII splits mismatch is a documented deviation,
-SURVEY.md §2.14 note). `repartition(n, bucket)` + `sortWithinPartitions`
-reproduces the region-aligned sorted-file contract with exactly one
-shuffle, and the key's uniform distribution makes that shuffle skew-free
-by construction — the property that survives a 100 TB scale-up. Bucket
-count is a parameter (the reference hardcodes 10, `RowKeyConverter.java:8`);
-at cluster scale set it from data volume, not region count.
+uniformly-distributed MD5 key — 16-way; the reference's raw digest bytes
+vs ASCII splits mismatch is a documented deviation, SURVEY.md §2.14
+note). One bucket exchange + `sortWithinPartitions` reproduces the
+region-aligned sorted-file contract with exactly one shuffle, and the
+key's uniform distribution makes that shuffle skew-free by construction
+— the property that survives a 100 TB scale-up. The parquet sinks hash
+the bucket into ``n_buckets`` partitions (`region_align`); the HFile
+sinks map the 16 buckets onto :func:`write_tasks` partitions by value
+(`region_align_wide`), so the write task count follows the cores, not
+the region count (the reference hardcodes 10 regions,
+`RowKeyConverter.java:8`).
 
 Every HFile sink exchanges wide rows: `bulkload_wide` →
 `region_align_wide` moves one shuffled record per input row, and the
@@ -34,7 +37,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hbase_bulkload_spark.functions.keys import (
@@ -44,6 +47,14 @@ from hbase_bulkload_spark.functions.keys import (
     raw_binary_rowkey,
 )
 from hbase_bulkload_spark.operators.kv import CURRENT_FAMILY, unpivot_kv
+
+#: Tasks per core for an ingest's scan splits (`cli.ingest`) and HFile
+#: write partitions (:func:`write_tasks`). At ``local[2]`` on a 4-vCPU
+#: VM, 2 per core (4 scan + 4 write tasks) ran perfbench's 30k-row
+#: CSV → HFile ingest at a median 32.3k rows/s, against 23.2k with
+#: 1 scan task and 16 hash-partitioned write tasks (10 seeds each,
+#: PySpark's DataFrame debugging on in both).
+TASKS_PER_CORE = 2
 
 
 def _rowkey(key_cols: Sequence[str], raw_binary_keys: bool) -> Column:
@@ -179,29 +190,31 @@ def region_align(kv: DataFrame, n_buckets: int = 16) -> DataFrame:
     )
 
 
-def region_align_wide(
-    wide: DataFrame, n_buckets: int = 16, range_partitions: int | None = None
-) -> DataFrame:
-    """:func:`region_align` for the wide frame of :func:`bulkload_wide`:
-    the same one bucket exchange, moving one row per record instead of
-    one per cell, sorted within partitions by (bucket, rowkey). Cell
-    order within a row is the writer's job
-    (`hfile_load.write_region_hfiles`).
+def write_tasks(spark: SparkSession, n_buckets: int) -> int:
+    """Write partitions of :func:`region_align_wide`: ``n_buckets``
+    capped at the 16 hex-nibble buckets and at :data:`TASKS_PER_CORE`
+    per core of the session's default parallelism."""
+    cores = spark.sparkContext.defaultParallelism
+    return max(1, min(n_buckets, 16, cores * TASKS_PER_CORE))
 
-    ``range_partitions`` switches the exchange to
-    ``repartitionByRange(n, rowkey)`` — for sinks that allow multiple
-    files per region (HFile bulk load does; minor compaction merges
-    them). Hash-partitioning 16 bucket labels into 16 partitions leaves
-    collision stragglers holding 2-3 buckets each (observed: ~10 of 16
-    partitions occupied); range partitioning balances write tasks and
-    lets the partition count exceed the region count. Since the bucket
-    is the rowkey's first hex char, rowkey ranges never interleave
-    buckets — each task still writes whole sorted bucket fragments."""
-    if range_partitions is not None:
-        wide = wide.repartitionByRange(range_partitions, "rowkey")
-    else:
-        wide = wide.repartition(n_buckets, "bucket")
-    return wide.sortWithinPartitions("bucket", "rowkey")
+
+def region_align_wide(wide: DataFrame, n_buckets: int = 16) -> DataFrame:
+    """:func:`region_align` for the wide frame of :func:`bulkload_wide`:
+    one exchange moving one row per record instead of one per cell,
+    sorted within partitions by (bucket, rowkey). Cell order within a
+    row is the writer's job (`hfile_load.write_region_hfiles`).
+
+    The exchange is ``repartitionById``: bucket nibble ``b`` goes to
+    partition ``b * n // 16`` of ``n =`` :func:`write_tasks`, so each
+    partition holds a contiguous run of whole buckets — no hash
+    collisions, no empty tasks, and still one HFile per bucket with the
+    bytes a one-bucket-per-task write gives. Contract: ``bucket`` is
+    one hex digit that is monotone in the rowkey (the rowkey's first
+    hex nibble, or any order-preserving nibble of it); a row whose
+    bucket is not hex goes to partition 0."""
+    n = write_tasks(wide.sparkSession, n_buckets)
+    part = F.expr(f"CAST(conv(bucket, 16, 10) AS INT) * {n} DIV 16").cast("int")
+    return wide.repartitionById(n, part).sortWithinPartitions("bucket", "rowkey")
 
 
 def write_bulkload(kv: DataFrame, path: str, n_buckets: int = 16) -> None:

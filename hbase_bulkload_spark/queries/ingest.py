@@ -9,7 +9,11 @@ scan round-trips and key derivations are checked value-for-value.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -421,6 +425,20 @@ def q_bulkload_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bulkload_pipeline(records.wide9(spark, sf_dir), KEY_COLS, RECORD_COLS)
 
 
+@functools.cache
+def scratch_root() -> str:
+    """This process's scratch directory for verification tables, removed
+    at exit: on tmpfs (``/dev/shm``) when writable, else in the temp
+    directory. A write→load→read roundtrip moves ~2x the table's bytes,
+    and through a disk-backed /tmp its time was mostly page-cache luck
+    (observed 11-30 s swings at sf0.1). The table outlives the query
+    call because the returned frame reads it lazily."""
+    parent = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
+    path = tempfile.mkdtemp(prefix="hbase-bulkload-", dir=parent)
+    atexit.register(shutil.rmtree, path, True)
+    return path
+
+
 def q_bulkload_hfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ops 7+9 end-to-end in the reference's ACTUAL sink format: the
     records' cells are written as HFile v3 files by the executors
@@ -432,8 +450,6 @@ def q_bulkload_hfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same per-bucket summary relationally from the raw table, so a
     green row certifies the whole write→load→read round trip
     value-for-value."""
-    import tempfile
-
     from hbase_bulkload_spark.operators.hfile_load import (
         bulkload_to_table,
         scan_hfiles,
@@ -443,24 +459,11 @@ def q_bulkload_hfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide, qualifiers = bulkload_wide(
         records.wide9(spark, sf_dir), KEY_COLS, RECORD_COLS
     )
-    # scratch table on tmpfs when available: the roundtrip writes + reads
-    # ~2x the table's on-disk bytes per run, and routing that through a
-    # spinning /tmp makes the measured time mostly disk-cache luck
-    # (observed 11-30 s swings at sf0.1). The table is a verification
-    # scratch artifact, not a deliverable — a real deployment hands the
-    # HFiles to HDFS, not local disk.
-    scratch_root = "/dev/shm" if os.access("/dev/shm", os.W_OK) else tempfile.gettempdir()
     work = os.path.join(
-        scratch_root,
-        f"hfile_load_{os.path.basename(os.path.normpath(sf_dir))}",
+        scratch_root(), f"hfile_load_{os.path.basename(os.path.normpath(sf_dir))}"
     )
     boundaries = [format(i, "x").encode() for i in range(16)]
-    # range-partitioned alignment: 32 balanced write tasks instead of 16
-    # hash-collided ones (multiple HFiles per region are legal — minor
-    # compaction merges them; operators.bulkload.region_align_wide doc)
-    bulkload_to_table(
-        region_align_wide(wide, range_partitions=32), work, boundaries, qualifiers
-    )
+    bulkload_to_table(region_align_wide(wide), work, boundaries, qualifiers)
     # columns: the summary below needs only rowkey + value — decode-side
     # pruning skips the family/qualifier/ts slice work per cell
     return _hfile_bucket_summary(scan_hfiles(spark, work, columns=("value",)))
@@ -501,7 +504,7 @@ def _hfile_artifacts(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     rebuilds. Returns (table_dir, index_dir)."""
     from hbase_bulkload_spark.operators import hfile_load as hl
 
-    root = records._fixture_path(sf_dir, "hfile_table_v2")
+    root = records._fixture_path(sf_dir, "hfile_table_v3")
     table_dir = os.path.join(root, "table")
     idx_dir = os.path.join(root, "z8_index")
     marker = os.path.join(root, "_SUCCESS")
@@ -512,8 +515,7 @@ def _hfile_artifacts(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         )
         boundaries = [format(i, "x").encode() for i in range(16)]
         hl.bulkload_to_table(
-            region_align_wide(wide, range_partitions=32), table_dir, boundaries,
-            qualifiers,
+            region_align_wide(wide), table_dir, boundaries, qualifiers
         )
         hl.build_value_index(wide, "z8", idx_dir, boundaries=boundaries)
         with open(marker, "w"):

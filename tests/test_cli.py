@@ -364,3 +364,121 @@ def test_cli_hfile_sink_null_and_empty_fields(spark, tmp_path):
     assert {f for cells in _table_cells(out) for _rk, f, _q, _v in cells} == {"c"}
     assert got == {("a", "z0"), ("b", "z1"), ("", "z3"),
                    ("c", "z0"), ("d", "z1"), ("x", "z3")}
+
+
+def _spread_csv(path, n_rows, seed=5):
+    """3-column CSV lines of random length, every 50th short (skipped by
+    the arity gate); returns (bytes, n_valid)."""
+    import random
+
+    rng = random.Random(seed)
+    lines, n_valid = [], 0
+    for i in range(n_rows):
+        fields = [str(i)] + ["v" * rng.randrange(1, 60) for _ in range(2)]
+        if i % 50 == 0:
+            fields = fields[:2]
+        else:
+            n_valid += 1
+        lines.append(",".join(fields))
+    data = ("\n".join(lines) + "\n").encode()
+    with open(path, "wb") as fh:
+        fh.write(data)
+    return data, n_valid
+
+
+def test_ingest_csv_scan_splits_exact_counts(spark, tmp_path):
+    """A CSV planned into several scan splits, with lines straddling
+    every split offset, counts each line once: n_input, n_valid and the
+    loaded cells are exact. The run reports its sizing decision."""
+    src = str(tmp_path / "in.csv")
+    data, n_valid = _spread_csv(src, 30_000)
+    out = str(tmp_path / "table")
+    m = cli.ingest(
+        spark, src, out, fmt="csv", n_columns=3, key_cols=[0], sink="hfile",
+        collect_metrics=True,
+    )
+    split = m["scan_split_bytes"]
+    assert m["input_bytes"] == len(data)
+    assert split == cli.scan_split_bytes(spark, [len(data)])
+    assert m["write_tasks"] == min(16, spark.sparkContext.defaultParallelism * 2)
+    offsets = range(split, len(data), split)
+    assert len(offsets) >= 1  # ≥ 2 splits
+    assert all(data[o - 1] != ord("\n") for o in offsets)  # mid-line cuts
+    with cli._scan_splits(spark, split):
+        assert spark.read.text(src).rdd.getNumPartitions() == len(offsets) + 1
+    assert (m["n_input"], m["n_valid"]) == (30_000, n_valid)
+    assert m["n_skipped"] == 30_000 - n_valid
+    assert sum(len(cells) for cells in _table_cells(out)) == 3 * n_valid
+
+
+def test_hfile_write_tasks_map_buckets(spark, tmp_path, monkeypatch):
+    """At local[2]'s default parallelism the HFile sink writes with
+    2 × 2 = 4 tasks, each holding a contiguous run of 4 whole buckets:
+    16 HFiles, one per bucket, and do_bulk_load splits none of them."""
+    import glob
+
+    from pyspark import SparkContext
+
+    from hbase_bulkload_spark.operators import hfile_load as hl
+
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda _: 2))
+    written = []
+    write = hl.write_region_hfiles
+
+    def spy(*args, **kwargs):
+        written.extend(write(*args, **kwargs))
+        return written
+
+    monkeypatch.setattr(hl, "write_region_hfiles", spy)
+    src = str(tmp_path / "in.csv")
+    _spread_csv(src, 4_000)
+    out = str(tmp_path / "table")
+    sc = spark.sparkContext
+    sc.setJobGroup("hfile-write-tasks", "write stage shape")
+    try:
+        m = cli.ingest(
+            spark, src, out, fmt="csv", n_columns=3, key_cols=[0], sink="hfile",
+            collect_metrics=True,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert m["write_tasks"] == 4
+    jobs = sc.statusTracker().getJobIdsForGroup("hfile-write-tasks")
+    write_stage = max(s for j in jobs for s in sc.statusTracker().getJobInfo(j).stageIds)
+    assert sc.statusTracker().getStageInfo(write_stage).numTasks == 4
+    task_of = {w["bucket"]: os.path.basename(w["path"]).split("-")[1] for w in written}
+    assert len(written) == len(task_of) == 16
+    assert {b: int(t) for b, t in task_of.items()} == {
+        format(i, "x"): i * 4 // 16 for i in range(16)
+    }
+    loaded = glob.glob(os.path.join(out, "region-*", "c", "*.hfile"))
+    assert sorted(map(os.path.basename, loaded)) == sorted(
+        os.path.basename(w["path"]) for w in written
+    )
+
+
+def test_ingest_restores_file_confs(spark, tmp_path, monkeypatch):
+    """The scan split confs hold the sized values during the action and
+    their prior values after it, also when the action raises."""
+    from hbase_bulkload_spark.operators import hfile_load as hl
+
+    keys = (cli.MAX_PARTITION_BYTES, cli.OPEN_COST_BYTES)
+    before = {k: spark.conf.get(k) for k in keys}
+    src = str(tmp_path / "in.csv")
+    _spread_csv(src, 20_000)
+    kwargs = dict(fmt="csv", n_columns=3, key_cols=[0], sink="hfile", collect_metrics=True)
+    m = cli.ingest(spark, src, str(tmp_path / "t1"), **kwargs)
+    assert {k: spark.conf.get(k) for k in keys} == before
+
+    during = {}
+
+    def fail(*args, **kw):
+        during.update({k: spark.conf.get(k) for k in keys})
+        raise RuntimeError("write failed")
+
+    monkeypatch.setattr(hl, "bulkload_to_table", fail)
+    with pytest.raises(RuntimeError, match="write failed"):
+        cli.ingest(spark, src, str(tmp_path / "t2"), **kwargs)
+    assert during[cli.MAX_PARTITION_BYTES] == str(m["scan_split_bytes"])
+    assert during != before
+    assert {k: spark.conf.get(k) for k in keys} == before

@@ -849,3 +849,29 @@ def test_adaptive_split_bytes_clamps_and_targets():
         <= hl._adaptive_split_bytes(1 << 40, None)
         <= hl.MAX_SPLIT_BYTES
     )
+
+
+def test_q_bulkload_hfile_table_in_scratch_root(spark, sf_dir):
+    """q_bulkload_hfile's table sits in the per-process scratch root,
+    which is removed when the process exits."""
+    import glob
+    import subprocess
+    import sys
+
+    from hbase_bulkload_spark.queries import ingest
+
+    df = ingest.q_bulkload_hfile(spark, sf_dir)
+    work = os.path.join(
+        ingest.scratch_root(), f"hfile_load_{os.path.basename(os.path.normpath(sf_dir))}"
+    )
+    assert len(glob.glob(os.path.join(work, "region-*", "c", "*.hfile"))) == 16
+    assert df.count() == 16  # the lazy frame reads the live table
+
+    root = subprocess.run(
+        [sys.executable, "-c",
+         "from hbase_bulkload_spark.queries.ingest import scratch_root; "
+         "print(scratch_root())"],
+        capture_output=True, text=True, check=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    ).stdout.strip()
+    assert root and not os.path.exists(root)
