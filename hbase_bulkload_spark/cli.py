@@ -29,8 +29,8 @@ exchanges and sorts WIDE rows (rowkey, bucket, one column per value) and
 explodes them into cells inside the writer task, so the shuffle and the
 Arrow hop carry each rowkey once instead of once per cell. The reference
 sizes its job by region count (one reducer per region); here the work
-is sized by the input and the cores: a text/csv/columnar/jsonl scan
-splits at about two tasks per core (`scan_split_bytes`), and the write
+is sized by the input and the cores: a text/csv scan splits at about
+two tasks per core (`_scan_splits`), and the write
 runs `min(--n-buckets, 16, 2 × cores)` tasks, each writing whole
 buckets (`operators.bulkload.write_tasks`), so `--n-buckets` is only an
 upper bound on write tasks.
@@ -45,30 +45,28 @@ from __future__ import annotations
 
 import argparse
 import contextlib
-import os
-import re
 import sys
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hbase_bulkload_spark.operators.bulkload import TASKS_PER_CORE
-from hbase_bulkload_spark.sources.split_planning import adaptive_split_size
 
 SOH = "\x01"  # hive default delimiter, BulkImporterFromText.java:54
 
-#: Formats scanned by Spark's file sources, whose splits the two confs
-#: below size; avro and rcfile plan their own byte-range splits.
-FILE_SOURCE_FORMATS = ("text", "csv", "columnar", "jsonl")
-MAX_PARTITION_BYTES = "spark.sql.files.maxPartitionBytes"
+#: Formats whose scan is sized here: the delimited-text ones, both read
+#: with ``spark.read.text``. A columnar split cannot cross a row group,
+#: so cutting a small ORC/parquet file finer only adds empty tasks;
+#: avro and rcfile plan their own byte-range splits.
+SIZED_SCAN_FORMATS = ("text", "csv")
 OPEN_COST_BYTES = "spark.sql.files.openCostInBytes"
+MIN_PARTITION_NUM = "spark.sql.files.minPartitionNum"
 #: Smallest scan split, and the per-file open cost the split planner
 #: counts: an input below this is one scan task. Small next to the
 #: split of a few-MB input, so that input's last split is not much
 #: shorter than the others (at local[2] a 2.46 MB CSV cuts into 3 ×
 #: 679 KB + 417 KB).
 SCAN_SPLIT_FLOOR = 256 << 10
-_BYTE_UNITS = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
 
 
 def _cols(n: int) -> list[str]:
@@ -94,9 +92,7 @@ def read_text(
     exactly-once per action)."""
     cols = _cols(n_columns)
     parts = F.split(F.col("value"), sep)
-    lines = spark.read.text(path)
-    if observation is not None:
-        lines = lines.observe(observation, F.count(F.lit(1)).alias("n_input"))
+    lines = _observe_lines(spark.read.text(path), observation)
     return (
         lines.select(parts.alias("p"))
         .filter(F.size("p") == n_columns)
@@ -126,9 +122,7 @@ def read_csv(
     """
     cols = _cols(n_columns)
     parts = F.split(F.regexp_replace(F.col("value"), ",+$", ""), ",", -1)
-    lines = spark.read.text(path)
-    if observation is not None:
-        lines = lines.observe(observation, F.count(F.lit(1)).alias("n_input"))
+    lines = _observe_lines(spark.read.text(path), observation)
     return (
         lines.select(parts.alias("p"))
         .filter(F.size("p") == n_columns)
@@ -174,68 +168,53 @@ def read_rcfile(spark: SparkSession, path: str, n_columns: int) -> DataFrame:
     return rcfile.scan_splits(spark, path, _cols(n_columns))
 
 
-def input_file_sizes(path: str) -> list[int] | None:
-    """Sizes of the files a scan of ``path`` lists — a local file, or
-    every file under a local directory whose name does not start with
-    ``_`` or ``.`` (Spark skips those); ``None`` when ``path`` is not a
-    local path (a URI or a glob)."""
-    if os.path.isfile(path):
-        return [os.path.getsize(path)]
-    if not os.path.isdir(path):
-        return None
-    sizes = []
-    for root, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        sizes += [
-            os.path.getsize(os.path.join(root, f))
-            for f in files
-            if not f.startswith(("_", "."))
-        ]
-    return sizes
-
-
-def _conf_bytes(spark: SparkSession, key: str) -> int:
-    """A byte-size conf ("134217728b", "64m", "1g") in bytes."""
-    m = re.fullmatch(r"(\d+)([kmgtp]?)b?", spark.conf.get(key).strip().lower())
-    return int(m[1]) << _BYTE_UNITS[m[2]]
-
-
-def scan_split_bytes(spark: SparkSession, sizes: list[int]) -> int:
-    """Scan split size for files of ``sizes`` bytes: Spark's own
-    maxSplitBytes formula (`split_planning.adaptive_split_size`, each
-    file counted with an open cost) aimed at ``TASKS_PER_CORE`` tasks
-    per core, with :data:`SCAN_SPLIT_FLOOR` as the open cost and floor
-    instead of the 4 MiB default (which kept a 2.4 MB CSV in one task),
-    capped at the session's maxPartitionBytes."""
-    return adaptive_split_size(
-        sum(sizes) + len(sizes) * SCAN_SPLIT_FLOOR,
-        spark.sparkContext.defaultParallelism * TASKS_PER_CORE,
-        max_split=_conf_bytes(spark, MAX_PARTITION_BYTES),
-        open_cost=SCAN_SPLIT_FLOOR,
+def _observe_lines(lines: DataFrame, observation) -> DataFrame:
+    """``lines`` counted into ``observation`` (n_input) as they are
+    scanned, with the highest scan partition that read a line
+    (last_scan_task), so a run reports the scan tasks it ran."""
+    if observation is None:
+        return lines
+    return lines.observe(
+        observation,
+        F.count(F.lit(1)).alias("n_input"),
+        F.max(F.spark_partition_id()).alias("last_scan_task"),
     )
 
 
+def _input_bytes(df: DataFrame) -> int:
+    """Bytes of the files the one file scan under ``df`` lists: the size
+    statistic of its leaf relation, as Spark's file index summed it."""
+    return df._jdf.queryExecution().analyzed().collectLeaves().head().stats().sizeInBytes()
+
+
 @contextlib.contextmanager
-def _scan_splits(spark: SparkSession, split_bytes: int | None):
-    """File scans planned inside split at ``split_bytes``, with
-    :data:`SCAN_SPLIT_FLOOR` as the per-file open cost. ``None``, or a
-    split at the session's maxPartitionBytes cap, leaves the confs
-    alone, so a large input plans as it always did. Spark reads the
-    two file confs when it plans an action (a per-read
-    maxPartitionBytes option is ignored in 4.1), so they are set around
-    the action and restored after it, as `write_bulkload` does for
-    partition coalescing."""
-    if split_bytes is None or split_bytes >= _conf_bytes(spark, MAX_PARTITION_BYTES):
-        yield
-        return
-    prior = {k: spark.conf.get(k) for k in (MAX_PARTITION_BYTES, OPEN_COST_BYTES)}
-    spark.conf.set(MAX_PARTITION_BYTES, str(split_bytes))
-    spark.conf.set(OPEN_COST_BYTES, str(SCAN_SPLIT_FLOOR))
+def _scan_splits(spark: SparkSession):
+    """File scans planned inside aim at :data:`TASKS_PER_CORE` tasks per
+    core. Spark's planner splits at ``min(maxPartitionBytes,
+    max(openCostInBytes, Σ(file + openCostInBytes) / minPartitionNum))``;
+    with minPartitionNum at that task count and
+    :data:`SCAN_SPLIT_FLOOR` as the open cost instead of 4 MiB (which
+    kept a 2.4 MB CSV in one task), a few-MB input splits by the cores,
+    an input below the floor stays one task, and a large one still
+    splits at maxPartitionBytes. Spark reads the file confs when it
+    plans an action (a per-read maxPartitionBytes option is ignored in
+    4.1), so they are set around the action and restored after it, as
+    `write_bulkload` does for partition coalescing."""
+    conf = {
+        OPEN_COST_BYTES: str(SCAN_SPLIT_FLOOR),
+        MIN_PARTITION_NUM: str(spark.sparkContext.defaultParallelism * TASKS_PER_CORE),
+    }
+    prior = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
         for k, v in prior.items():
-            spark.conf.set(k, v)
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def ingest(
@@ -256,17 +235,19 @@ def ingest(
     """One importer run, end to end (the `run()` body of each reference
     entry point, SURVEY.md §3.1, as a single Spark plan).
 
-    Task sizing: a file-source scan (text, csv, columnar, jsonl) of a
-    local input splits at :func:`scan_split_bytes`; the HFile sink
-    writes with ``operators.bulkload.write_tasks(spark, n_buckets)``
-    tasks, the parquet sink with ``n_buckets``.
+    Task sizing: a text/csv scan splits at about
+    :data:`TASKS_PER_CORE` tasks per core (:func:`_scan_splits`); the
+    HFile sink writes with ``operators.bulkload.write_tasks(spark,
+    n_buckets)`` tasks, the parquet sink with ``n_buckets``.
 
-    ``collect_metrics=True`` returns that sizing decision —
-    {input_bytes, scan_split_bytes, write_tasks}, ``None`` for what was
-    not sized here — and, for text/csv, attaches `Observation`s so the
-    run also returns {n_input, n_valid, n_skipped} accumulated during
-    the single pass: the reference's skip-log side channel without a
-    second job (the schema-gated formats have no row-skip path)."""
+    ``collect_metrics=True`` returns that sizing —
+    {input_bytes, scan_tasks, write_tasks}, ``None`` for what was not
+    sized here — and, for text/csv, attaches `Observation`s so the run
+    also returns {n_input, n_valid, n_skipped} accumulated during the
+    single pass: the reference's skip-log side channel without a second
+    job (the schema-gated formats have no row-skip path). ``scan_tasks``
+    is observed too: the highest scan partition that read a line, plus
+    one."""
     from hbase_bulkload_spark.operators.bulkload import (
         bulkload_kv,
         bulkload_wide,
@@ -304,18 +285,7 @@ def ingest(
     fidelity = dict(
         raw_binary_keys=raw_binary_keys, positional_qualifiers=positional_qualifiers
     )
-    sizes = input_file_sizes(input_path)
-    split_bytes = (
-        scan_split_bytes(spark, sizes)
-        if fmt in FILE_SOURCE_FORMATS and sizes is not None
-        else None
-    )
-    sizing = {
-        "input_bytes": sum(sizes) if sizes is not None else None,
-        "scan_split_bytes": split_bytes,
-        "write_tasks": write_tasks(spark, n_buckets) if sink == "hfile" else n_buckets,
-    }
-    with _scan_splits(spark, split_bytes):
+    with _scan_splits(spark) if fmt in SIZED_SCAN_FORMATS else contextlib.nullcontext():
         if sink == "hfile":
             from hbase_bulkload_spark.operators.hfile_load import bulkload_to_table
 
@@ -351,10 +321,16 @@ def ingest(
 
     if not collect_metrics:
         return None
+    sizing = {
+        "input_bytes": None,
+        "scan_tasks": None,
+        "write_tasks": write_tasks(spark, n_buckets) if sink == "hfile" else n_buckets,
+    }
     if obs_in is None:
         return sizing
     n_input = obs_in.get["n_input"]
     n_valid = obs_valid.get["n_valid"]
+    last_scan_task = obs_in.get["last_scan_task"]
     # the reference's "skipping record" println, aggregated
     print(
         f"ingest: {n_input} records in, {n_valid} valid, "
@@ -366,6 +342,8 @@ def ingest(
         "n_valid": n_valid,
         "n_skipped": n_input - n_valid,
         **sizing,
+        "input_bytes": _input_bytes(df),
+        "scan_tasks": None if last_scan_task is None else last_scan_task + 1,
     }
 
 

@@ -209,9 +209,11 @@ def region_align_wide(wide: DataFrame, n_buckets: int = 16) -> DataFrame:
     partition holds a contiguous run of whole buckets — no hash
     collisions, no empty tasks, and still one HFile per bucket with the
     bytes a one-bucket-per-task write gives. Contract: ``bucket`` is
-    one hex digit that is monotone in the rowkey (the rowkey's first
-    hex nibble, or any order-preserving nibble of it); a row whose
-    bucket is not hex goes to partition 0."""
+    monotone in the rowkey (its first character, or the first nibble
+    of a raw key), so the (bucket, rowkey) sort is rowkey order. A hex
+    digit lands in its own run; any other bucket (an empty one, or a
+    value index over values that do not start with a hex digit) goes
+    to partition 0 — still written whole, only less balanced."""
     n = write_tasks(wide.sparkSession, n_buckets)
     part = F.expr(f"CAST(conv(bucket, 16, 10) AS INT) * {n} DIV 16").cast("int")
     return wide.repartitionById(n, part).sortWithinPartitions("bucket", "rowkey")

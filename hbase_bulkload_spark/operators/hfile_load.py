@@ -587,10 +587,10 @@ def build_value_index(
             F.col(qualifier), F.lit(INDEX_KEY_SEP), F.col("rowkey")
         ).alias("rowkey"),
         F.col("rowkey").alias("r"),
-        # the value's first hex nibble: order-preserving, so the
-        # (bucket, rowkey) sort is rowkey order, and a hex digit, as
-        # region_align_wide's exchange requires
-        F.lower(F.substring(F.hex(F.col(qualifier)), 1, 1)).alias("bucket"),
+        # the value's first character: order-preserving, so the
+        # (bucket, rowkey) sort is rowkey order; a hex digit (every
+        # digit-string value) is also the index region it falls in
+        F.substring(F.col(qualifier), 1, 1).alias("bucket"),
     )
     return bulkload_to_table(
         region_align_wide(idx),

@@ -208,7 +208,9 @@ def test_wide_writer_duplicate_keys_across_batches(spark, tmp_path):
     """Triplicated key tuples with 2-row Arrow batches: every run of
     equal rowkeys straddles a batch cut, so the writer must carry the
     run over. Cells stay in (rowkey, qualifier) order and each row's
-    cell multiset equals the input's."""
+    cell multiset equals the input's. The 4 write tasks hold contiguous
+    runs of whole buckets: bucket ``b`` is one file, written by task
+    ``b * 4 // 16``."""
     from collections import Counter
 
     from hbase_bulkload_spark.operators import hfile_load as hl
@@ -231,6 +233,12 @@ def test_wide_writer_duplicate_keys_across_batches(spark, tmp_path):
         )
     finally:
         spark.conf.set(key, prior)
+
+    task_of = {
+        m["bucket"]: int(os.path.basename(m["path"]).split("-")[1]) for m in manifest
+    }
+    assert len(task_of) == len(manifest)
+    assert task_of == {b: int(b, 16) * 4 // 16 for b in task_of}
 
     got: dict[bytes, Counter] = {}
     for path, cells in _file_cells([m["path"] for m in manifest]).items():

@@ -389,7 +389,8 @@ def _spread_csv(path, n_rows, seed=5):
 def test_ingest_csv_scan_splits_exact_counts(spark, tmp_path):
     """A CSV planned into several scan splits, with lines straddling
     every split offset, counts each line once: n_input, n_valid and the
-    loaded cells are exact. The run reports its sizing decision."""
+    loaded cells are exact. The run reports its sizing: the input's
+    bytes, the scan tasks Spark planned, the write tasks."""
     src = str(tmp_path / "in.csv")
     data, n_valid = _spread_csv(src, 30_000)
     out = str(tmp_path / "table")
@@ -397,39 +398,46 @@ def test_ingest_csv_scan_splits_exact_counts(spark, tmp_path):
         spark, src, out, fmt="csv", n_columns=3, key_cols=[0], sink="hfile",
         collect_metrics=True,
     )
-    split = m["scan_split_bytes"]
     assert m["input_bytes"] == len(data)
-    assert split == cli.scan_split_bytes(spark, [len(data)])
     assert m["write_tasks"] == min(16, spark.sparkContext.defaultParallelism * 2)
+    # Spark's maxSplitBytes under the sized confs (far below the cap)
+    tasks = spark.sparkContext.defaultParallelism * 2
+    split = max(cli.SCAN_SPLIT_FLOOR, (len(data) + cli.SCAN_SPLIT_FLOOR) // tasks)
     offsets = range(split, len(data), split)
     assert len(offsets) >= 1  # ≥ 2 splits
     assert all(data[o - 1] != ord("\n") for o in offsets)  # mid-line cuts
-    with cli._scan_splits(spark, split):
-        assert spark.read.text(src).rdd.getNumPartitions() == len(offsets) + 1
+    assert m["scan_tasks"] == len(offsets) + 1
+    with cli._scan_splits(spark):
+        assert spark.read.text(src).rdd.getNumPartitions() == m["scan_tasks"]
     assert (m["n_input"], m["n_valid"]) == (30_000, n_valid)
     assert m["n_skipped"] == 30_000 - n_valid
     assert sum(len(cells) for cells in _table_cells(out)) == 3 * n_valid
 
 
-def test_hfile_write_tasks_map_buckets(spark, tmp_path, monkeypatch):
+def test_ingest_small_csv_is_one_scan_task(spark, tmp_path):
+    """An input below the split floor stays one scan task; the formats
+    whose scan is not sized here report no scan sizing."""
+    src = str(tmp_path / "in.csv")
+    data, _ = _spread_csv(src, 200)
+    assert len(data) < cli.SCAN_SPLIT_FLOOR
+    kwargs = dict(n_columns=3, key_cols=[0], sink="hfile", collect_metrics=True)
+    m = cli.ingest(spark, src, str(tmp_path / "t"), fmt="csv", **kwargs)
+    assert (m["scan_tasks"], m["input_bytes"]) == (1, len(data))
+    jsonl = str(tmp_path / "in_jsonl")
+    spark.createDataFrame([("a", "b", "c")], "z0 string, z1 string, z2 string").write.json(jsonl)
+    m = cli.ingest(spark, jsonl, str(tmp_path / "j"), fmt="jsonl", **kwargs)
+    assert (m["input_bytes"], m["scan_tasks"]) == (None, None)
+
+
+def test_hfile_write_tasks_follow_cores(spark, tmp_path, monkeypatch):
     """At local[2]'s default parallelism the HFile sink writes with
-    2 × 2 = 4 tasks, each holding a contiguous run of 4 whole buckets:
-    16 HFiles, one per bucket, and do_bulk_load splits none of them."""
+    2 × 2 = 4 tasks, and the table still has one whole HFile per
+    region: 16 files, none split at load."""
     import glob
 
     from pyspark import SparkContext
 
-    from hbase_bulkload_spark.operators import hfile_load as hl
-
     monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda _: 2))
-    written = []
-    write = hl.write_region_hfiles
-
-    def spy(*args, **kwargs):
-        written.extend(write(*args, **kwargs))
-        return written
-
-    monkeypatch.setattr(hl, "write_region_hfiles", spy)
     src = str(tmp_path / "in.csv")
     _spread_csv(src, 4_000)
     out = str(tmp_path / "table")
@@ -446,29 +454,29 @@ def test_hfile_write_tasks_map_buckets(spark, tmp_path, monkeypatch):
     jobs = sc.statusTracker().getJobIdsForGroup("hfile-write-tasks")
     write_stage = max(s for j in jobs for s in sc.statusTracker().getJobInfo(j).stageIds)
     assert sc.statusTracker().getStageInfo(write_stage).numTasks == 4
-    task_of = {w["bucket"]: os.path.basename(w["path"]).split("-")[1] for w in written}
-    assert len(written) == len(task_of) == 16
-    assert {b: int(t) for b, t in task_of.items()} == {
-        format(i, "x"): i * 4 // 16 for i in range(16)
-    }
     loaded = glob.glob(os.path.join(out, "region-*", "c", "*.hfile"))
-    assert sorted(map(os.path.basename, loaded)) == sorted(
-        os.path.basename(w["path"]) for w in written
-    )
+    assert len({os.path.dirname(p) for p in loaded}) == len(loaded) == 16
+    assert not [p for p in loaded if p.endswith((".bottom.hfile", ".top.hfile"))]
 
 
 def test_ingest_restores_file_confs(spark, tmp_path, monkeypatch):
     """The scan split confs hold the sized values during the action and
-    their prior values after it, also when the action raises."""
+    their prior values after it (unset stays unset), also when the
+    action raises."""
     from hbase_bulkload_spark.operators import hfile_load as hl
 
-    keys = (cli.MAX_PARTITION_BYTES, cli.OPEN_COST_BYTES)
-    before = {k: spark.conf.get(k) for k in keys}
+    keys = (cli.OPEN_COST_BYTES, cli.MIN_PARTITION_NUM)
+    sized = {
+        cli.OPEN_COST_BYTES: str(cli.SCAN_SPLIT_FLOOR),
+        cli.MIN_PARTITION_NUM: str(spark.sparkContext.defaultParallelism * 2),
+    }
+    before = {k: spark.conf.get(k, None) for k in keys}
+    assert before[cli.MIN_PARTITION_NUM] is None
     src = str(tmp_path / "in.csv")
     _spread_csv(src, 20_000)
     kwargs = dict(fmt="csv", n_columns=3, key_cols=[0], sink="hfile", collect_metrics=True)
-    m = cli.ingest(spark, src, str(tmp_path / "t1"), **kwargs)
-    assert {k: spark.conf.get(k) for k in keys} == before
+    cli.ingest(spark, src, str(tmp_path / "t1"), **kwargs)
+    assert {k: spark.conf.get(k, None) for k in keys} == before
 
     during = {}
 
@@ -477,8 +485,12 @@ def test_ingest_restores_file_confs(spark, tmp_path, monkeypatch):
         raise RuntimeError("write failed")
 
     monkeypatch.setattr(hl, "bulkload_to_table", fail)
-    with pytest.raises(RuntimeError, match="write failed"):
-        cli.ingest(spark, src, str(tmp_path / "t2"), **kwargs)
-    assert during[cli.MAX_PARTITION_BYTES] == str(m["scan_split_bytes"])
-    assert during != before
-    assert {k: spark.conf.get(k) for k in keys} == before
+    spark.conf.set(cli.MIN_PARTITION_NUM, "3")
+    try:
+        with pytest.raises(RuntimeError, match="write failed"):
+            cli.ingest(spark, src, str(tmp_path / "t2"), **kwargs)
+        assert during == sized
+        assert spark.conf.get(cli.MIN_PARTITION_NUM) == "3"
+        assert spark.conf.get(cli.OPEN_COST_BYTES, None) == before[cli.OPEN_COST_BYTES]
+    finally:
+        spark.conf.unset(cli.MIN_PARTITION_NUM)

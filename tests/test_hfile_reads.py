@@ -215,6 +215,36 @@ def test_value_index_seek(spark, sf_dir, table_dir, tmp_path):
     assert 0 < pruned_blocks < full_blocks, (pruned_blocks, full_blocks)
 
 
+def test_value_index_on_hex_regions_splits_nothing(spark, sf_dir, tmp_path):
+    """On the 16 hex-nibble boundaries each index bucket, the value's
+    first character (a digit for z8), is one staged file that lands
+    whole in the region of that digit: one file per distinct leading
+    digit, none split at load."""
+    from pyspark.sql import functions as F
+
+    from hbase_bulkload_spark.operators.bulkload import bulkload_wide
+    from hbase_bulkload_spark.sources import records
+
+    wide, _ = bulkload_wide(
+        records.wide9(spark, sf_dir), records.RECORD_COLS[:4], records.RECORD_COLS
+    )
+    leads = {
+        r[0]
+        for r in wide.filter(F.col("z8").isNotNull())
+        .select(F.substring("z8", 1, 1))
+        .distinct()
+        .collect()
+    }
+    assert len(leads) > 2
+    boundaries = [format(i, "x").encode() for i in range(16)]
+    manifest = hl.build_value_index(
+        wide, "z8", str(tmp_path / "z8_index"), boundaries=boundaries
+    )
+    assert sorted(m["region"] for m in manifest) == sorted(int(c, 16) for c in leads)
+    split = (".bottom.hfile", ".top.hfile")
+    assert not [m["path"] for m in manifest if m["path"].endswith(split)]
+
+
 def test_scan_hfiles_column_pruning(spark, table_dir):
     """``columns`` prunes the decode to the named cells: region and
     rowkey are always kept, the values equal the full scan's
