@@ -10,30 +10,30 @@ canonical invocation `sample_run.sh:1`):
 This module is the Spark-native equivalent, one tool with a format flag:
 
     python -m hbase_bulkload_spark --format {text,csv,columnar,avro} \
-        [--columns 9] [--key-cols 0,1,2,3] [--n-buckets 16] \
+        [--columns 9] [--key-cols 0,1,2,3] \
         [--sep $'\\x01'] [--sink {parquet,hfile}] INPUT OUTPUT
 
 Per format, the pipeline is the reference lifecycle (SURVEY.md §3) as one
 declarative plan: scan → arity/null validate → composite MD5 rowkey over
-the key columns (`RowKeyConverter.java:13-30`) → wide→long KV unpivot
-(one cell per column, family 'c') → hex-bucket partition → per-partition
-sort → Snappy parquet, one sorted non-overlapping file per bucket — the
-analog of the HFile directory handed to `doBulkLoad`. The `hbase-site.xml`
-argument has no analog (no HBase cluster in scope); region count maps to
-`--n-buckets`.
+the key columns (`RowKeyConverter.java:13-30`) → hex-bucket exchange of
+the wide rows → wide→long KV unpivot (one cell per column, family 'c') →
+per-partition sort → Snappy parquet, one sorted non-overlapping file per
+bucket — the analog of the HFile directory handed to `doBulkLoad`
+(`operators.bulkload.bulkload_pipeline`). The `hbase-site.xml` argument
+has no analog (no HBase cluster in scope); the 16 hex-nibble buckets
+are the regions.
 
 `--sink hfile` writes the reference's artifact itself: HFile v3 files
-placed into a table of 16 regions, one per hex-nibble bucket, whatever
-`--n-buckets` says (`operators.hfile_load.bulkload_to_table`). That path
-exchanges and sorts WIDE rows (rowkey, bucket, one column per value) and
-explodes them into cells inside the writer task, so the shuffle and the
-Arrow hop carry each rowkey once instead of once per cell. The reference
-sizes its job by region count (one reducer per region); here the work
-is sized by the input and the cores: a text/csv scan splits at about
-two tasks per core (`_scan_splits`), and the write
-runs `min(--n-buckets, 16, 2 × cores)` tasks, each writing whole
-buckets (`operators.bulkload.write_tasks`), so `--n-buckets` is only an
-upper bound on write tasks.
+placed into a table of 16 regions, one per hex-nibble bucket
+(`operators.hfile_load.bulkload_to_table`). That path exchanges and
+sorts the same WIDE rows (rowkey, bucket, one column per value) and
+explodes them into cells inside the writer task, so the Arrow hop, like
+the shuffle, carries each rowkey once instead of once per cell. The
+reference sizes its job by region count (one reducer per region); here
+the work is sized by the input and the cores: a text/csv scan splits at
+about two tasks per core (`_scan_splits`), and either sink's write runs
+`min(16, 2 × cores)` tasks, each writing whole buckets
+(`operators.bulkload.write_tasks`).
 
 Deviations (documented, SURVEY.md §2.2/§2.14): key columns default to
 0-3 for every format (the RC variant's out-of-bounds `value.get(20)` is
@@ -198,8 +198,7 @@ def _scan_splits(spark: SparkSession):
     an input below the floor stays one task, and a large one still
     splits at maxPartitionBytes. Spark reads the file confs when it
     plans an action (a per-read maxPartitionBytes option is ignored in
-    4.1), so they are set around the action and restored after it, as
-    `write_bulkload` does for partition coalescing."""
+    4.1), so they are set around the action and restored after it."""
     conf = {
         OPEN_COST_BYTES: str(SCAN_SPLIT_FLOOR),
         MIN_PARTITION_NUM: str(spark.sparkContext.defaultParallelism * TASKS_PER_CORE),
@@ -224,7 +223,6 @@ def ingest(
     fmt: str = "csv",
     n_columns: int = 9,
     key_cols: list[int] | None = None,
-    n_buckets: int = 16,
     sep: str = SOH,
     fix_permissions: int | None = None,
     raw_binary_keys: bool = False,
@@ -236,9 +234,8 @@ def ingest(
     entry point, SURVEY.md §3.1, as a single Spark plan).
 
     Task sizing: a text/csv scan splits at about
-    :data:`TASKS_PER_CORE` tasks per core (:func:`_scan_splits`); the
-    HFile sink writes with ``operators.bulkload.write_tasks(spark,
-    n_buckets)`` tasks, the parquet sink with ``n_buckets``.
+    :data:`TASKS_PER_CORE` tasks per core (:func:`_scan_splits`); either
+    sink writes with ``operators.bulkload.write_tasks(spark)`` tasks.
 
     ``collect_metrics=True`` returns that sizing —
     {input_bytes, scan_tasks, write_tasks}, ``None`` for what was not
@@ -249,9 +246,10 @@ def ingest(
     is observed too: the highest scan partition that read a line, plus
     one."""
     from hbase_bulkload_spark.operators.bulkload import (
-        bulkload_kv,
+        bulkload_pipeline,
         bulkload_wide,
         region_align_wide,
+        region_boundaries,
         write_bulkload,
         write_tasks,
     )
@@ -289,30 +287,15 @@ def ingest(
         if sink == "hfile":
             from hbase_bulkload_spark.operators.hfile_load import bulkload_to_table
 
-            # region boundaries = the 16 hex-nibble buckets the key layer
-            # emits (create_table.rb:1 pre-splits analogously on '0'..'9');
-            # raw-key mode buckets on the digest's first nibble, so the
-            # byte boundaries are the same fences over raw bytes
-            boundaries = (
-                [bytes([i << 4]) for i in range(16)]
-                if raw_binary_keys
-                else [format(i, "x").encode() for i in range(16)]
-            )
-            if raw_binary_keys:
-                boundaries[0] = b""  # region 0 starts at the empty key
             # wide rows cross the exchange and the Arrow hop; the writer
             # tasks explode them into cells
             wide, qualifiers = bulkload_wide(df, keys, cols, **fidelity)
             bulkload_to_table(
-                region_align_wide(wide, n_buckets), output_path, boundaries,
-                qualifiers=qualifiers,
+                region_align_wide(wide), output_path,
+                region_boundaries(raw_binary_keys), qualifiers=qualifiers,
             )
         else:
-            write_bulkload(
-                bulkload_kv(df, key_cols=keys, value_cols=cols, **fidelity),
-                output_path,
-                n_buckets=n_buckets,
-            )
+            write_bulkload(bulkload_pipeline(df, keys, cols, **fidelity), output_path)
 
     if fix_permissions is not None:  # op 8 post-processing (reference: 0o777)
         from hbase_bulkload_spark.sources.fsutil import set_permissions_recursive
@@ -324,7 +307,7 @@ def ingest(
     sizing = {
         "input_bytes": None,
         "scan_tasks": None,
-        "write_tasks": write_tasks(spark, n_buckets) if sink == "hfile" else n_buckets,
+        "write_tasks": write_tasks(spark),
     }
     if obs_in is None:
         return sizing
@@ -370,21 +353,14 @@ def main(argv: list[str] | None = None) -> int:
         help="comma-separated key column indexes (default 0,1,2,3)",
     )
     p.add_argument(
-        "--n-buckets",
-        type=int,
-        default=16,
-        help="output buckets (default 16); with --sink hfile, an upper "
-        "bound on write tasks, which follow the cores (at most 2 per "
-        "core) — the table always has 16 regions, one file each",
-    )
-    p.add_argument(
         "--sink",
         choices=["parquet", "hfile"],
         default="parquet",
-        help="output format: region-aligned sorted Snappy parquet (the "
-        "analytics-native default) or true HFile v3 files bulk-loaded "
-        "into a 16-region table layout (the reference's artifact, "
-        "HFileOutputFormat2 + doBulkLoad)",
+        help="output format: region-aligned sorted Snappy parquet, one "
+        "file per bucket in 16 bucket= directories (the analytics-native "
+        "default), or true HFile v3 files bulk-loaded into a 16-region "
+        "table layout (the reference's artifact, HFileOutputFormat2 + "
+        "doBulkLoad); either writes with min(16, 2 x cores) tasks",
     )
     p.add_argument("--sep", default=SOH, help="text-format field delimiter (default SOH)")
     p.add_argument(
@@ -440,7 +416,6 @@ def main(argv: list[str] | None = None) -> int:
         fmt=args.format,
         n_columns=args.columns,
         key_cols=[int(i) for i in args.key_cols.split(",")],
-        n_buckets=args.n_buckets,
         sep=args.sep,
         fix_permissions=(
             int(args.fix_permissions, 8) if args.fix_permissions is not None else None

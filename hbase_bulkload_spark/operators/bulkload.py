@@ -16,21 +16,18 @@ vs ASCII splits mismatch is a documented deviation, SURVEY.md §2.14
 note). One bucket exchange + `sortWithinPartitions` reproduces the
 region-aligned sorted-file contract with exactly one shuffle, and the
 key's uniform distribution makes that shuffle skew-free by construction
-— the property that survives a 100 TB scale-up. The parquet sinks hash
-the bucket into ``n_buckets`` partitions (`region_align`); the HFile
-sinks map the 16 buckets onto :func:`write_tasks` partitions by value
-(`region_align_wide`), so the write task count follows the cores, not
-the region count (the reference hardcodes 10 regions,
-`RowKeyConverter.java:8`).
+— the property that survives a 100 TB scale-up. Every bulk-load sink
+maps the 16 buckets onto :func:`write_tasks` partitions by value, so
+the write task count follows the cores, not the region count (the
+reference hardcodes 10 regions, `RowKeyConverter.java:8`).
 
-Every HFile sink exchanges wide rows: `bulkload_wide` →
-`region_align_wide` moves one shuffled record per input row, and the
-writer tasks explode the sorted rows into cells in qualifier byte order
-(`hfile_load.write_region_hfiles`, behind `hfile_load.bulkload_to_table`
-and the streaming HFile sink). `bulkload_pipeline` exchanges the same
-wide rows and unpivots after the exchange. The parquet sinks still
-exchange cells (`bulkload_kv` → `region_align`): one shuffled record
-per cell, each repeating its row's rowkey.
+Every bulk-load sink exchanges wide rows (`bulkload_wide`), one
+shuffled record per input row. The HFile sinks sort them
+(`region_align_wide`) and the writer tasks explode the sorted rows into
+cells in qualifier byte order (`hfile_load.write_region_hfiles`, behind
+`hfile_load.bulkload_to_table` and the streaming HFile sink); the
+parquet sink unpivots them after the exchange (`bulkload_pipeline` →
+`write_bulkload`).
 """
 
 from __future__ import annotations
@@ -48,10 +45,10 @@ from hbase_bulkload_spark.functions.keys import (
 )
 from hbase_bulkload_spark.operators.kv import CURRENT_FAMILY, unpivot_kv
 
-#: Tasks per core for an ingest's scan splits (`cli.ingest`) and HFile
-#: write partitions (:func:`write_tasks`). At ``local[2]`` on a 4-vCPU
-#: VM, 2 per core (4 scan + 4 write tasks) ran perfbench's 30k-row
-#: CSV → HFile ingest at a median 32.3k rows/s, against 23.2k with
+#: Tasks per core for an ingest's scan splits (`cli.ingest`) and
+#: bulk-load write partitions (:func:`write_tasks`). At ``local[2]`` on
+#: a 4-vCPU VM, 2 per core (4 scan + 4 write tasks) ran perfbench's
+#: 30k-row CSV → HFile ingest at a median 32.3k rows/s, against 23.2k with
 #: 1 scan task and 16 hash-partitioned write tasks (10 seeds each,
 #: PySpark's DataFrame debugging on in both).
 TASKS_PER_CORE = 2
@@ -71,6 +68,31 @@ def _bucket(raw_binary_keys: bool) -> Column:
         F.lower(F.substring(F.hex(F.col("rowkey")), 1, 1)) if raw_binary_keys
         else hex_bucket(F.col("rowkey"))
     )
+
+
+def _cells(
+    df: DataFrame,
+    rowkey: Column,
+    value_cols: Sequence[str],
+    family: str,
+    raw_binary_keys: bool,
+    positional_qualifiers: bool,
+    ts: Column | None = None,
+    drop_null: bool = True,
+) -> DataFrame:
+    """`unpivot_kv` cells of ``df`` with their ``bucket``, qualifiers
+    mapped to `Bytes.toBytes(i)` under ``positional_qualifiers``."""
+    kv = unpivot_kv(df, rowkey, value_cols, family=family, ts=ts, drop_null=drop_null)
+    if positional_qualifiers:
+        qmap = F.create_map(
+            *[
+                lit
+                for i, c in enumerate(value_cols)
+                for lit in (F.lit(c), F.lit(positional_qualifier_bytes(i)))
+            ]
+        )
+        kv = kv.withColumn("qualifier", F.element_at(qmap, F.col("qualifier")))
+    return kv.withColumn("bucket", _bucket(raw_binary_keys))
 
 
 def bulkload_kv(
@@ -102,20 +124,10 @@ def bulkload_kv(
       binary-typed, mapped from column names by a literal map — a
       legacy consumer of the reference reads these cells unchanged.
     """
-    kv = unpivot_kv(
-        df, _rowkey(key_cols, raw_binary_keys), value_cols,
-        family=family, ts=ts, drop_null=drop_null,
+    return _cells(
+        df, _rowkey(key_cols, raw_binary_keys), value_cols, family,
+        raw_binary_keys, positional_qualifiers, ts=ts, drop_null=drop_null,
     )
-    if positional_qualifiers:
-        qmap = F.create_map(
-            *[
-                lit
-                for i, c in enumerate(value_cols)
-                for lit in (F.lit(c), F.lit(positional_qualifier_bytes(i)))
-            ]
-        )
-        kv = kv.withColumn("qualifier", F.element_at(qmap, F.col("qualifier")))
-    return kv.withColumn("bucket", _bucket(raw_binary_keys))
 
 
 def bulkload_wide(
@@ -148,21 +160,17 @@ def bulkload_pipeline(
     key_cols: Sequence[str],
     value_cols: Sequence[str],
     family: str = CURRENT_FAMILY,
-    n_buckets: int = 16,
+    raw_binary_keys: bool = False,
+    positional_qualifiers: bool = False,
 ) -> DataFrame:
-    """Shuffle-lean flagship plan: exchange *wide* rows, unpivot after.
-
-    ``bulkload_kv → region_align`` shuffles the exploded cell frame —
-    every 128-hex rowkey crosses the wire 9×. Deriving key + bucket on
-    the wide frame (:func:`bulkload_wide`) and repartitioning *before*
-    the unpivot moves ~7-8× fewer bytes through the one exchange;
-    `unpivot` is a narrow Generate, so the bucket partitioning survives
-    it and the terminal `sortWithinPartitions` needs no further
-    exchange. At 100 TB the shuffle is the bottleneck, so this is the
-    shape that scales.
-    """
-    wide, _ = bulkload_wide(df, key_cols, value_cols)
-    wide = wide.repartition(n_buckets, "bucket")
+    """The parquet sink's plan: the cells of :func:`bulkload_kv` (same
+    columns and fidelity modes), region-aligned by exchanging the *wide*
+    rows of :func:`bulkload_wide` and unpivoting after — one shuffled
+    record per input row instead of one per cell, each repeating the
+    128-hex rowkey. `unpivot` is a narrow Generate, so the bucket
+    placement survives it and the terminal `sortWithinPartitions` needs
+    no further exchange."""
+    wide, _ = bulkload_wide(df, key_cols, value_cols, raw_binary_keys=raw_binary_keys)
     # NOTE (round-7 A/B): sorting the WIDE frame before the unpivot and
     # relying on Generate's order-preservation is ~9x less sort work on
     # paper, but it is WRONG for duplicate rowkeys (each duplicate row
@@ -172,73 +180,74 @@ def bulkload_pipeline(
     # exploded-frame sort is both correct and no slower. (The HFile
     # sinks do sort wide rows: their writer task re-orders each run of
     # equal rowkeys by qualifier, see hfile_load.explode_wide_batches.)
-    long = (
-        wide.unpivot(["rowkey", "bucket"], list(value_cols), "qualifier", "value")
-        .filter(F.col("value").isNotNull())
-    )
-    return long.select(
-        "rowkey", F.lit(family).alias("family"), "qualifier", "value", "bucket"
+    return _cells(
+        _to_write_tasks(wide), F.col("rowkey"), value_cols, family,
+        raw_binary_keys, positional_qualifiers,
     ).sortWithinPartitions("bucket", "rowkey", "qualifier")
 
 
-def region_align(kv: DataFrame, n_buckets: int = 16) -> DataFrame:
-    """The one global shuffle: co-locate each bucket, sort cells within
-    each partition by (rowkey, qualifier) — HBase cell order, the
-    PutSortReducer contract (`BulkImporterFromText.java:108`)."""
-    return kv.repartition(n_buckets, "bucket").sortWithinPartitions(
+def region_align(kv: DataFrame) -> DataFrame:
+    """The cell-exchange reference shape, run by no sink: co-locate each
+    bucket by a 16-way hash, sort cells within each partition by
+    (rowkey, qualifier) — HBase cell order, the PutSortReducer contract
+    (`BulkImporterFromText.java:108`)."""
+    return kv.repartition(16, "bucket").sortWithinPartitions(
         "bucket", "rowkey", "qualifier"
     )
 
 
-def write_tasks(spark: SparkSession, n_buckets: int) -> int:
-    """Write partitions of :func:`region_align_wide`: ``n_buckets``
-    capped at the 16 hex-nibble buckets and at :data:`TASKS_PER_CORE`
-    per core of the session's default parallelism."""
-    cores = spark.sparkContext.defaultParallelism
-    return max(1, min(n_buckets, 16, cores * TASKS_PER_CORE))
+def region_boundaries(raw_binary_keys: bool = False) -> list[bytes]:
+    """Start keys of the 16 regions, one per hex-nibble bucket
+    (`create_table.rb:1` pre-splits analogously on '0'..'9'); for raw
+    digest keys the same fences over raw bytes, from the empty key."""
+    if raw_binary_keys:
+        return [b""] + [bytes([i << 4]) for i in range(1, 16)]
+    return [format(i, "x").encode() for i in range(16)]
 
 
-def region_align_wide(wide: DataFrame, n_buckets: int = 16) -> DataFrame:
-    """:func:`region_align` for the wide frame of :func:`bulkload_wide`:
-    one exchange moving one row per record instead of one per cell,
-    sorted within partitions by (bucket, rowkey). Cell order within a
-    row is the writer's job (`hfile_load.write_region_hfiles`).
+def write_tasks(spark: SparkSession) -> int:
+    """Write partitions of every bulk-load sink: the 16 hex-nibble
+    buckets, capped at :data:`TASKS_PER_CORE` per core of the session's
+    default parallelism."""
+    return min(16, spark.sparkContext.defaultParallelism * TASKS_PER_CORE)
 
-    The exchange is ``repartitionById``: bucket nibble ``b`` goes to
-    partition ``b * n // 16`` of ``n =`` :func:`write_tasks`, so each
-    partition holds a contiguous run of whole buckets — no hash
-    collisions, no empty tasks, and still one HFile per bucket with the
-    bytes a one-bucket-per-task write gives. Contract: ``bucket`` is
-    monotone in the rowkey (its first character, or the first nibble
-    of a raw key), so the (bucket, rowkey) sort is rowkey order. A hex
-    digit lands in its own run; any other bucket (an empty one, or a
-    value index over values that do not start with a hex digit) goes
-    to partition 0 — still written whole, only less balanced."""
-    n = write_tasks(wide.sparkSession, n_buckets)
+
+def _to_write_tasks(wide: DataFrame) -> DataFrame:
+    """The one exchange of every bulk-load sink: ``repartitionById``
+    sends bucket nibble ``b`` to partition ``b * n // 16`` of ``n =``
+    :func:`write_tasks`, so each partition holds a contiguous run of
+    whole buckets — no hash collisions, no empty tasks, and one output
+    file per bucket. A hex digit lands in its own run; any other bucket
+    (an empty one, or a value index over values that do not start with
+    a hex digit) goes to partition 0 — still written whole, only less
+    balanced. A ``REPARTITION_BY_NUM`` shuffle is never coalesced by
+    AQE, so the placement survives planning."""
+    n = write_tasks(wide.sparkSession)
     part = F.expr(f"CAST(conv(bucket, 16, 10) AS INT) * {n} DIV 16").cast("int")
-    return wide.repartitionById(n, part).sortWithinPartitions("bucket", "rowkey")
+    return wide.repartitionById(n, part)
 
 
-def write_bulkload(kv: DataFrame, path: str, n_buckets: int = 16) -> None:
-    """Sorted, bucket-partitioned, Snappy columnar sink — the analog of
-    the HFile directory handed to `LoadIncrementalHFiles.doBulkLoad`
+def region_align_wide(wide: DataFrame) -> DataFrame:
+    """:func:`region_align` for the wide frame of :func:`bulkload_wide`:
+    one exchange moving one row per record instead of one per cell
+    (:func:`_to_write_tasks`), sorted within partitions by (bucket,
+    rowkey). Cell order within a row is the writer's job
+    (`hfile_load.write_region_hfiles`). Contract: ``bucket`` is monotone
+    in the rowkey (its first character, or the first nibble of a raw
+    key), so the (bucket, rowkey) sort is rowkey order."""
+    return _to_write_tasks(wide).sortWithinPartitions("bucket", "rowkey")
+
+
+def write_bulkload(cells: DataFrame, path: str) -> None:
+    """Sorted, bucket-partitioned, Snappy columnar sink for the aligned
+    cells of :func:`bulkload_pipeline` — the analog of the HFile
+    directory handed to `LoadIncrementalHFiles.doBulkLoad`
     (`BulkImporterFromText.java:129-130`); the engine's contract ends at
-    region-aligned sorted files (SURVEY.md §2.1 op 9).
-
-    AQE partition coalescing is disabled for this write so the
-    partition↔bucket correspondence (and hence per-file sortedness)
-    survives planning (SURVEY.md §4.2).
-    """
-    spark = kv.sparkSession
-    prior = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
-        (
-            region_align(kv, n_buckets)
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .option("compression", "snappy")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prior)
+    region-aligned sorted files (SURVEY.md §2.1 op 9): one file per
+    bucket directory, sorted by (rowkey, qualifier)."""
+    (
+        cells.write.mode("overwrite")
+        .partitionBy("bucket")
+        .option("compression", "snappy")
+        .parquet(path)
+    )

@@ -20,8 +20,10 @@ def physical_plan(df: DataFrame) -> str:
 
 
 def count_exchanges(plan: str, ignore_roundrobin: bool = False) -> int:
-    """Shuffle boundaries in the plan (broadcast exchanges excluded —
-    those move only the small side).
+    """Shuffle boundaries in the plan: every ``Exchange`` whatever its
+    partitioning (hash, range, single, ``repartitionById``'s partition-id
+    passthrough, ...), except broadcast exchanges — those move only the
+    small side.
 
     ``ignore_roundrobin=True`` additionally excludes RoundRobin
     repartitions — pure parallelism moves that place no data-placement
@@ -31,14 +33,9 @@ def count_exchanges(plan: str, ignore_roundrobin: bool = False) -> int:
     local-input remedy doesn't read as an algorithmic regression;
     the default keeps counting them so an accidental ``repartition()``
     in an operator still trips the audit."""
-    pat = (
-        r"\bExchange (?!.*EXECUTOR_BROADCAST)"
-        + (
-            r"(?:hashpartitioning|rangepartitioning|SinglePartition)"
-            if ignore_roundrobin
-            else r"(?:hashpartitioning|rangepartitioning|RoundRobinPartitioning|SinglePartition)"
-        )
-    )
+    pat = r"\bExchange (?!.*EXECUTOR_BROADCAST)"
+    if ignore_roundrobin:
+        pat += r"(?!RoundRobinPartitioning)"
     return len(re.findall(pat, plan))
 
 

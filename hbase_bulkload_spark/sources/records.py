@@ -28,8 +28,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+#: Cache of derived fixture inputs: ``.fixtures`` in the checkout this
+#: package runs from, so two checkouts never read each other's
+#: derivations; ``SPARK_GRAFT_FIXTURE_DIR`` overrides the path.
 FIXTURE_ROOT = os.environ.get(
-    "SPARK_GRAFT_FIXTURE_DIR", "/root/repo/.fixtures"
+    "SPARK_GRAFT_FIXTURE_DIR",
+    os.path.join(
+        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+        ".fixtures",
+    ),
 )
 
 SOH = "\x01"  # hive default field delimiter, BulkImporterFromText.java:54

@@ -268,7 +268,6 @@ def start_bulkload_hfile_sink(
     qualifiers: list[bytes],
     table_dir: str,
     checkpoint: str,
-    n_buckets: int = 16,
     compression: str | None = "snappy",
 ):
     """Stream → loaded HFile table: each microbatch of wide rows and
@@ -276,24 +275,27 @@ def start_bulkload_hfile_sink(
     narrow and attaches to a readStream source unchanged) is
     region-aligned (`region_align_wide`), written as executor-side
     region HFiles under a batch-scoped staging dir (file names
-    batch-stamped so successive loads never collide), and placed by
-    the doBulkLoad analog — HBase's own incremental
-    bulk-load pattern. Successive batches leave overlapping files per
-    region, exactly as successive `doBulkLoad` calls do on a live
-    table; `hfile_load.compact_table` restores the one-sorted-file
+    batch-stamped so successive loads never collide), and placed into
+    the 16 hex-nibble regions by the doBulkLoad analog — HBase's own
+    incremental bulk-load pattern. Successive batches leave overlapping
+    files per region, exactly as successive `doBulkLoad` calls do on a
+    live table; `hfile_load.compact_table` restores the one-sorted-file
     invariant, completing stream → load → compact."""
     import os
     import shutil
 
     from hbase_bulkload_spark.operators import hfile_load
-    from hbase_bulkload_spark.operators.bulkload import region_align_wide
+    from hbase_bulkload_spark.operators.bulkload import (
+        region_align_wide,
+        region_boundaries,
+    )
 
-    boundaries = [format(i, "x").encode() for i in range(n_buckets)]
+    boundaries = region_boundaries()
 
     def load_batch(batch_df: DataFrame, batch_id: int) -> None:
         staging = os.path.join(table_dir, f"_staging_{batch_id:05d}")
         manifest = hfile_load.write_region_hfiles(
-            region_align_wide(batch_df, n_buckets), staging, qualifiers,
+            region_align_wide(batch_df), staging, qualifiers,
             compression=compression,
         )
         paths = []

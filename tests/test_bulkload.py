@@ -44,12 +44,19 @@ def test_partitions_internally_sorted(spark, sf_dir):
     assert bad == 0
 
 
-def test_pipeline_shape_equivalent_and_sorted(spark, sf_dir):
+@pytest.mark.parametrize(
+    "modes",
+    [{}, {"raw_binary_keys": True}, {"positional_qualifiers": True},
+     {"raw_binary_keys": True, "positional_qualifiers": True}],
+    ids=["names", "raw-keys", "positional", "reference"],
+)
+def test_pipeline_shape_equivalent_and_sorted(spark, sf_dir, modes):
     """The shuffle-lean pipeline (wide-row exchange, unpivot after) must
-    produce exactly the cell set of the KV-exchange shape, and keep every
-    partition internally sorted."""
-    pipe = bulkload_pipeline(wide9(spark, sf_dir), KEYS, RECORD_COLS)
-    ref = region_align(_kv(spark, sf_dir)).select(*pipe.columns)
+    produce exactly the cell set of the KV-exchange shape in every
+    key/qualifier mode, and keep every partition internally sorted."""
+    wide = wide9(spark, sf_dir)
+    pipe = bulkload_pipeline(wide, KEYS, RECORD_COLS, **modes)
+    ref = region_align(bulkload_kv(wide, KEYS, RECORD_COLS, **modes)).select(*pipe.columns)
     assert pipe.exceptAll(ref).count() == 0
     assert ref.exceptAll(pipe).count() == 0
 
@@ -79,17 +86,22 @@ def test_bucket_ranges_disjoint(spark, sf_dir):
 
 
 def test_write_bulkload_contract(spark, sf_dir, tmp_path):
+    """16 bucket directories of one Snappy file each, every file sorted
+    by (rowkey, qualifier) — with AQE partition coalescing on, which a
+    REPARTITION_BY_NUM exchange is not subject to."""
     out = str(tmp_path / "bulkload_out")
-    write_bulkload(_kv(spark, sf_dir), out)
+    assert spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled") == "true"
+    write_bulkload(bulkload_pipeline(wide9(spark, sf_dir), KEYS, RECORD_COLS), out)
     dirs = sorted(glob.glob(os.path.join(out, "bucket=*")))
     assert len(dirs) == 16
-    for d in dirs[:4]:  # spot-check: files sorted by rowkey, snappy codec
-        for f in glob.glob(os.path.join(d, "*.parquet")):
-            t = pq.read_table(f, columns=["rowkey", "qualifier"])
-            rk = t.column("rowkey").to_pylist()
-            assert rk == sorted(rk)
-            meta = pq.ParquetFile(f).metadata
-            assert meta.row_group(0).column(0).compression == "SNAPPY"
+    for d in dirs:
+        files = glob.glob(os.path.join(d, "*.parquet"))
+        assert len(files) == 1, d
+        t = pq.read_table(files[0], columns=["rowkey", "qualifier"])
+        cells = list(zip(t.column("rowkey").to_pylist(), t.column("qualifier").to_pylist()))
+        assert cells == sorted(cells), d
+        meta = pq.ParquetFile(files[0]).metadata
+        assert meta.row_group(0).column(0).compression == "SNAPPY"
 
 
 def test_parallelism_floor(spark, tmp_path):
@@ -204,14 +216,16 @@ def test_wide_writer_byte_identical_to_cells(spark, tmp_path, fidelity):
         assert got[b] == want[b], f"bucket {b} differs"
 
 
-def test_wide_writer_duplicate_keys_across_batches(spark, tmp_path):
+def test_wide_writer_duplicate_keys_across_batches(spark, tmp_path, monkeypatch):
     """Triplicated key tuples with 2-row Arrow batches: every run of
     equal rowkeys straddles a batch cut, so the writer must carry the
     run over. Cells stay in (rowkey, qualifier) order and each row's
-    cell multiset equals the input's. The 4 write tasks hold contiguous
-    runs of whole buckets: bucket ``b`` is one file, written by task
-    ``b * 4 // 16``."""
+    cell multiset equals the input's. The 4 write tasks of a 2-core
+    session hold contiguous runs of whole buckets: bucket ``b`` is one
+    file, written by task ``b * 4 // 16``."""
     from collections import Counter
+
+    from pyspark import SparkContext
 
     from hbase_bulkload_spark.operators import hfile_load as hl
 
@@ -224,12 +238,13 @@ def test_wide_writer_duplicate_keys_across_batches(spark, tmp_path):
         ] += 1
 
     wide, quals = bulkload_wide(df, cols[:4], cols)
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda _: 2))
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prior = spark.conf.get(key)
     spark.conf.set(key, "2")
     try:
         manifest = hl.write_region_hfiles(
-            region_align_wide(wide, 4), str(tmp_path / "wide"), qualifiers=quals
+            region_align_wide(wide), str(tmp_path / "wide"), qualifiers=quals
         )
     finally:
         spark.conf.set(key, prior)

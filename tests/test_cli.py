@@ -41,7 +41,7 @@ def _load_out(spark, path):
 @pytest.mark.parametrize("fmt", ["text", "csv", "columnar", "avro", "rcfile", "jsonl"])
 def test_cli_ingest_contract(spark, inputs, tmp_path, fmt):
     out = str(tmp_path / f"out_{fmt}")
-    cli.ingest(spark, inputs[fmt], out, fmt=fmt, n_buckets=4)
+    cli.ingest(spark, inputs[fmt], out, fmt=fmt)
 
     df = _load_out(spark, out)
     assert set(df.columns) == {"rowkey", "family", "qualifier", "value", "bucket"}
@@ -63,7 +63,7 @@ def test_cli_formats_agree(spark, inputs, tmp_path):
     cells = {}
     for fmt in ["csv", "columnar", "avro", "rcfile", "jsonl"]:
         out = str(tmp_path / f"agree_{fmt}")
-        cli.ingest(spark, inputs[fmt], out, fmt=fmt, n_buckets=4)
+        cli.ingest(spark, inputs[fmt], out, fmt=fmt)
         cells[fmt] = _load_out(spark, out).select("rowkey", "qualifier", "value")
 
     col, avro, csv = cells["columnar"], cells["avro"], cells["csv"]
@@ -83,7 +83,7 @@ def test_cli_text_arity_gate(spark, inputs, tmp_path):
     """The text path drops malformed (8-field) rows — the mapper's
     skip-record branch (`BulkImporterFromText.java:56,68-70`)."""
     out = str(tmp_path / "out_text_gate")
-    cli.ingest(spark, inputs["text"], out, fmt="text", n_buckets=4)
+    cli.ingest(spark, inputs["text"], out, fmt="text")
     n_keys = _load_out(spark, out).select("rowkey").distinct().count()
 
     wide = records.wide9(spark, os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001"))
@@ -124,7 +124,7 @@ def test_cli_csv_arity_gate(spark, tmp_path):
     assert rows["a4"].z1 == ""  # empty string, not null (reference keeps "")
 
     out = str(tmp_path / "csv_gate_out")
-    cli.ingest(spark, src, out, fmt="csv", n_columns=3, key_cols=[0], n_buckets=2)
+    cli.ingest(spark, src, out, fmt="csv", n_columns=3, key_cols=[0])
     keys = _load_out(spark, out).select("rowkey").distinct().count()
     assert keys == 2  # only the two valid rows produce rowkeys
 
@@ -145,7 +145,7 @@ def test_cli_generic_arity(spark, tmp_path):
         .csv(src)
     )
     out = str(tmp_path / "out_nation3")
-    cli.ingest(spark, src, out, fmt="csv", n_columns=3, key_cols=[0, 2], n_buckets=4)
+    cli.ingest(spark, src, out, fmt="csv", n_columns=3, key_cols=[0, 2])
     df = _load_out(spark, out)
     n_nations = spark.read.parquet("/root/testdata/sf0.001/nation.parquet").count()
     assert df.select("rowkey").distinct().count() == n_nations
@@ -165,7 +165,7 @@ def test_sorted_within_files(spark, inputs, tmp_path):
     """Per-file cell order: (rowkey, qualifier) non-decreasing — the
     PutSortReducer contract the HFile sink relies on."""
     out = str(tmp_path / "out_sorted")
-    cli.ingest(spark, inputs["csv"], out, fmt="csv", n_buckets=4)
+    cli.ingest(spark, inputs["csv"], out, fmt="csv")
     df = spark.read.parquet(out).withColumn("_file", F.input_file_name())
     from pyspark.sql import Window
 
@@ -189,7 +189,7 @@ def test_cli_reference_fidelity_flags(spark, tmp_path):
         fh.write("35218,195,Alabama Power Co,AL,Bundled\n")
     out = str(tmp_path / "fid_out")
     cli.ingest(
-        spark, src, out, fmt="csv", n_columns=5, n_buckets=16,
+        spark, src, out, fmt="csv", n_columns=5,
         raw_binary_keys=True, positional_qualifiers=True,
     )
     df = _load_out(spark, out)
@@ -223,7 +223,7 @@ def test_cli_fidelity_hfile_sink_binary_scan(spark, tmp_path):
         fh.write("10000,42,Example Utility,TX,Delivery\n")
     out = str(tmp_path / "fidh_out")
     cli.ingest(
-        spark, src, out, fmt="csv", n_columns=5, n_buckets=16,
+        spark, src, out, fmt="csv", n_columns=5,
         raw_binary_keys=True, positional_qualifiers=True, sink="hfile",
     )
     got = scan_hfiles(spark, out, binary=True).collect()
@@ -259,7 +259,7 @@ def test_cli_conf_passthrough(spark, tmp_path):
     try:
         rc = cli.main([
             src, out, "--format", "csv", "--columns", "3",
-            "--key-cols", "0", "--n-buckets", "2",
+            "--key-cols", "0",
             "--conf", "spark.sql.shuffle.partitions=7",
         ])
         assert rc == 0
@@ -276,7 +276,7 @@ def test_ingest_metrics_one_pass(spark, inputs, tmp_path):
     reconcile with the written output."""
     out = str(tmp_path / "obs_out")
     m = cli.ingest(
-        spark, inputs["text"], out, fmt="text", n_buckets=4, collect_metrics=True
+        spark, inputs["text"], out, fmt="text", collect_metrics=True
     )
     assert m is not None and m["n_input"] > 0
     assert m["n_input"] == m["n_valid"] + m["n_skipped"]
@@ -306,7 +306,7 @@ def test_cli_main_hfile_sink(spark, tmp_path, capsys):
     out = str(tmp_path / "main_out")
     rc = cli.main([
         src, out, "--format", "csv", "--columns", "3", "--key-cols", "0",
-        "--n-buckets", "2", "--sink", "hfile",
+        "--sink", "hfile",
     ])
     assert rc == 0
     assert glob.glob(os.path.join(out, "region-*", "c", "*.hfile"))

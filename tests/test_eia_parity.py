@@ -96,7 +96,7 @@ def eia(tmp_path_factory):
 @pytest.fixture(scope="module")
 def ingested(spark, eia, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("eia_out") / "cells")
-    cli.ingest(spark, eia["src"], out, fmt="csv", n_buckets=16)
+    cli.ingest(spark, eia["src"], out, fmt="csv")
     return spark.read.parquet(out)
 
 

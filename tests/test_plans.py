@@ -22,11 +22,19 @@ QUERIES = entrymod.queries()
 
 def test_bulkload_pipeline_single_exchange(spark, sf_dir):
     """The flagship's core scale property: exactly ONE placement shuffle
-    (wide rows by bucket), unpivot and sort both after it. The
+    (wide rows by bucket), unpivot and sort both after it — the unpivot's
+    Expand prints above the exchange, so wide rows cross it. The
     parallelism floor's round-robin move (fires only on the local
     single-row-group fixture) is not a placement exchange."""
     plan = physical_plan(QUERIES["q_bulkload_pipeline"](spark, sf_dir))
     assert count_exchanges(plan, ignore_roundrobin=True) == 1, plan
+    lines = plan.splitlines()
+    expand = next(i for i, ln in enumerate(lines) if " Expand " in ln)
+    placement = next(
+        i for i, ln in enumerate(lines)
+        if "Exchange " in ln and "RoundRobinPartitioning" not in ln
+    )
+    assert expand < placement, plan
 
 
 def test_broadcast_rollup_never_shuffles_facts(spark, sf_dir):
@@ -183,6 +191,11 @@ def test_count_exchanges_excludes_all_broadcast_forms():
     assert count_exchanges("Exchange SinglePartition, true, [plan_id=2]") == 1
     assert count_exchanges("Exchange hashpartitioning(k, 32), REPARTITION") == 1
     assert count_exchanges("Exchange rangepartitioning(k ASC, 32)") == 1
+    by_id = (
+        "Exchange shufflepartitionidpassthrough(direct_shuffle_partition_id("
+        "cast(b#1 as int)), 4), REPARTITION_BY_NUM, [plan_id=37]"
+    )
+    assert count_exchanges(by_id) == count_exchanges(by_id, ignore_roundrobin=True) == 1
     rr = "Exchange RoundRobinPartitioning(32), REPARTITION_BY_NUM"
     assert count_exchanges(rr) == 1
     assert count_exchanges(rr, ignore_roundrobin=True) == 0
