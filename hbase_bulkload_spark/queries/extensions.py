@@ -12,6 +12,8 @@ item 3).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, functions as F
 
 from hbase_bulkload_spark import datasets
@@ -23,6 +25,14 @@ from hbase_bulkload_spark.session import oracle_safe
 SIM_THRESHOLD = 0.4
 JACCARD_THRESHOLD = 0.5
 N_QUERIES = 8  # vec_id < 8 form the similarity-search query set
+
+#: Committed oracle reference fixtures, in the checkout this package
+#: is imported from.
+ORACLE_FIXTURES = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "tests",
+    "fixtures",
+)
 
 
 def _docs(spark, sf_dir, floor: bool = False) -> DataFrame:
@@ -1507,12 +1517,12 @@ def q_multimodal_decode_real(spark, sf_dir) -> DataFrame:
     return feats.select("doc_id", "width", "height", "mean_byte")
 
 
-ORACLES_PNG_REAL = """
+ORACLES_PNG_REAL = f"""
     SELECT f.doc_id,
            CAST(32 AS INT) AS width,
            CAST(32 AS INT) AS height,
            f.mean_byte
-    FROM read_parquet('/root/repo/tests/fixtures/png_decode_ref.parquet') f
+    FROM read_parquet('{ORACLE_FIXTURES}/png_decode_ref.parquet') f
     WHERE f.corpus_chars = (SELECT SUM(n_chars) FROM documents)
 """
 
@@ -1901,9 +1911,9 @@ ORACLES = {
     # fixed demo merges with an independent pure-Python encoder over
     # every test corpus and commits the result; SUM(n_chars) keys the
     # scale (sf0.001/sf0.01 share COUNT(*) but not content).
-    "q_bpe_encode": """
+    "q_bpe_encode": f"""
         SELECT doc_id, n_tokens
-        FROM read_parquet('/root/repo/tests/fixtures/bpe_encode_ref.parquet')
+        FROM read_parquet('{ORACLE_FIXTURES}/bpe_encode_ref.parquet')
         WHERE corpus_chars = (SELECT SUM(n_chars) FROM documents)
     """,
     "q_decontaminate": f"""
@@ -2737,9 +2747,9 @@ ORACLES["q_multimodal_decode_real"] = ORACLES_PNG_REAL
 # iterative argmax loop has no SQL re-derivation; an independent
 # pure-Python learner's merge list is committed per corpus and keyed by
 # the corpus's char total (same discriminator as q_bpe_encode).
-ORACLES["q_bpe_merges"] = """
+ORACLES["q_bpe_merges"] = f"""
     SELECT CAST(step AS INT) AS step, "left", "right",
            CAST(pair_count AS BIGINT) AS pair_count
-    FROM read_parquet('/root/repo/tests/fixtures/bpe_merges_ref.parquet')
+    FROM read_parquet('{ORACLE_FIXTURES}/bpe_merges_ref.parquet')
     WHERE corpus_chars = (SELECT SUM(n_chars) FROM documents)
 """

@@ -26,7 +26,8 @@ Spark integration is source-shaped, not driver-shaped:
   the first sync, Hadoop input-split protocol). Intra-file
   parallelism no longer depends on file sizing: one misaligned 10 GB
   file becomes ``size/split_size`` tasks. ``scan_splits`` is the
-  operator; ``iter_ocf`` remains for whole-buffer decode.
+  operator; ``iter_ocf`` reads a whole file through the same split
+  reader.
 """
 
 from __future__ import annotations
@@ -263,47 +264,6 @@ def _read_header(buf: memoryview) -> tuple[dict[str, bytes], int]:
     return meta, pos + 16  # skip the header sync marker
 
 
-def record_field_names(data: bytes) -> list[str]:
-    """Field names declared by an OCF's embedded record schema — the
-    schema-reflection entry (`schema.getFields()` walk,
-    `BulkImporterFromAvro.java:55-57`) without decoding any rows."""
-    meta, _ = _read_header(memoryview(data))
-    schema = json.loads(meta["avro.schema"].decode())
-    return [f["name"] for f in schema["fields"]]
-
-
-def iter_ocf(data: bytes) -> Iterator[tuple]:
-    """Decode one OCF's bytes into value tuples (null/deflate/snappy)."""
-    buf = memoryview(data)
-    meta, pos = _read_header(buf)
-    codec = meta.get("avro.codec", b"null")
-    if codec not in CODECS:
-        raise NotImplementedError(f"avro codec {codec!r}")
-    decode_block = _DECODERS[codec]
-    schema = json.loads(meta["avro.schema"].decode())
-    types = _field_types(schema)
-    sync_len = 16
-
-    dec = _dec_value
-    end = len(buf)
-    while pos < end:
-        n_rows, pos = _dec_long(buf, pos)
-        block_size, pos = _dec_long(buf, pos)
-        if decode_block is not None:
-            src: bytes | memoryview = decode_block(bytes(buf[pos : pos + block_size]))
-            rp = 0
-        else:
-            src, rp = buf, pos
-        for _ in range(n_rows):
-            row = []
-            for t in types:
-                v, rp = dec(src, rp, t)
-                row.append(v)
-            yield tuple(row)
-        pos = (pos + block_size if decode_block is not None else rp) + sync_len
-    return
-
-
 def header_info(path: str) -> tuple[dict, bytes, int, int, str]:
     """Read ONLY the container header: returns (schema, sync_marker,
     data_start, file_size, codec). The header is a few hundred bytes;
@@ -369,6 +329,15 @@ def iter_ocf_range(
                     row.append(v)
                 yield tuple(row)
             pos = p + block_size + sl
+
+
+def iter_ocf(path: str) -> Iterator[tuple]:
+    """Decode one whole OCF into value tuples: :func:`iter_ocf_range`
+    over the file's whole data region."""
+    schema, sync, data_start, size, codec = header_info(path)
+    return iter_ocf_range(
+        path, data_start, size, data_start, sync, _field_types(schema), codec
+    )
 
 
 def scan_splits(spark, path: str, split_size: int | None = None):

@@ -68,7 +68,7 @@ split discipline as the RCFile/Avro scans.
 Measured single-core codec throughput (round 5, 200k bulkload-shaped
 cells — 32-byte hex rowkeys, 8 cells/row, short qualifiers/values;
 logical = uncompressed cell bytes, warm min-of-5): snappy encode
-112 MB/s (1.4M cells/s) with the Arrow-assembled ``_add_many_vec``
+112 MB/s (1.4M cells/s) with the Arrow-assembled ``add_many_arrow``
 (round 4's Python-bytes assembly measured 55 MB/s on the same shape),
 decode ~50 MB/s. At 32 cores ≈ 3.6 GB/s/node encode; what remains of
 `q_bulkload_hfile`'s cost is the decode side of its scan-back plus
@@ -80,7 +80,6 @@ as-is.
 from __future__ import annotations
 
 import hashlib
-import io
 import math
 import os
 import struct
@@ -284,7 +283,6 @@ def _decode_cells(plain: bytes) -> Iterator[tuple[bytes, bytes, bytes, int, byte
 # ---------------------------------------------------------------------------
 
 _PACK_H = struct.Struct(">H").pack
-_PACK_II = struct.Struct(">ii").pack
 _PACK_QB = struct.Struct(">qB").pack
 _UNPACK_II = struct.Struct(">ii").unpack_from
 _UNPACK_Q = struct.Struct(">q").unpack_from
@@ -398,139 +396,30 @@ class HFileWriter:
         self._key_len_sum += len(key)
         self._value_len_sum += len(value)
 
-    def add_many(
-        self,
-        rows: list[bytes],
-        fams: list[bytes],
-        quals: list[bytes],
-        ts: int | list[int],
-        values: list[bytes],
-    ) -> None:
-        """Bulk ``add``: the same cell stream, one call, byte-identical
-        output (pinned by tests/test_hfile.py::test_add_many_matches_add_bytes).
-
-        Large batches take the vectorized path (``_add_many_vec``):
-        Arrow concatenates all cell bytes in C, block boundaries come
-        from two ``searchsorted`` probes per block instead of a per-cell
-        loop, and bloom hashes are computed only at row-change
-        positions. Small batches keep the scalar loop — Arrow setup
-        overhead dominates under ~64 cells."""
-        if not rows:
-            return
-        if len(rows) >= 64:
-            self._add_many_vec(rows, fams, quals, ts, values)
-            return
-        pH, pII, pQB = _PACK_H, _PACK_II, _PACK_QB
-        if isinstance(ts, int):
-            tail = pQB(ts, KEYTYPE_PUT)
-            keys = [
-                pH(len(r)) + r + bytes((len(f),)) + f + q + tail
-                for r, f, q in zip(rows, fams, quals)
-            ]
-        else:
-            keys = [
-                pH(len(r)) + r + bytes((len(f),)) + f + q + pQB(t, KEYTYPE_PUT)
-                for r, f, q, t in zip(rows, fams, quals, ts)
-            ]
-        cells = [pII(len(k), len(v)) + k + v for k, v in zip(keys, values)]
-
-        block_size = self.block_size
-        buf = self._cells
-        buf_len = self._cells_len
-        first_key = self._first_key
-        last_row = self._last_row
-        bloom = self._bloom_hashes if self.bloom else None
-        md5 = hashlib.md5
-        for r, k, c in zip(rows, keys, cells):
-            if bloom is not None and r != last_row:
-                bloom.append(md5(r).digest())
-            if buf_len >= block_size and r != last_row:
-                # rare path: sync writer state, flush, re-localize
-                self._cells, self._cells_len = buf, buf_len
-                self._first_key, self._last_row = first_key, last_row
-                self._flush_data()
-                buf, buf_len, first_key = self._cells, 0, None
-            if first_key is None:
-                first_key = k
-            buf.append(c)
-            buf_len += len(c)
-            last_row = r
-        self._cells, self._cells_len = buf, buf_len
-        self._first_key, self._last_row = first_key, last_row
-
-        if self.first_row is None:
-            self.first_row = rows[0]
-        self.last_row = last_row
-        self.last_key = keys[-1]
-        self.entry_count += len(rows)
-        self._key_len_sum += sum(map(len, keys))
-        self._value_len_sum += sum(map(len, values))
-
-    def _add_many_vec(
-        self,
-        rows: list[bytes],
-        fams: list[bytes],
-        quals: list[bytes],
-        ts: int | list[int],
-        values: list[bytes],
-    ) -> None:
-        """Vectorized ``add_many`` body for LIST inputs: one list→Arrow
-        conversion, then :meth:`add_many_arrow` (the shared core). The
-        int32-offset split guard happens on the lists here (the
-        estimate is cheap — sum of lens) so the Arrow arrays are never
-        built oversized; the arrow entry point re-checks on buffer
-        math for callers that hand arrays directly."""
-        import pyarrow as pa
-
-        n = len(rows)
-
-        # Arrow BinaryArray offsets are int32: split on ESTIMATED BYTES
-        # (cell payloads + fixed header overhead), not just cell count —
-        # 3M cells of 1 KB values would blow the int32 offset space at
-        # any count cap. The estimate is cheap (sum of lens) and the
-        # 1 GiB bar leaves 2x headroom under the 2^31 limit.
-        est_bytes = (
-            sum(map(len, rows)) + sum(map(len, quals)) + sum(map(len, values))
-            + sum(map(len, fams)) + 25 * n
-        )
-        if n > 4_000_000 or (est_bytes > 1 << 30 and n > 1):
-            mid = n // 2
-            t0, t1 = (ts, ts) if isinstance(ts, int) else (ts[:mid], ts[mid:])
-            self._add_many_vec(rows[:mid], fams[:mid], quals[:mid], t0, values[:mid])
-            self._add_many_vec(rows[mid:], fams[mid:], quals[mid:], t1, values[mid:])
-            return
-
-        self.add_many_arrow(
-            pa.array(rows, pa.binary()),
-            pa.array(fams, pa.binary()),
-            pa.array(quals, pa.binary()),
-            ts,
-            pa.array(values, pa.binary()),
-        )
-
     def add_many_arrow(
         self,
         ra,
         fa,
         qa,
-        ts: int | list[int],
+        ts: int,
         va,
     ) -> None:
-        """Arrow-native ``add_many``: inputs are ``pa.Array`` (binary or
-        string — strings are cast once, the UTF-8 encode the scalar path
-        pays per value). This is the zero-conversion entry point for
-        ``mapInArrow`` executors: Spark's Arrow batch columns feed
-        straight in, so no per-cell Python bytes objects are EVER
-        created on the write path (measured ~2 s of a ~4.7 s write wall
-        at sf0.1 was mapInPandas' object-array materialization).
-        Byte-identical to the scalar ``add`` loop (pinned by
-        tests/test_hfile.py).
+        """The batch ``add``: one cell per position of the ``pa.Array``
+        inputs (binary or string — strings are cast once, the UTF-8
+        encode the scalar path pays per value), all stamped ``ts``. This
+        is the zero-conversion entry point for ``mapInArrow`` executors:
+        Spark's Arrow batch columns feed straight in, so no per-cell
+        Python bytes objects are EVER created on the write path
+        (measured ~2 s of a ~4.7 s write wall at sf0.1 was mapInPandas'
+        object-array materialization). Byte-identical to the scalar
+        ``add`` loop (pinned by tests/test_hfile.py).
 
         The cell stream is concatenated in C by Arrow's
         ``binary_join_element_wise`` — fixed-width header fields
-        (key/value lengths, row length, family length, timestamp+type
-        tail) become FixedSizeBinary arrays built from big-endian numpy
-        views, variable fields stay as binary arrays. Block boundaries
+        (key/value lengths, row length, family length) become
+        FixedSizeBinary arrays built from big-endian numpy views, the
+        timestamp+type tail is one scalar, variable fields stay as
+        binary arrays. Block boundaries
         replicate the scalar path's roll rule exactly (flush before
         cell i iff buffered bytes >= block_size AND row(i) != row(i-1))
         via two ``searchsorted`` probes per block over the Arrow offsets
@@ -564,13 +453,12 @@ class HFileWriter:
         est_bytes = _nbytes(ra) + _nbytes(fa) + _nbytes(qa) + _nbytes(va) + 25 * n
         if n > 4_000_000 or (est_bytes > 1 << 30 and n > 1):
             mid = n // 2
-            t0, t1 = (ts, ts) if isinstance(ts, int) else (ts[:mid], ts[mid:])
             self.add_many_arrow(
-                ra.slice(0, mid), fa.slice(0, mid), qa.slice(0, mid), t0,
+                ra.slice(0, mid), fa.slice(0, mid), qa.slice(0, mid), ts,
                 va.slice(0, mid),
             )
             self.add_many_arrow(
-                ra.slice(mid), fa.slice(mid), qa.slice(mid), t1, va.slice(mid)
+                ra.slice(mid), fa.slice(mid), qa.slice(mid), ts, va.slice(mid)
             )
             return
         lr = pc.binary_length(ra).cast(pa.int64()).to_numpy()
@@ -599,13 +487,6 @@ class HFileWriter:
         hdr = np.empty((n, 2), dtype=">i4")
         hdr[:, 0] = klen
         hdr[:, 1] = lv
-        if isinstance(ts, int):
-            tail_arr = pa.scalar(_PACK_QB(ts, KEYTYPE_PUT), pa.binary())
-        else:
-            tl = np.empty((n, 9), dtype=np.uint8)
-            tl[:, :8] = np.asarray(ts, dtype=">i8").view(np.uint8).reshape(n, 8)
-            tl[:, 8] = KEYTYPE_PUT
-            tail_arr = fsb(tl)
         cells = pc.binary_join_element_wise(
             fsb(hdr),
             fsb(lr.astype(">u2").reshape(-1, 1)),
@@ -613,7 +494,7 @@ class HFileWriter:
             fsb(lf.astype(np.uint8).reshape(-1, 1)),
             fa,
             qa,
-            tail_arr,
+            pa.scalar(_PACK_QB(ts, KEYTYPE_PUT), pa.binary()),
             va,
             pa.scalar(b"", pa.binary()),  # separator
         )
@@ -975,68 +856,6 @@ def iter_hfile(
             yield from _decode_cells(plain)
 
 
-def decode_cells_columns(
-    plain: bytes,
-    binary: bool = False,
-    want_family: bool = True,
-    want_qualifier: bool = True,
-    want_ts: bool = True,
-    want_value: bool = True,
-) -> tuple[list, list, list, list[int], list]:
-    """Scalar columnar cell decode: one pass, five output lists (row,
-    family, qualifier, ts, value). Since round 5 the scan hot paths use
-    :func:`decode_cells_arrow`; this remains the independent REFERENCE
-    decoder the hypothesis differential pins the vectorized one against
-    (tests/test_hfile.py), and the right tool for one-off block reads
-    where Arrow/numpy setup would dominate.
-    ``binary=True`` keeps raw bytes (the reference-fidelity raw-key /
-    positional-qualifier cells are not UTF-8); default decodes to str
-    for the canonical hex-key tables.
-
-    The ``want_*`` flags are decode-side column pruning (the HFile
-    analog of a parquet ReadSchema): a pruned column's list comes back
-    empty and its per-cell slice+decode cost is never paid. Rowkey is
-    always decoded — every consumer (range filters, region sort, keyed
-    aggregation) needs it."""
-    rows: list = []
-    fams: list = []
-    quals: list = []
-    tss: list[int] = []
-    vals: list = []
-    pos = 0
-    end = len(plain)
-    u_ii = struct.Struct(">ii").unpack_from
-    u_h = struct.Struct(">H").unpack_from
-    u_q = struct.Struct(">q").unpack_from
-    while pos < end:
-        klen, vlen = u_ii(plain, pos)
-        pos += 8
-        kend = pos + klen
-        (rl,) = u_h(plain, pos)
-        fs = pos + 3 + rl
-        fl = plain[pos + 2 + rl]
-        if binary:
-            rows.append(plain[pos + 2 : pos + 2 + rl])
-            if want_family:
-                fams.append(plain[fs : fs + fl])
-            if want_qualifier:
-                quals.append(plain[fs + fl : kend - 9])
-            if want_value:
-                vals.append(plain[kend : kend + vlen])
-        else:
-            rows.append(plain[pos + 2 : pos + 2 + rl].decode())
-            if want_family:
-                fams.append(plain[fs : fs + fl].decode())
-            if want_qualifier:
-                quals.append(plain[fs + fl : kend - 9].decode())
-            if want_value:
-                vals.append(plain[kend : kend + vlen].decode())
-        if want_ts:
-            tss.append(u_q(plain, kend - 9)[0])
-        pos = kend + vlen
-    return rows, fams, quals, tss, vals
-
-
 def decode_cells_arrow(
     plain: bytes,
     binary: bool = False,
@@ -1046,7 +865,7 @@ def decode_cells_arrow(
     want_value: bool = True,
 ):
     """Vectorized columnar cell decode: the mirror of
-    ``HFileWriter._add_many_vec``. One Python loop walks only the
+    ``HFileWriter.add_many_arrow``. One Python loop walks only the
     8-byte length headers to recover cell offsets (the offset chain is
     inherently sequential); every field is then extracted with numpy
     gathers and materialized as Arrow binary arrays built directly from
@@ -1057,7 +876,7 @@ def decode_cells_arrow(
     value`` (pruned columns absent). Its caller (the ``scan_hfiles``
     mapInArrow task) feeds Arrow, so measured end-to-end (decode THROUGH an Arrow
     record batch, 32 warm workers) this is ~1.4x the scalar
-    decode-to-lists+pa.array path; feed it a whole split's
+    decode-to-lists+pa.array path it replaced; feed it a whole split's
     concatenated block payloads, not single 64 KB blocks, or the
     per-call setup eats the win."""
     import numpy as np
@@ -1180,21 +999,6 @@ def decode_cells_arrow(
     if want_value:
         cols["value"] = gather(st + 8 + klen, vlen)
     return cols
-
-
-def iter_blocks_range(
-    path: str,
-    entries: list[tuple[int, int, bytes]],
-    codec: str | None,
-    verify: bool = True,
-) -> Iterator[tuple[bytes, bytes, bytes, int, bytes]]:
-    """Decode an explicit subset of data blocks — the task side of an
-    index-planned split scan."""
-    with open(path, "rb") as f:
-        for off, _size, _key in entries:
-            yield from _decode_cells(
-                _read_block(f, off, codec, DATA_MAGIC, verify)
-            )
 
 
 def _row_span(first_rows: list[bytes], row: bytes) -> range:

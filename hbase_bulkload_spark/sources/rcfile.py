@@ -26,8 +26,9 @@ directly, for the subset the engine needs:
 
 Spark integration mirrors ``sources.avro_ocf``: executors write one
 ``part-N.rc`` per partition; the scan plans byte-range splits from
-per-file headers and decodes row groups whose sync anchor falls inside
-the split — intra-file parallelism tracks bytes, not file count. Column
+per-file headers and each split decodes the row groups whose last sync
+anchor falls inside it (Hadoop's ``RCFileRecordReader`` rule) —
+intra-file parallelism tracks bytes, not file count. Column
 *pruning* happens at decode time: un-projected columns are never
 decompressed or sliced (the RCFile read path the reference never had —
 its mapper materializes every column, `BulkImporterFromRC.java:60-64`).
@@ -38,7 +39,7 @@ never collide with it).
 
 from __future__ import annotations
 
-import io
+import mmap
 import os
 import struct
 import zlib
@@ -161,7 +162,8 @@ def write_rcfile(
     """Write one RCFile. ``rows`` are tuples of ``str | bytes | None``
     (None → ``\\N``). ``codec`` is None or ``"deflate"`` (zlib, the
     Hadoop DefaultCodec stream). A sync anchor precedes every row group
-    so byte-range splits can align on any group. Returns row count."""
+    so byte-range splits can align on any group; readers need none
+    (Hive anchors only once per sync interval). Returns row count."""
     if codec not in (None, "deflate"):
         raise NotImplementedError(f"rcfile codec {codec!r}")
     sync = _sync_marker(f"rcfile|{n_cols}|{codec}")
@@ -308,22 +310,14 @@ def _decode_group(
     return out, pos
 
 
-def iter_rcfile(
-    data: bytes, columns: list[int] | None = None
-) -> Iterator[tuple]:
-    """Decode a whole RCFile's bytes into row tuples of
-    ``str | None`` (projected to ``columns`` when given)."""
-    buf = memoryview(data)
-    n_cols, codec, sync, pos = _read_header(buf)
-    end = len(buf)
-    while pos < end:
-        if bytes(buf[pos : pos + 4]) == SYNC_ESCAPE:
-            if bytes(buf[pos + 4 : pos + 20]) != sync:
-                raise ValueError("sync marker mismatch")
-            pos += 20
-        cols, pos = _decode_group(buf, pos, n_cols, codec, columns)
-        for row in zip(*cols):
-            yield tuple(None if c is None else c.decode("utf-8") for c in row)
+def iter_rcfile(path: str, columns: list[int] | None = None) -> Iterator[tuple]:
+    """Decode a whole RCFile into row tuples of ``str | None``
+    (projected to ``columns`` when given): :func:`iter_rcfile_range`
+    over the file's whole data region."""
+    n_cols, codec, sync, data_start, size = header_info(path)
+    return iter_rcfile_range(
+        path, data_start, size, data_start, sync, n_cols, codec, columns
+    )
 
 
 def iter_rcfile_range(
@@ -336,45 +330,45 @@ def iter_rcfile_range(
     codec: str | None,
     columns: list[int] | None = None,
 ) -> Iterator[tuple]:
-    """Hadoop input-split protocol over row groups: decode every group
-    whose sync anchor (``-1`` escape + sync marker) starts in
-    ``[start, end)``; the split holding ``data_start`` owns the first
-    group. Reads past ``end`` only to finish the last owned group."""
+    """Hadoop ``RCFileRecordReader`` over the split ``[start, end)``: a
+    row group belongs to the split that holds the last sync anchor
+    (``-1`` escape + sync marker) before it, and the groups before the
+    first anchor belong to the split that holds ``data_start``. The
+    split starts at ``data_start`` or at its first anchor, walks the
+    groups one after another by their on-disk sizes, and stops at the
+    first anchor at or past ``end``, so it reads past ``end`` only to
+    finish the groups it owns. Any anchor layout reads back whole: this
+    module's writer anchors every group, Hive's one per sync interval."""
     anchor = SYNC_ESCAPE + sync
-    with open(path, "rb") as f:
-        lo = max(start, data_start)
-        f.seek(lo)
-        buf = bytearray(f.read(max(end - lo, 0)))
-        i = bytes(buf).find(anchor)
-        while i != -1 and lo + i < end:
-            pos = i + 20
-            # ensure the fixed ints + key + values are buffered
-            while len(buf) - pos < 12:
-                more = f.read(1 << 16)
-                if not more:
+    with open(path, "rb") as f, mmap.mmap(
+        f.fileno(), 0, access=mmap.ACCESS_READ
+    ) as buf:
+        size = len(buf)
+        if start <= data_start:
+            pos = data_start
+        else:
+            pos = buf.find(anchor, start, end + len(anchor) - 1)
+            if pos == -1:
+                return  # no anchor in the split: it owns no group
+        while pos < size:
+            if buf[pos : pos + 4] == SYNC_ESCAPE:
+                if buf[pos + 4 : pos + 20] != sync:
+                    raise ValueError(f"{path}: sync marker mismatch at byte {pos}")
+                if pos >= end:
                     return
-                buf += more
-            rec_len, _key_len, key_disk_len = struct.unpack_from(">iii", buf, pos)
-            # rec_len counts the uncompressed key; on disk the group is
-            # bounded by key_disk_len + value bytes, and value bytes are
-            # found from the key — simplest safe bound: read until the
-            # next anchor or EOF, then let _decode_group consume exactly
-            # one group.
-            while True:
-                j = bytes(buf).find(anchor, pos)
-                if j != -1:
-                    break
-                more = f.read(1 << 20)
-                if not more:
-                    j = len(buf)
-                    break
-                buf += more
-            cols, _ = _decode_group(memoryview(buf), pos, n_cols, codec, columns)
+                pos += 20
+            if pos + 12 > size:
+                raise ValueError(f"{path}: truncated row group at byte {pos}")
+            # record length counts the uncompressed key; on disk the key
+            # takes key_disk_len bytes and the values the rest
+            rec_len, key_len, key_disk_len = struct.unpack_from(">iii", buf, pos)
+            group_end = pos + 12 + key_disk_len + rec_len - key_len
+            if not pos + 12 + key_disk_len <= group_end <= size:
+                raise ValueError(f"{path}: truncated row group at byte {pos}")
+            cols, _ = _decode_group(buf, pos, n_cols, codec, columns)
             for row in zip(*cols):
-                yield tuple(
-                    None if c is None else c.decode("utf-8") for c in row
-                )
-            i = j if j < len(buf) else -1
+                yield tuple(None if c is None else c.decode("utf-8") for c in row)
+            pos = group_end
 
 
 def scan_splits(

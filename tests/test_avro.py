@@ -23,7 +23,7 @@ def test_ocf_roundtrip_nullable_strings(tmp_path):
     rows = [("x", None), (None, "y"), ("", "é中"), (None, None)]
     p = str(tmp_path / "t.avro")
     assert avro_ocf.write_ocf(p, schema, rows) == 4
-    assert list(avro_ocf.iter_ocf(open(p, "rb").read())) == rows
+    assert list(avro_ocf.iter_ocf(p)) == rows
 
 
 def test_ocf_multi_block(tmp_path):
@@ -31,7 +31,7 @@ def test_ocf_multi_block(tmp_path):
     rows = [(f"v{i}",) for i in range(avro_ocf.BLOCK_ROWS * 2 + 17)]
     p = str(tmp_path / "big.avro")
     assert avro_ocf.write_ocf(p, schema, rows) == len(rows)
-    assert list(avro_ocf.iter_ocf(open(p, "rb").read())) == rows
+    assert list(avro_ocf.iter_ocf(p)) == rows
 
 
 def test_ocf_primitives(tmp_path):
@@ -48,7 +48,7 @@ def test_ocf_primitives(tmp_path):
     rows = [(-1, 1.5, True, None), (2**40, -0.25, False, -(2**33))]
     p = str(tmp_path / "p.avro")
     avro_ocf.write_ocf(p, schema, rows)
-    assert list(avro_ocf.iter_ocf(open(p, "rb").read())) == rows
+    assert list(avro_ocf.iter_ocf(p)) == rows
 
 
 try:
@@ -84,8 +84,7 @@ try:
             path = f.name
         try:
             avro_ocf.write_ocf(path, schema, tmp_rows)
-            with open(path, "rb") as fh:
-                assert list(avro_ocf.iter_ocf(fh.read())) == tmp_rows
+            assert list(avro_ocf.iter_ocf(path)) == tmp_rows
         finally:
             os.unlink(path)
 
@@ -165,7 +164,7 @@ def test_scan_splits_primitive_schema(spark, tmp_path):
 @pytest.mark.parametrize("codec", ["deflate", "snappy"])
 def test_compressed_roundtrip_and_split_scan(spark, tmp_path, codec):
     """Compressed codecs: write compresses (file strictly smaller than
-    the null-codec twin), whole-buffer decode and the sync-marker split
+    the null-codec twin), whole-file decode and the sync-marker split
     scan both recover every row exactly once."""
     schema = avro_ocf.nullable_string_record("T", ["a", "b"])
     rows = [(f"key{i:06d}", None if i % 11 == 0 else f"val{i}" * 3) for i in range(20_000)]
@@ -177,9 +176,7 @@ def test_compressed_roundtrip_and_split_scan(spark, tmp_path, codec):
     avro_ocf.write_ocf(p_null, schema, rows)
     assert os.path.getsize(p_comp) < os.path.getsize(p_null)
 
-    with open(p_comp, "rb") as f:
-        got = list(avro_ocf.iter_ocf(f.read()))
-    assert got == rows
+    assert list(avro_ocf.iter_ocf(p_comp)) == rows
 
     fsize = os.path.getsize(p_comp)
     df = avro_ocf.scan_splits(spark, src, split_size=max(fsize // 5, 1))
@@ -194,8 +191,9 @@ def test_snappy_crc_validated(tmp_path):
     avro_ocf.write_ocf(p, schema, [(f"row{i}",) for i in range(100)], codec="snappy")
     data = bytearray(open(p, "rb").read())
     data[-21] ^= 0xFF  # flip a byte inside the last block's payload/CRC
+    open(p, "wb").write(data)
     with pytest.raises((ValueError, OSError)):
-        list(avro_ocf.iter_ocf(bytes(data)))
+        list(avro_ocf.iter_ocf(p))
 
 
 def test_unsupported_codec_rejected(tmp_path):

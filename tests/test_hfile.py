@@ -66,9 +66,12 @@ def test_roundtrip_codecs(tmp_path, codec):
 
 
 def test_add_many_matches_add_bytes(tmp_path):
-    """Bulk add_many must produce a byte-identical file to per-cell add —
-    same blocks, same index, same trailer — for both constant and
-    per-cell timestamps, across chunked calls that land mid-block."""
+    """The batch encoder ``add_many_arrow`` must produce a byte-identical
+    file to per-cell ``add`` — same blocks, same index, same trailer —
+    from binary and from string arrays, across chunked calls that land
+    mid-block."""
+    import pyarrow as pa
+
     data = cells(700, quals=(b"q0", b"q1", b"q2"))
     p1 = str(tmp_path / "percell.hfile")
     w1 = hf.HFileWriter(p1, "snappy", block_size=2048)
@@ -76,34 +79,20 @@ def test_add_many_matches_add_bytes(tmp_path):
         w1.add(row, fam, qual, ts, value)
     m1 = w1.close()
 
-    p2 = str(tmp_path / "bulk.hfile")
-    w2 = hf.HFileWriter(p2, "snappy", block_size=2048)
-    # feed in uneven chunks so bulk calls start mid-block
-    for lo in range(0, len(data), 311):
-        chunk = data[lo : lo + 311]
-        w2.add_many(
-            [c[0] for c in chunk],
-            [c[1] for c in chunk],
-            [c[2] for c in chunk],
-            7,  # constant-ts fast path; cells() stamps ts=7
-            [c[4] for c in chunk],
-        )
-    m2 = w2.close()
-    assert m1["entry_count"] == m2["entry_count"] == len(data)
-    assert open(p1, "rb").read() == open(p2, "rb").read()
-
-    # per-cell timestamp list path
-    p3 = str(tmp_path / "bulk_ts.hfile")
-    w3 = hf.HFileWriter(p3, "snappy", block_size=2048)
-    w3.add_many(
-        [c[0] for c in data],
-        [c[1] for c in data],
-        [c[2] for c in data],
-        [c[3] for c in data],
-        [c[4] for c in data],
-    )
-    w3.close()
-    assert open(p1, "rb").read() == open(p3, "rb").read()
+    for typ in (pa.binary(), pa.string()):
+        p2 = str(tmp_path / f"bulk-{typ}.hfile")
+        w2 = hf.HFileWriter(p2, "snappy", block_size=2048)
+        # feed in uneven chunks so batch calls start mid-block
+        for lo in range(0, len(data), 311):
+            chunk = data[lo : lo + 311]
+            rk, fam, qual, val = (
+                pa.array([c[i] if typ == pa.binary() else c[i].decode() for c in chunk], typ)
+                for i in (0, 1, 2, 4)
+            )
+            w2.add_many_arrow(rk, fam, qual, 7, val)  # cells() stamps ts=7
+        m2 = w2.close()
+        assert m1["entry_count"] == m2["entry_count"] == len(data)
+        assert open(p1, "rb").read() == open(p2, "rb").read(), typ
 
 
 def test_trailer_and_fileinfo(tmp_path):
@@ -324,16 +313,14 @@ def test_straddling_rows_read_back_whole(tmp_path, index_chunk):
         ]
     assert hf.hfile_multi_get(path, rows[::-1]) == data
     for start in rows:
-        got = [
-            c
-            for _path, _region, codec, blocks in hl.plan_block_splits(
-                table, start_row=start
-            )
-            for c in hf.iter_blocks_range(
-                path, [(off, size, b"") for off, size in blocks], codec
-            )
-            if c[0] >= start
-        ]
+        got = []
+        for split_path, _region, codec, blocks in hl.plan_block_splits(
+            table, start_row=start
+        ):
+            with open(split_path, "rb") as f:
+                for off, _size in blocks:
+                    plain = hf._read_block(f, off, codec, hf.DATA_MAGIC)
+                    got.extend(c for c in hf._decode_cells(plain) if c[0] >= start)
         assert got == [c for c in data if c[0] >= start]
 
 
@@ -659,8 +646,11 @@ try:
     def test_hfile_roundtrip_property(rows, codec, block_size, index_chunk):
         """Arbitrary binary rows/qualifiers/values (empty values, NUL
         bytes, any codec, tiny blocks forcing multi-level indexes)
-        survive the write→iter→point-get path exactly."""
+        survive the write→iter→point-get path exactly, and the batch
+        encoder and Arrow decoder agree with the scalar ones."""
         import tempfile
+
+        import pyarrow as pa
 
         # writer contract: cells sorted by (row, qualifier)
         rows = sorted(rows, key=lambda r: r[0])
@@ -684,40 +674,40 @@ try:
                 ]
                 assert hf.hfile_get(path, rk) == want
 
-            # differential: the vectorized encode (forced, any size) must
-            # produce identical bytes, and the vectorized Arrow decode
-            # must equal the scalar decoder on the same payloads —
-            # arbitrary binary cells, empty values, NULs, every codec
-            vpath = path + ".vec"
+            # differential: the batch encoder must write the bytes the
+            # scalar ``add`` writes for the same cells at one timestamp,
+            # and the vectorized Arrow decode must equal the scalar
+            # decoder on the same payloads — arbitrary binary cells,
+            # empty values, NULs, every codec
+            ts0 = data[0][3]
+            ref_path, arrow_path = path + ".add", path + ".arrow"
             try:
-                w2 = hf.HFileWriter(vpath, codec, block_size, index_chunk=index_chunk)
-                w2._add_many_vec(
-                    [c[0] for c in data],
-                    [c[1] for c in data],
-                    [c[2] for c in data],
-                    [c[3] for c in data],
-                    [c[4] for c in data],
+                w1 = hf.HFileWriter(ref_path, codec, block_size, index_chunk=index_chunk)
+                for rk, fam, qual, _ts, val in data:
+                    w1.add(rk, fam, qual, ts0, val)
+                w1.close()
+                w2 = hf.HFileWriter(arrow_path, codec, block_size, index_chunk=index_chunk)
+                rk, fam, qual, val = (
+                    pa.array([c[i] for c in data], pa.binary()) for i in (0, 1, 2, 4)
                 )
+                w2.add_many_arrow(rk, fam, qual, ts0, val)
                 w2.close()
-                assert open(path, "rb").read() == open(vpath, "rb").read()
+                assert open(ref_path, "rb").read() == open(arrow_path, "rb").read()
             finally:
-                os.unlink(vpath)
+                for p in (ref_path, arrow_path):
+                    if os.path.exists(p):
+                        os.unlink(p)
             with open(path, "rb") as f:
                 tr = hf.read_trailer(f)
                 plains = [
                     hf._read_block(f, off, tr.compression, hf.DATA_MAGIC)
                     for off, _s, _k in hf.read_data_index(f, tr)
                 ]
-            ref = [[], [], [], [], []]
-            for p in plains:
-                for part, acc in zip(hf.decode_cells_columns(p, binary=True), ref):
-                    acc.extend(part)
             got = hf.decode_cells_arrow(b"".join(plains), binary=True)
-            assert got["rowkey"].to_pylist() == ref[0]
-            assert got["family"].to_pylist() == ref[1]
-            assert got["qualifier"].to_pylist() == ref[2]
-            assert got["ts"].to_pylist() == ref[3]
-            assert got["value"].to_pylist() == ref[4]
+            names = ("rowkey", "family", "qualifier", "ts", "value")
+            assert list(zip(*(got[k].to_pylist() for k in names))) == [
+                c for p in plains for c in hf._decode_cells(p)
+            ]
         finally:
             os.unlink(path)
 

@@ -11,13 +11,11 @@ time); the whole sweep costs a few minutes at the test fixture scale.
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
 from hbase_bulkload_spark.plans import physical_plan, scan_summaries
 
-sys.path.insert(0, "/root/repo")
+# conftest.py puts this checkout's root on the import path
 import __spark_entry__ as entrymod  # noqa: E402
 
 # Nested-loop joins the registry DELIBERATELY contains. q_join_cross is

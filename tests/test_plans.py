@@ -5,8 +5,6 @@ fail before any benchmark notices."""
 
 from __future__ import annotations
 
-import sys
-
 from hbase_bulkload_spark.plans import (
     count_broadcast_joins,
     count_exchanges,
@@ -14,7 +12,7 @@ from hbase_bulkload_spark.plans import (
     scan_summaries,
 )
 
-sys.path.insert(0, "/root/repo")
+# conftest.py puts this checkout's root on the import path
 import __spark_entry__ as entrymod  # noqa: E402
 
 QUERIES = entrymod.queries()

@@ -66,13 +66,13 @@ def test_write_read_roundtrip(tmp_path, codec):
     p = str(tmp_path / "t.rc")
     n = rcfile.write_rcfile(p, ROWS, 3, codec=codec, rows_per_group=2)
     assert n == 4
-    assert list(rcfile.iter_rcfile(open(p, "rb").read())) == ROWS
+    assert list(rcfile.iter_rcfile(p)) == ROWS
 
 
 def test_column_pruning_decodes_projection_only(tmp_path):
     p = str(tmp_path / "t.rc")
     rcfile.write_rcfile(p, ROWS, 3)
-    out = list(rcfile.iter_rcfile(open(p, "rb").read(), columns=[2, 0]))
+    out = list(rcfile.iter_rcfile(p, columns=[2, 0]))
     # projection preserves FILE column order (like parquet ReadSchema)
     assert out == [(r[0], r[2]) for r in ROWS]
 
@@ -104,6 +104,72 @@ def test_range_reader_covers_file_exactly(tmp_path):
             )
             b = e
         assert got == rows, f"n_splits={n_splits}"
+
+
+def _strip_anchors(path: str, keep: set[int]) -> None:
+    """Rewrite a package-written RCFile (one anchor before every group)
+    without the sync anchors of the groups not in ``keep`` — the layout
+    Hive's writer leaves: no anchor before the first group, then one
+    per sync interval."""
+    _, _, sync, data_start, _ = rcfile.header_info(path)
+    anchor = rcfile.SYNC_ESCAPE + sync
+    data = open(path, "rb").read()
+    lead, *groups = data[data_start:].split(anchor)
+    assert lead == b""
+    with open(path, "wb") as f:
+        f.write(data[:data_start])
+        for i, g in enumerate(groups):
+            f.write((anchor if i in keep else b"") + g)
+
+
+def test_truncated_group_rejected(tmp_path):
+    """A file cut inside its last row group raises, naming the file and
+    the group's offset, instead of returning shortened cells."""
+    p = str(tmp_path / "cut.rc")
+    rcfile.write_rcfile(p, ROWS, 3, rows_per_group=2)
+    data = open(p, "rb").read()
+    open(p, "wb").write(data[:-3])
+    with pytest.raises(ValueError, match=r"cut\.rc: truncated row group at byte \d+"):
+        list(rcfile.iter_rcfile(p))
+
+
+@pytest.mark.parametrize("codec", [None, "deflate"])
+@pytest.mark.parametrize(
+    "n_rows, rows_per_group, keep",
+    [(500, 32, {3, 4, 9}), (20, rcfile.DEFAULT_ROWS_PER_GROUP, set())],
+    ids=["inner-anchors", "one-group-no-anchor"],
+)
+def test_groups_without_anchor_read_back(
+    spark, tmp_path, codec, n_rows, rows_per_group, keep
+):
+    """Groups with no sync anchor in front of them belong to the split
+    that holds the last anchor before them, or to the split holding
+    ``data_start`` when none is: every row comes back exactly once from
+    the range reader at any split count and from the Spark scan."""
+    src = tmp_path / "rc"
+    src.mkdir()
+    p = str(src / "hive_like.rc")
+    rows = [(f"r{i}", f"v{i % 7}" * (i % 5 + 1)) for i in range(n_rows)]
+    rcfile.write_rcfile(p, rows, 2, codec=codec, rows_per_group=rows_per_group)
+    _strip_anchors(p, keep)
+    n_cols, codec, sync, data_start, size = rcfile.header_info(p)
+    assert (rcfile.SYNC_ESCAPE + sync) not in open(p, "rb").read()[
+        data_start : data_start + 20
+    ]
+
+    for n_splits in (1, 2, 3, 7):
+        step = (size - data_start) // n_splits + 1
+        got = []
+        for b in range(data_start, size, step):
+            got.extend(rcfile.iter_rcfile_range(
+                p, b, min(b + step, size), data_start, sync, n_cols, codec
+            ))
+        assert got == rows, f"n_splits={n_splits}"
+
+    split = (size - data_start) // 3 + 1  # later splits start mid-file
+    df = rcfile.scan_splits(spark, str(src), ["a", "b"], split_size=split)
+    assert df.rdd.getNumPartitions() == 3
+    assert sorted((r.a, r.b) for r in df.collect()) == sorted(rows)
 
 
 # ---------------------------------------------------------------------------
@@ -197,7 +263,7 @@ try:
                 path, rows, 3, codec=codec, rows_per_group=rows_per_group
             )
             assert n == len(rows)
-            assert list(rcfile.iter_rcfile(open(path, "rb").read())) == rows
+            assert list(rcfile.iter_rcfile(path)) == rows
         finally:
             os.unlink(path)
 

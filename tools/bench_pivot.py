@@ -14,11 +14,12 @@ should win once the exchange crosses a real network.
 from __future__ import annotations
 
 import json
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hbase_bulkload_spark.functions.keys import composite_rowkey
 from hbase_bulkload_spark.operators.kv import pivot_wide, unpivot_kv

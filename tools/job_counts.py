@@ -11,9 +11,10 @@ sub-second keys at sf0.1. One JSON line: {key: n_jobs}.
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hbase_bulkload_spark.session import get_spark
 

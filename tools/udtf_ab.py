@@ -20,11 +20,12 @@ hash-checked against DuckDB).
 from __future__ import annotations
 
 import json
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hbase_bulkload_spark.session import get_spark
 from hbase_bulkload_spark.sources import records
