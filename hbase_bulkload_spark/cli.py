@@ -23,12 +23,14 @@ bucket — the analog of the HFile directory handed to `doBulkLoad`
 has no analog (no HBase cluster in scope); the 16 hex-nibble buckets
 are the regions.
 
-`--sink hfile` writes the reference's artifact itself: HFile v3 files
-placed into a table of 16 regions, one per hex-nibble bucket
-(`operators.hfile_load.bulkload_to_table`). That path exchanges and
-sorts the same WIDE rows (rowkey, bucket, one column per value) and
-explodes them into cells inside the writer task, so the Arrow hop, like
-the shuffle, carries each rowkey once instead of once per cell. The
+`--sink hfile` writes the reference's artifact itself: snappy HFile v3
+files placed into a table of 16 regions, one per hex-nibble bucket, by
+one call (`operators.hfile_load.bulkload_to_table`) on the WIDE rows
+(rowkey, bucket, one column per value). The sink exchanges and sorts
+them and explodes them into cells inside the writer task, so the Arrow
+hop, like the shuffle, carries each rowkey once instead of once per
+cell. `read_text` and `read_csv` share one split-and-arity-gate body
+and differ only in the split expression. The
 reference sizes its job by region count (one reducer per region); here
 the work is sized by the input and the cores: a text/csv scan splits at
 about two tasks per core (`_scan_splits`), and either sink's write runs
@@ -73,6 +75,22 @@ def _cols(n: int) -> list[str]:
     return [f"z{i}" for i in range(n)]
 
 
+def _split_lines(
+    spark: SparkSession, path: str, n_columns: int, fields, observation
+) -> DataFrame:
+    """The one delimited-line parse of :func:`read_text` and
+    :func:`read_csv`: scan ``path`` as lines, split each by the
+    ``fields`` expression over ``value``, keep a line iff it has exactly
+    ``n_columns`` fields, and name them ``z0..``."""
+    cols = _cols(n_columns)
+    lines = _observe_lines(spark.read.text(path), observation)
+    return (
+        lines.select(fields.alias("p"))
+        .filter(F.size("p") == n_columns)
+        .select(*[F.col("p").getItem(i).alias(c) for i, c in enumerate(cols)])
+    )
+
+
 def read_text(
     spark: SparkSession,
     path: str,
@@ -90,13 +108,8 @@ def read_text(
     surviving line counts are accumulated DURING the one scan — no
     second pass, no accumulator races (observed metrics are
     exactly-once per action)."""
-    cols = _cols(n_columns)
-    parts = F.split(F.col("value"), sep)
-    lines = _observe_lines(spark.read.text(path), observation)
-    return (
-        lines.select(parts.alias("p"))
-        .filter(F.size("p") == n_columns)
-        .select(*[F.col("p").getItem(i).alias(cols[i]) for i in range(n_columns)])
+    return _split_lines(
+        spark, path, n_columns, F.split(F.col("value"), sep), observation
     )
 
 
@@ -120,14 +133,8 @@ def read_csv(
     actually materializes, so under column pruning (`df.count()`, key-
     only projections) the gate silently vanishes.
     """
-    cols = _cols(n_columns)
-    parts = F.split(F.regexp_replace(F.col("value"), ",+$", ""), ",", -1)
-    lines = _observe_lines(spark.read.text(path), observation)
-    return (
-        lines.select(parts.alias("p"))
-        .filter(F.size("p") == n_columns)
-        .select(*[F.col("p").getItem(i).alias(cols[i]) for i in range(n_columns)])
-    )
+    fields = F.split(F.regexp_replace(F.col("value"), ",+$", ""), ",", -1)
+    return _split_lines(spark, path, n_columns, fields, observation)
 
 
 def read_columnar(spark: SparkSession, path: str, fmt: str = "orc") -> DataFrame:
@@ -248,7 +255,6 @@ def ingest(
     from hbase_bulkload_spark.operators.bulkload import (
         bulkload_pipeline,
         bulkload_wide,
-        region_align_wide,
         region_boundaries,
         write_bulkload,
         write_tasks,
@@ -291,8 +297,8 @@ def ingest(
             # tasks explode them into cells
             wide, qualifiers = bulkload_wide(df, keys, cols, **fidelity)
             bulkload_to_table(
-                region_align_wide(wide), output_path,
-                region_boundaries(raw_binary_keys), qualifiers=qualifiers,
+                wide, output_path, region_boundaries(raw_binary_keys),
+                qualifiers=qualifiers,
             )
         else:
             write_bulkload(bulkload_pipeline(df, keys, cols, **fidelity), output_path)

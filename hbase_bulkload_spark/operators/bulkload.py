@@ -22,12 +22,12 @@ the write task count follows the cores, not the region count (the
 reference hardcodes 10 regions, `RowKeyConverter.java:8`).
 
 Every bulk-load sink exchanges wide rows (`bulkload_wide`), one
-shuffled record per input row. The HFile sinks sort them
-(`region_align_wide`) and the writer tasks explode the sorted rows into
-cells in qualifier byte order (`hfile_load.write_region_hfiles`, behind
-`hfile_load.bulkload_to_table` and the streaming HFile sink); the
-parquet sink unpivots them after the exchange (`bulkload_pipeline` →
-`write_bulkload`).
+shuffled record per input row. The HFile sink takes them unaligned
+(`hfile_load.write_region_hfiles`, behind `hfile_load.bulkload_to_table`
+and the streaming HFile sink): it sorts them (`region_align_wide`, its
+only caller) and its writer tasks explode the sorted rows into cells
+in qualifier byte order; the parquet sink unpivots them after the
+exchange (`bulkload_pipeline` → `write_bulkload`).
 """
 
 from __future__ import annotations
@@ -143,7 +143,8 @@ def bulkload_wide(
     qualifier bytes of those value columns: the UTF-8 column names, or
     `Bytes.toBytes(i)` with ``positional_qualifiers``. Map-only, like
     :func:`bulkload_kv`, whose key, bucket and fidelity modes it
-    shares; :func:`region_align_wide` is its exchange."""
+    shares; the HFile sink applies :func:`region_align_wide`, its
+    exchange."""
     wide = df.select(
         _rowkey(key_cols, raw_binary_keys).alias("rowkey"),
         *[F.col(c).cast("string").alias(c) for c in value_cols],
@@ -179,7 +180,7 @@ def bulkload_pipeline(
     # at sf0.1: the Expand + string copy dominates, not the sort). The
     # exploded-frame sort is both correct and no slower. (The HFile
     # sinks do sort wide rows: their writer task re-orders each run of
-    # equal rowkeys by qualifier, see hfile_load.explode_wide_batches.)
+    # equal rowkeys by qualifier, see hfile_load.write_wide_batches.)
     return _cells(
         _to_write_tasks(wide), F.col("rowkey"), value_cols, family,
         raw_binary_keys, positional_qualifiers,
@@ -231,10 +232,11 @@ def region_align_wide(wide: DataFrame) -> DataFrame:
     """:func:`region_align` for the wide frame of :func:`bulkload_wide`:
     one exchange moving one row per record instead of one per cell
     (:func:`_to_write_tasks`), sorted within partitions by (bucket,
-    rowkey). Cell order within a row is the writer's job
-    (`hfile_load.write_region_hfiles`). Contract: ``bucket`` is monotone
-    in the rowkey (its first character, or the first nibble of a raw
-    key), so the (bucket, rowkey) sort is rowkey order."""
+    rowkey). Called by the HFile sink (`hfile_load.write_region_hfiles`)
+    on its input; cell order within a row is the sink's writer loop's
+    job. Contract: ``bucket`` is monotone in the rowkey (its first
+    character, or the first nibble of a raw key), so the (bucket,
+    rowkey) sort is rowkey order."""
     return _to_write_tasks(wide).sortWithinPartitions("bucket", "rowkey")
 
 

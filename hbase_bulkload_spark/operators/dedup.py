@@ -565,83 +565,6 @@ def simhash_pairs(
     )
 
 
-def _large_star(edges: DataFrame) -> DataFrame:
-    """One large-star round (Kiveris et al., "Connected Components in
-    MapReduce and Beyond"): every node connects its LARGER neighbors to
-    the minimum of its neighborhood (incl. itself)."""
-    sym = edges.union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    m = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-    return (
-        sym.filter(F.col("v") > F.col("u"))
-        .join(m, "u")
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """One small-star round: orient each edge toward its smaller
-    endpoint, then connect every node's SMALLER neighbors (and itself)
-    to the minimum among them."""
-    e = (
-        edges.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    m = e.groupBy("u").agg(F.min("v").alias("m"))
-    return (
-        e.join(m, "u")
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .union(m.select("u", F.col("m").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    nodes: DataFrame,
-    id_col: str = "doc_id",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Op 53f, deep-graph scale path: large-star/small-star alternation
-    (Kiveris et al.) — converges in O(log n) ROUNDS regardless of
-    component diameter, where min-label propagation needs O(diameter).
-    Each round is two groupBy+join passes over the (shrinking) edge
-    list; convergence when the edge set reaches the fixed point (every
-    edge a star spoke into its component minimum). Same output contract
-    as ``connected_components``: (id, comp_id), singletons label
-    themselves — pinned equal on random graphs by
-    tests/test_extensions.py::test_components_star_equals_propagation."""
-    edges = (
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        new = _small_star(_large_star(edges)).localCheckpoint()
-        same = (
-            new.count() == edges.count()
-            and new.exceptAll(edges).count() == 0
-        )
-        edges = new
-        if same:
-            break
-    # converged edges are (member, component-min) spokes
-    spokes = edges.select(
-        F.greatest("u", "v").alias(id_col), F.least("u", "v").alias("__m")
-    ).groupBy(id_col).agg(F.min("__m").alias("__m"))
-    return nodes.select(id_col).join(spokes, id_col, "left").select(
-        id_col, F.coalesce("__m", F.col(id_col)).alias("comp_id")
-    )
-
-
 def connected_components(
     pairs: DataFrame,
     nodes: DataFrame,
@@ -660,17 +583,17 @@ def connected_components(
     chains, not long paths), so a handful of rounds suffices — the
     driver loop is O(diameter) iterations of fully-distributed joins,
     with `localCheckpoint` cutting lineage each round so plans don't
-    compound. (For adversarially deep graphs at 100 TB the standard
-    upgrade is large-star/small-star contraction — same interface,
-    fewer rounds; documented as the growth path.) Singleton nodes keep
-    their own id as ``comp_id``.
+    compound. Singleton nodes keep their own id as ``comp_id``; labels
+    are pinned against a union-find by
+    tests/test_extensions.py::test_components_match_union_find.
 
     Variant choice is measured: on the sf0.1 near-dup graph (shallow
-    components) propagation runs 3.9 s vs star-contraction's 4.3 s
-    (2-run warm, noop sink) — the star rounds' extra joins cost more
-    than the diameter they save, so propagation stays the registered
-    path and `connected_components_star` remains the deep-graph
-    alternative (label-identical, pinned by tests)."""
+    components) propagation ran 3.9 s vs large-star/small-star
+    contraction's 4.3 s (Kiveris et al.; O(log n) rounds regardless of
+    diameter; 2-run warm, noop sink) — the star rounds' extra joins
+    cost more than the diameter they save. Propagation is the one path;
+    contraction is the upgrade if a deployment's graphs are
+    adversarially deep."""
     # materialize the (tiny) edge list once — every iteration joins it,
     # and without the cut each round would re-derive the full pair
     # computation (shingle explode + posting lists) from scratch

@@ -14,11 +14,17 @@ region-server RPC is the one piece with no runnable analog — the file
 placement, splitting, and resulting on-disk layout are the loadable
 artifact and are verified by reading the table back).
 
+The write is one call: `bulkload_to_table` (or `write_region_hfiles`
+alone) takes the unaligned wide rows of `operators.bulkload.bulkload_wide`,
+aligns them itself, and writes every file in the table's one codec,
+`sources.hfile.TABLE_CODEC` (the reference's SNAPPY families,
+`create_table.rb:1`); callers choose neither.
+
 Scale posture:
 - the HFiles are written by the EXECUTORS, one per region bucket, off
-  a single exchange of wide rows (one per record), which the writer
-  task explodes into cells; the driver only collects a tiny per-file
-  manifest;
+  a single exchange of wide rows (one per record), which one writer
+  loop per task explodes into cells (`write_wide_batches`); the driver
+  only collects a tiny per-file manifest;
 - `do_bulk_load` reads ~4 KB of metadata per file (trailer + index) to
   place it; split rounds are dispatched back through Spark so
   rewriting crossing files is cluster-parallel, mirroring
@@ -53,80 +59,126 @@ def task_file_label() -> str:
     return f"{ctx.partitionId():05d}-{ctx.taskAttemptId()}"
 
 
-def write_partition_cells_arrow(
+def write_wide_batches(
     batches,
+    qualifiers: Sequence[bytes],
+    family: str,
     out_dir: str,
     task_label: str,
-    compression: str | None = "snappy",
 ) -> list[dict]:
-    """Executor-side body of `write_region_hfiles` (mapInArrow): stream
-    the cell batches of :func:`explode_wide_batches` (rowkey, family,
-    qualifier, value, bucket — sorted by (bucket, rowkey, qualifier))
-    into one open HFileWriter per bucket, every cell at timestamp 0;
-    returns one manifest dict per file. ``task_label`` should come from
-    :func:`task_file_label`. Batch columns feed ``HFileWriter.add_many_arrow`` directly — no
-    pandas object arrays, no per-cell Python bytes on the write path at
-    all. Contract: the bucket column is NON-NULL and equal buckets are
-    CONTIGUOUS within the partition — grouping is a run-length split
-    over the bucket column (one C-level compare pass per batch), so a
-    non-contiguous bucket would open a second writer mid-file and nulls
-    would propagate through ``pc.not_equal`` and silently merge adjacent
-    runs into the wrong bucket's HFile. The region-aligned sort
-    (bucket from a non-null key) guarantees both; the null half is
-    asserted loudly per batch. A writer per bucket persists across
-    batches.
+    """Executor-side body of `write_region_hfiles` (mapInArrow): explode
+    Arrow batches of region-aligned wide rows into cells and stream them
+    into one open :data:`sources.hfile.TABLE_CODEC` HFileWriter per
+    bucket, every cell at timestamp 0; returns one manifest dict per
+    file. ``task_label`` should come from :func:`task_file_label`.
+
+    Batch columns are rowkey, one value column per entry of
+    ``qualifiers`` (in that order), bucket — sorted by (bucket, rowkey),
+    `operators.bulkload.region_align_wide`. Each row becomes one cell per
+    non-null value (empty values are kept), all of ``family``,
+    qualifiers in byte order (``z10`` < ``z2``). Rows sharing a rowkey
+    are exploded together and their cells stable-sorted by (rowkey,
+    qualifier), so duplicate rows interleave per qualifier exactly as a
+    sort of the exploded cell frame would order them; the trailing
+    rowkey run of each batch waits for the next batch, since Spark cuts
+    batches at ``maxRecordsPerBatch`` regardless of keys. The cells feed
+    ``HFileWriter.add_many_arrow`` as Arrow slices — no per-cell Python
+    objects on the write path.
+
+    Buckets are split by a run-length pass over the ROWS, before the
+    explode: a bucket run is whole rows, so it cuts the exploded cells
+    at the first cell of its first row. Contract: the bucket is
+    non-null and equal buckets are contiguous within the partition,
+    which the region-aligned sort guarantees for a non-null bucket. A
+    null bucket is rejected loudly per batch (it has no region, and the
+    run split would merge it into a neighbour's file).
 
     Attempts stream into a ``.tmp``-suffixed name (outside the
     ``part-*.hfile`` namespace readers look at) and rename to the final
-    name only on task completion, so a file is visible under its final name either fully
-    written or not at all — a killed/zombie attempt leaves at worst a
-    ``.tmp`` straggler, not a half-written ``part-*`` file."""
+    name only on task completion, so a file is visible under its final
+    name either fully written or not at all — a killed/zombie attempt
+    leaves at worst a ``.tmp`` straggler, not a half-written ``part-*``
+    file."""
     import numpy as np
+    import pyarrow as pa
     import pyarrow.compute as pc
 
+    by_bytes = sorted(range(len(qualifiers)), key=qualifiers.__getitem__)
+    quals = pa.array([qualifiers[j] for j in by_bytes], pa.binary())
+    fam = pa.array([family.encode()], pa.binary())
+    k = len(qualifiers)
     writers: dict[str, hf.HFileWriter] = {}
-    finals: dict[str, str] = {}
-    for rb in batches:
-        n = rb.num_rows
-        if n == 0:
-            continue
-        rowkey, family, qualifier, value, bkt = rb.columns
-        if bkt.null_count:
-            raise ValueError(
-                f"bucket column has {bkt.null_count} null(s); the "
-                "region-aligned sort guarantees a non-null bucket and the "
-                "run-length split would silently merge runs across a "
-                "null boundary"
-            )
+
+    def run_starts(col) -> np.ndarray:
+        """True where a row starts a run of equal ``col`` values."""
+        n = len(col)
+        new_run = np.ones(n, bool)
         if n > 1:
-            neq = pc.not_equal(bkt.slice(1), bkt.slice(0, n - 1)).to_numpy(
-                zero_copy_only=False
-            )
-            starts = np.concatenate(([0], np.flatnonzero(neq) + 1, [n]))
-        else:
-            starts = np.array([0, n])
-        for s, e in zip(starts[:-1], starts[1:]):
-            s, e = int(s), int(e)
-            bucket = bkt[s].as_py()
+            new_run[1:] = pc.fill_null(
+                pc.not_equal(col.slice(1), col.slice(0, n - 1)), True
+            ).to_numpy(zero_copy_only=False)
+        return new_run
+
+    def write(rb, new_key):
+        n = rb.num_rows
+        rk, bkt = rb.column(0), rb.column(k + 1)
+        # column-major: value j of row i sits at j*n + i
+        values = pa.concat_arrays([rb.column(1 + j) for j in by_bytes])
+        cell = (np.arange(n)[:, None] + n * np.arange(k)[None, :]).ravel()
+        valid = values.is_valid().to_numpy(zero_copy_only=False)[cell]
+        # first cell of each row (and the end): rows stay contiguous
+        first_cell = np.concatenate(([0], np.cumsum(valid.reshape(n, k).sum(1))))
+        cell = cell[valid]
+        row, q = cell % n, cell // n
+        if not new_key.all():  # duplicate rowkeys: interleave their cells
+            order = np.lexsort((q, np.cumsum(new_key)[row]))
+            cell, row, q = cell[order], row[order], q[order]
+        rowkey, qualifier, value = rk.take(row), quals.take(q), values.take(cell)
+        family_col = fam.take(np.zeros(len(cell), np.int64))
+        starts = np.flatnonzero(run_starts(bkt))
+        for s, e in zip(starts, [*starts[1:], n]):
+            lo, hi = int(first_cell[s]), int(first_cell[e])
+            if lo == hi:  # every value of the run is null: no cell
+                continue
+            bucket = bkt[int(s)].as_py()
             w = writers.get(bucket)
             if w is None:
                 path = os.path.join(out_dir, f"part-{task_label}-{bucket}.hfile")
-                finals[bucket] = path
-                w = writers[bucket] = hf.HFileWriter(path + ".tmp", compression)
+                w = writers[bucket] = hf.HFileWriter(path + ".tmp", hf.TABLE_CODEC)
             w.add_many_arrow(
-                rowkey.slice(s, e - s),
-                family.slice(s, e - s),
-                qualifier.slice(s, e - s),
-                0,
-                value.slice(s, e - s),
+                rowkey.slice(lo, hi - lo), family_col.slice(lo, hi - lo),
+                qualifier.slice(lo, hi - lo), 0, value.slice(lo, hi - lo),
             )
+
+    carry = None
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        nulls = rb.column(k + 1).null_count
+        if nulls:
+            raise ValueError(
+                f"bucket column has {nulls} null(s): a row without a "
+                "bucket has no region, and the run split would write it "
+                "into a neighbouring bucket's file"
+            )
+        if carry is not None:
+            rb = pa.Table.from_batches([carry, rb]).combine_chunks().to_batches()[0]
+        new_key = run_starts(rb.column(0))
+        last = int(np.flatnonzero(new_key)[-1])
+        if last:
+            write(rb.slice(0, last), new_key[:last])
+        carry = rb.slice(last)
+    if carry is not None:
+        write(carry, run_starts(carry.column(0)))
+
     out = []
     for bucket, w in writers.items():
         m = w.close()
-        os.replace(m["path"], finals[bucket])  # task-commit rename
+        final = m["path"][: -len(".tmp")]
+        os.replace(m["path"], final)  # task-commit rename
         out.append(
             {
-                "path": finals[bucket],
+                "path": final,
                 "bucket": bucket,
                 "entry_count": m["entry_count"],
                 "n_blocks": m["n_blocks"],
@@ -135,99 +187,27 @@ def write_partition_cells_arrow(
     return out
 
 
-def explode_wide_batches(batches, qualifiers: Sequence[bytes], family: str = "c"):
-    """Arrow batches of sorted wide rows → the cell batches
-    `write_partition_cells_arrow` consumes: columns rowkey, family,
-    qualifier, value, bucket, in that order.
-
-    Input rows carry ``rowkey``, ``bucket`` and one value column per
-    entry of ``qualifiers`` (every other column, in that order), sorted
-    by (bucket, rowkey) — `operators.bulkload.region_align_wide`. Each
-    row becomes one cell per non-null value (empty values are kept),
-    all of ``family``, qualifiers in byte order (``z10`` < ``z2``).
-    Rows sharing a rowkey are exploded together and their cells
-    stable-sorted by (rowkey, qualifier), so duplicate rows interleave
-    per qualifier exactly as a sort of the exploded cell frame would
-    order them; the trailing rowkey run of each batch waits for the
-    next batch, since Spark cuts batches at ``maxRecordsPerBatch``
-    regardless of keys."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    by_bytes = sorted(range(len(qualifiers)), key=qualifiers.__getitem__)
-    quals = pa.array([qualifiers[j] for j in by_bytes], pa.binary())
-    fam = pa.array([family.encode()], pa.binary())
-
-    def explode(rb, new_run):
-        names = rb.schema.names
-        rk = rb.column(names.index("rowkey"))
-        bkt = rb.column(names.index("bucket"))
-        value_cols = [rb.column(i) for i, c in enumerate(names)
-                      if c not in ("rowkey", "bucket")]
-        n, k = rb.num_rows, len(value_cols)
-        # column-major: value j of row i sits at j*n + i
-        values = pa.concat_arrays([value_cols[j] for j in by_bytes])
-        cell = (np.arange(n)[:, None] + n * np.arange(k)[None, :]).ravel()
-        cell = cell[values.is_valid().to_numpy(zero_copy_only=False)[cell]]
-        row, q = cell % n, cell // n
-        if not new_run.all():  # duplicate rowkeys: interleave their cells
-            order = np.lexsort((q, np.cumsum(new_run)[row]))
-            cell, row, q = cell[order], row[order], q[order]
-        return pa.RecordBatch.from_arrays(
-            [rk.take(row), fam.take(np.zeros(len(cell), np.int64)),
-             quals.take(q), values.take(cell), bkt.take(row)],
-            ["rowkey", "family", "qualifier", "value", "bucket"],
-        )
-
-    def runs(rb):
-        rk = rb.column(rb.schema.names.index("rowkey"))
-        new_run = np.ones(rb.num_rows, bool)
-        if rb.num_rows > 1:
-            new_run[1:] = pc.fill_null(
-                pc.not_equal(rk.slice(1), rk.slice(0, rb.num_rows - 1)), True
-            ).to_numpy(zero_copy_only=False)
-        return new_run
-
-    carry = None
-    for rb in batches:
-        if rb.num_rows == 0:
-            continue
-        if carry is not None:
-            rb = pa.Table.from_batches([carry, rb]).combine_chunks().to_batches()[0]
-        new_run = runs(rb)
-        last = int(np.flatnonzero(new_run)[-1])
-        if last:
-            yield explode(rb.slice(0, last), new_run[:last])
-        carry = rb.slice(last)
-    if carry is not None:
-        yield explode(carry, runs(carry))
-
-
-_MANIFEST_SCHEMA = "path string, bucket string, entry_count long, n_blocks long"
-
-
 def write_region_hfiles(
     wide: DataFrame,
     out_dir: str,
     qualifiers: Sequence[bytes],
     family: str = "c",
-    compression: str | None = "snappy",
 ) -> list[dict]:
-    """Write one HFile per region bucket from region-aligned wide rows.
-    Executors stream Arrow batches into at most a handful of open
-    writers (buckets are contiguous in the sort); the returned manifest
-    is one row per file.
+    """Write one HFile per region bucket from the wide rows of
+    `operators.bulkload.bulkload_wide`. The sink aligns them itself
+    (`operators.bulkload.region_align_wide`: one exchange, sorted by
+    (bucket, rowkey)); executors then stream Arrow batches into at most
+    a handful of open writers (buckets are contiguous in the sort); the
+    returned manifest is one row per file.
 
     ``wide`` has columns rowkey, bucket and one value column per entry
-    of ``qualifiers``, in ``qualifiers`` order — sorted within
-    partitions by (bucket, rowkey), i.e. the output of
-    `operators.bulkload.region_align_wide`. The writer task explodes
-    each row into cells of ``family`` (:func:`explode_wide_batches`),
-    so the exchange and the Arrow hop move one row per record instead
-    of one cell per value, each repeating the rowkey. A frame missing
+    of ``qualifiers``, in ``qualifiers`` order. The writer task explodes
+    each row into cells of ``family`` (:func:`write_wide_batches`), so
+    the exchange and the Arrow hop move one row per record instead of
+    one cell per value, each repeating the rowkey. A frame missing
     rowkey or bucket, or whose value columns do not match
-    ``qualifiers``, is rejected here, before any job starts.
+    ``qualifiers``, is rejected here, before any job starts; a null
+    bucket fails the write task.
 
     Rowkey and value columns are cast to binary JVM-side before the
     Python hop: codegen does the UTF-8 encode once per value, so the
@@ -238,6 +218,9 @@ def write_region_hfiles(
     sf0.1 (A/B with a no-op executor body, round 7)."""
     import pyarrow as pa
     from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from hbase_bulkload_spark.operators.bulkload import region_align_wide
 
     cols = wide.columns
     missing = [c for c in ("rowkey", "bucket") if c not in cols]
@@ -252,39 +235,25 @@ def write_region_hfiles(
             f"{len(qualifiers)} qualifiers for the value columns {value_cols}"
         )
     qualifiers = list(qualifiers)
-    wide = wide.select(
+    wide = region_align_wide(wide).select(
         *[F.col(c).cast("binary").alias(c) for c in ("rowkey", *value_cols)],
         "bucket",
     )
 
     os.makedirs(out_dir, exist_ok=True)
+    manifest_schema = pa.schema([
+        ("path", pa.string()), ("bucket", pa.string()),
+        ("entry_count", pa.int64()), ("n_blocks", pa.int64()),
+    ])
 
     def write_parts(batches):
-        out = write_partition_cells_arrow(
-            explode_wide_batches(batches, qualifiers, family),
-            out_dir,
-            task_file_label(),
-            compression,
+        out = write_wide_batches(
+            batches, qualifiers, family, out_dir, task_file_label()
         )
-        yield pa.RecordBatch.from_pydict(
-            {
-                "path": [m["path"] for m in out],
-                "bucket": [m["bucket"] for m in out],
-                "entry_count": [m["entry_count"] for m in out],
-                "n_blocks": [m["n_blocks"] for m in out],
-            },
-            schema=pa.schema(
-                [
-                    ("path", pa.string()),
-                    ("bucket", pa.string()),
-                    ("entry_count", pa.int64()),
-                    ("n_blocks", pa.int64()),
-                ]
-            ),
-        )
+        yield pa.RecordBatch.from_pylist(out, schema=manifest_schema)
 
-    manifest = wide.mapInArrow(write_parts, _MANIFEST_SCHEMA).collect()
-    return [r.asDict() for r in manifest]
+    manifest = wide.mapInArrow(write_parts, from_arrow_schema(manifest_schema))
+    return [r.asDict() for r in manifest.collect()]
 
 
 def _region_dirs(table_dir: str, boundaries: list[bytes], family: str) -> list[str]:
@@ -309,7 +278,6 @@ def do_bulk_load(
     boundaries: list[bytes],
     family: str = "c",
     spark: SparkSession | None = None,
-    compression: str | None = "snappy",
 ) -> list[dict]:
     """`LoadIncrementalHFiles.doBulkLoad` against a local-FS table layout.
 
@@ -354,11 +322,7 @@ def do_bulk_load(
             path, split_row = task
             stem = path[: -len(".hfile")] if path.endswith(".hfile") else path
             bottom, top = hf.split_hfile(
-                path,
-                split_row,
-                stem + ".bottom.hfile",
-                stem + ".top.hfile",
-                compression,
+                path, split_row, stem + ".bottom.hfile", stem + ".top.hfile"
             )
             os.unlink(path)
             return [m["path"] for m in (bottom, top) if m]
@@ -384,30 +348,22 @@ def bulkload_to_table(
     boundaries: list[bytes],
     qualifiers: Sequence[bytes],
     family: str = "c",
-    compression: str | None = "snappy",
 ) -> list[dict]:
     """Ops 7+9 as a sink — the one batch write-and-load entry point:
     executor-written region HFiles staged under ``out_dir/_staging``,
     then doBulkLoad placement into ``out_dir`` — the loaded-table
-    layout the reference leaves behind. ``wide`` must be region-aligned
-    wide rows (`operators.bulkload.region_align_wide`) whose value
-    columns map onto ``qualifiers`` (see :func:`write_region_hfiles`);
+    layout the reference leaves behind. ``wide`` is the unaligned frame
+    of `operators.bulkload.bulkload_wide`, whose value columns map onto
+    ``qualifiers`` (see :func:`write_region_hfiles`, which aligns it);
     every cell is written with ``family`` and placed under a store
     directory of that name. Returns the per-file load manifest."""
     spark = wide.sparkSession
     if os.path.exists(out_dir):
         shutil.rmtree(out_dir)
     staging = os.path.join(out_dir, "_staging")
-    manifest = write_region_hfiles(
-        wide, staging, qualifiers, family=family, compression=compression
-    )
+    manifest = write_region_hfiles(wide, staging, qualifiers, family=family)
     loaded = do_bulk_load(
-        [m["path"] for m in manifest],
-        out_dir,
-        boundaries,
-        family=family,
-        spark=spark,
-        compression=compression,
+        [m["path"] for m in manifest], out_dir, boundaries, family=family, spark=spark
     )
     # rmtree, not rmdir: attempt-unique file names mean a failed or
     # losing speculative attempt can leave an orphan HFile in staging
@@ -564,7 +520,6 @@ def build_value_index(
     qualifier: str,
     index_dir: str,
     boundaries: list[bytes] | None = None,
-    compression: str | None = "snappy",
 ) -> list[dict]:
     """Phoenix-style GLOBAL secondary index, materialized: the
     (value → base rowkey) projection of one value column of a
@@ -580,8 +535,6 @@ def build_value_index(
     multi-level block indexes, blooms, block-range scan splits."""
     from pyspark.sql import functions as F
 
-    from hbase_bulkload_spark.operators.bulkload import region_align_wide
-
     idx = wide.filter(F.col(qualifier).isNotNull()).select(
         F.concat(
             F.col(qualifier), F.lit(INDEX_KEY_SEP), F.col("rowkey")
@@ -593,12 +546,8 @@ def build_value_index(
         F.substring(F.col(qualifier), 1, 1).alias("bucket"),
     )
     return bulkload_to_table(
-        region_align_wide(idx),
-        index_dir,
-        boundaries if boundaries is not None else [b""],
-        [b"r"],
+        idx, index_dir, boundaries if boundaries is not None else [b""], [b"r"],
         family="i",
-        compression=compression,
     )
 
 
@@ -714,7 +663,6 @@ def scan_hfiles(
     spark: SparkSession,
     table_dir: str,
     split_bytes: int | None = None,
-    verify_checksums: bool = True,
     start_row: bytes | None = None,
     stop_row: bytes | None = None,
     binary: bool = False,
@@ -791,8 +739,7 @@ def scan_hfiles(
                     for chunk in _iter_block_chunks(task["blocks"]):
                         plain = b"".join(
                             hf._read_block(
-                                f, b["off"], task["codec"] or None,
-                                hf.DATA_MAGIC, verify_checksums,
+                                f, b["off"], task["codec"] or None, hf.DATA_MAGIC
                             )
                             for b in chunk
                         )
@@ -828,7 +775,6 @@ def scan_hfiles(
 
 def compact_region(
     family_dir: str,
-    compression: str | None = "snappy",
     max_versions: int | None = None,
     ttl_min_ts: int | None = None,
 ) -> dict:
@@ -851,7 +797,7 @@ def compact_region(
     if not files:
         raise FileNotFoundError(f"no hfiles under {family_dir}")
     tmp = os.path.join(family_dir, "_compact.tmp")
-    w = hf.HFileWriter(tmp, compression)
+    w = hf.HFileWriter(tmp)
     dropped_versions = 0
     dropped_expired = 0
     merged = heapq.merge(
@@ -894,7 +840,6 @@ def compact_region(
 
 def compact_table(
     table_dir: str,
-    compression: str | None = "snappy",
     max_versions: int | None = None,
     ttl_min_ts: int | None = None,
 ) -> list[dict]:
@@ -906,7 +851,7 @@ def compact_table(
     out = []
     for fam_dir in sorted(_glob.glob(os.path.join(table_dir, "region-*", "*"))):
         if os.path.isdir(fam_dir) and _glob.glob(os.path.join(fam_dir, "*.hfile")):
-            m = compact_region(fam_dir, compression, max_versions, ttl_min_ts)
+            m = compact_region(fam_dir, max_versions, ttl_min_ts)
             m["family_dir"] = fam_dir
             out.append(m)
     return out

@@ -29,7 +29,6 @@ from hbase_bulkload_spark.functions.keys import (
 from hbase_bulkload_spark.operators.bulkload import (
     bulkload_pipeline,
     bulkload_wide,
-    region_align_wide,
     region_boundaries,
 )
 from hbase_bulkload_spark.operators.kv import pivot_wide, unpivot_kv
@@ -463,7 +462,7 @@ def q_bulkload_hfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = os.path.join(
         scratch_root(), f"hfile_load_{os.path.basename(os.path.normpath(sf_dir))}"
     )
-    bulkload_to_table(region_align_wide(wide), work, region_boundaries(), qualifiers)
+    bulkload_to_table(wide, work, region_boundaries(), qualifiers)
     # columns: the summary below needs only rowkey + value — decode-side
     # pruning skips the family/qualifier/ts slice work per cell
     return _hfile_bucket_summary(scan_hfiles(spark, work, columns=("value",)))
@@ -514,9 +513,7 @@ def _hfile_artifacts(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             records.wide9(spark, sf_dir), KEY_COLS, RECORD_COLS
         )
         boundaries = region_boundaries()
-        hl.bulkload_to_table(
-            region_align_wide(wide), table_dir, boundaries, qualifiers
-        )
+        hl.bulkload_to_table(wide, table_dir, boundaries, qualifiers)
         hl.build_value_index(wide, "z8", idx_dir, boundaries=boundaries)
         with open(marker, "w"):
             pass

@@ -118,6 +118,12 @@ DEFAULT_BLOCK_SIZE = 65536  # HColumnDescriptor.DEFAULT_BLOCKSIZE
 COMPRESSION_ORDINAL = {"gz": 1, None: 2, "snappy": 3}
 ORDINAL_COMPRESSION = {v: k for k, v in COMPRESSION_ORDINAL.items()}
 
+#: The codec of every HFile the package writes for a table: the
+#: reference's families are SNAPPY (`create_table.rb:1`) and its
+#: writer compresses with it (`BulkImporterFromText.java:110-111`).
+#: Readers take each file's codec from its trailer.
+TABLE_CODEC = "snappy"
+
 FILEINFO_LASTKEY = b"hfile.LASTKEY"
 FILEINFO_AVG_KEY_LEN = b"hfile.AVG_KEY_LEN"
 FILEINFO_AVG_VALUE_LEN = b"hfile.AVG_VALUE_LEN"
@@ -309,7 +315,7 @@ class HFileWriter:
     def __init__(
         self,
         path: str,
-        compression: str | None = "snappy",
+        compression: str | None = TABLE_CODEC,
         block_size: int = DEFAULT_BLOCK_SIZE,
         index_chunk: int = INDEX_CHUNK_ENTRIES,
         bloom: bool = True,
@@ -662,7 +668,7 @@ class HFileWriter:
 def write_hfile(
     path: str,
     cells: Iterable[tuple[bytes, bytes, bytes, int, bytes]],
-    compression: str | None = "snappy",
+    compression: str | None = TABLE_CODEC,
     block_size: int = DEFAULT_BLOCK_SIZE,
 ) -> dict:
     w = HFileWriter(path, compression, block_size)
@@ -719,8 +725,7 @@ def read_trailer(f) -> Trailer:
 
 
 def _read_block(
-    f, offset: int, codec: str | None, expect_magic: bytes | None = None,
-    verify: bool = True,
+    f, offset: int, codec: str | None, expect_magic: bytes | None = None
 ) -> bytes:
     """Read + verify one block at ``offset``; returns decompressed payload."""
     f.seek(offset)
@@ -733,14 +738,11 @@ def _read_block(
     payload_len = on_disk_data_with_header - HEADER_SIZE
     body = f.read(on_disk_without_header)
     payload, sums = body[:payload_len], body[payload_len:]
-    if verify:
-        block = header + payload
-        for i, off in enumerate(range(0, len(block), BYTES_PER_CHECKSUM)):
-            (want,) = struct.unpack_from(">I", sums, 4 * i)
-            if zlib.crc32(block[off : off + BYTES_PER_CHECKSUM]) != want:
-                raise ValueError(
-                    f"checksum mismatch in block at offset {offset}"
-                )
+    block = header + payload
+    for i, off in enumerate(range(0, len(block), BYTES_PER_CHECKSUM)):
+        (want,) = struct.unpack_from(">I", sums, 4 * i)
+        if zlib.crc32(block[off : off + BYTES_PER_CHECKSUM]) != want:
+            raise ValueError(f"checksum mismatch in block at offset {offset}")
     plain = _decompress_stream(payload, codec) if codec else payload
     if len(plain) != plain_len:
         raise ValueError("uncompressed size mismatch")
@@ -845,14 +847,12 @@ def file_key_range(path: str) -> tuple[bytes, bytes]:
     return decode_key(first_key)[0], decode_key(last_key)[0]
 
 
-def iter_hfile(
-    path: str, verify: bool = True
-) -> Iterator[tuple[bytes, bytes, bytes, int, bytes]]:
+def iter_hfile(path: str) -> Iterator[tuple[bytes, bytes, bytes, int, bytes]]:
     """Full scan, index-ordered: yields (row, family, qualifier, ts, value)."""
     with open(path, "rb") as f:
         t = read_trailer(f)
         for off, _size, _key in read_data_index(f, t):
-            plain = _read_block(f, off, t.compression, DATA_MAGIC, verify)
+            plain = _read_block(f, off, t.compression, DATA_MAGIC)
             yield from _decode_cells(plain)
 
 
@@ -1115,15 +1115,14 @@ def hfile_multi_get(
 # ---------------------------------------------------------------------------
 
 def split_hfile(
-    src: str, split_row: bytes, bottom_path: str, top_path: str,
-    compression: str | None = "snappy",
+    src: str, split_row: bytes, bottom_path: str, top_path: str
 ) -> tuple[dict | None, dict | None]:
-    """Rewrite ``src`` as bottom (< split_row) + top (>= split_row) —
-    what `LoadIncrementalHFiles.splitStoreFile` does via Reference
-    halves + `copyHFileHalf` when a file straddles a region boundary.
-    Returns the non-empty halves' manifests."""
-    bottom = HFileWriter(bottom_path, compression)
-    top = HFileWriter(top_path, compression)
+    """Rewrite ``src`` as bottom (< split_row) + top (>= split_row) in
+    :data:`TABLE_CODEC` — what `LoadIncrementalHFiles.splitStoreFile`
+    does via Reference halves + `copyHFileHalf` when a file straddles a
+    region boundary. Returns the non-empty halves' manifests."""
+    bottom = HFileWriter(bottom_path)
+    top = HFileWriter(top_path)
     for row, fam, qual, ts, value in iter_hfile(src):
         (bottom if row < split_row else top).add(row, fam, qual, ts, value)
     results = []

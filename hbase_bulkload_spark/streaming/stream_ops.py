@@ -268,13 +268,12 @@ def start_bulkload_hfile_sink(
     qualifiers: list[bytes],
     table_dir: str,
     checkpoint: str,
-    compression: str | None = "snappy",
 ):
     """Stream → loaded HFile table: each microbatch of wide rows and
     their ``qualifiers`` (`operators.bulkload.bulkload_wide`, which is
-    narrow and attaches to a readStream source unchanged) is
-    region-aligned (`region_align_wide`), written as executor-side
-    region HFiles under a batch-scoped staging dir (file names
+    narrow and attaches to a readStream source unchanged) is written as
+    executor-side region HFiles by `hfile_load.write_region_hfiles`,
+    which region-aligns it, under a batch-scoped staging dir (file names
     batch-stamped so successive loads never collide), and placed into
     the 16 hex-nibble regions by the doBulkLoad analog — HBase's own
     incremental bulk-load pattern. Successive batches leave overlapping
@@ -285,19 +284,13 @@ def start_bulkload_hfile_sink(
     import shutil
 
     from hbase_bulkload_spark.operators import hfile_load
-    from hbase_bulkload_spark.operators.bulkload import (
-        region_align_wide,
-        region_boundaries,
-    )
+    from hbase_bulkload_spark.operators.bulkload import region_boundaries
 
     boundaries = region_boundaries()
 
     def load_batch(batch_df: DataFrame, batch_id: int) -> None:
         staging = os.path.join(table_dir, f"_staging_{batch_id:05d}")
-        manifest = hfile_load.write_region_hfiles(
-            region_align_wide(batch_df), staging, qualifiers,
-            compression=compression,
-        )
+        manifest = hfile_load.write_region_hfiles(batch_df, staging, qualifiers)
         paths = []
         for m in manifest:
             unique = os.path.join(
@@ -329,11 +322,7 @@ def start_bulkload_hfile_sink(
         _maybe_fault("pre_load", batch_id)
         if paths:
             hfile_load.do_bulk_load(
-                paths,
-                table_dir,
-                boundaries,
-                spark=batch_df.sparkSession,
-                compression=compression,
+                paths, table_dir, boundaries, spark=batch_df.sparkSession
             )
         _maybe_fault("post_load", batch_id)
         shutil.rmtree(staging, ignore_errors=True)

@@ -15,8 +15,6 @@ import pytest
 
 from hbase_bulkload_spark.sources import avro_ocf, records
 
-SF_DIR = "/root/testdata/sf0.001"
-
 
 def test_ocf_roundtrip_nullable_strings(tmp_path):
     schema = avro_ocf.nullable_string_record("T", ["a", "b"])
@@ -92,17 +90,17 @@ except ImportError:  # pragma: no cover - hypothesis is baked in per TESTDATA
     pass
 
 
-def test_scan_avro_matches_wide9(spark):
-    got = records.scan_avro(spark, SF_DIR)
-    want = records.wide9(spark, SF_DIR).select(*records.RECORD_COLS)
+def test_scan_avro_matches_wide9(spark, sf_dir):
+    got = records.scan_avro(spark, sf_dir)
+    want = records.wide9(spark, sf_dir).select(*records.RECORD_COLS)
     key = lambda r: tuple("" if v is None else v for v in r)  # noqa: E731
     assert sorted(map(key, got.collect())) == sorted(map(key, want.collect()))
     # nulls must survive the avro round trip (unlike the text fixture)
     assert got.filter(got.z8.isNull()).count() == want.filter(want.z8.isNull()).count() > 0
 
 
-def test_avro_fixture_files_exist(spark):
-    path = records.avro_path(spark, SF_DIR)
+def test_avro_fixture_files_exist(spark, sf_dir):
+    path = records.avro_path(spark, sf_dir)
     parts = [f for f in os.listdir(path) if f.endswith(".avro")]
     assert len(parts) >= 1
 

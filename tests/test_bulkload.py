@@ -17,7 +17,6 @@ from hbase_bulkload_spark.operators.bulkload import (
     bulkload_pipeline,
     bulkload_wide,
     region_align,
-    region_align_wide,
     write_bulkload,
 )
 from hbase_bulkload_spark.sources.records import RECORD_COLS, wide9
@@ -204,9 +203,7 @@ def test_wide_writer_byte_identical_to_cells(spark, tmp_path, fidelity):
         want[b] = path.read_bytes()
 
     wide, quals = bulkload_wide(df, cols[:4], cols, **modes)
-    rows = hl.write_region_hfiles(
-        region_align_wide(wide), str(tmp_path / "wide"), qualifiers=quals
-    )
+    rows = hl.write_region_hfiles(wide, str(tmp_path / "wide"), qualifiers=quals)
     got = {}
     for m in rows:
         with open(m["path"], "rb") as f:
@@ -244,7 +241,7 @@ def test_wide_writer_duplicate_keys_across_batches(spark, tmp_path, monkeypatch)
     spark.conf.set(key, "2")
     try:
         manifest = hl.write_region_hfiles(
-            region_align_wide(wide), str(tmp_path / "wide"), qualifiers=quals
+            wide, str(tmp_path / "wide"), qualifiers=quals
         )
     finally:
         spark.conf.set(key, prior)

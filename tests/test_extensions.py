@@ -585,10 +585,10 @@ def test_connected_components_chain(spark):
     assert got == {1: 1, 2: 2, 5: 2, 9: 2, 7: 7, 8: 7}
 
 
-def test_components_star_equals_propagation(spark):
-    """Large-star/small-star must produce exactly the propagation
-    variant's labels — random graphs plus a long path (the worst case
-    for propagation, the motivating case for star contraction)."""
+def test_components_match_union_find(spark):
+    """Min-label propagation gives every node the smallest id of its
+    component, as a Python union-find does — random graphs plus a long
+    path (the deepest case for propagation)."""
     import random
 
     cases = []
@@ -604,17 +604,25 @@ def test_components_star_equals_propagation(spark):
 
     for n, raw in cases:
         edges = [(a, b) for a, b in raw if a != b] or [(0, 1)]
+        parent = list(range(n))
+
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a, b in edges:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+        want = {i: find(i) for i in range(n)}
         pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
         nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-        a = {
+        got = {
             r.doc_id: r.comp_id
             for r in dedup.connected_components(pairs, nodes).collect()
         }
-        b = {
-            r.doc_id: r.comp_id
-            for r in dedup.connected_components_star(pairs, nodes).collect()
-        }
-        assert a == b
+        assert got == want
 
 
 def test_decontaminate_flags_overlap(spark):

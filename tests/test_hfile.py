@@ -8,6 +8,7 @@ read."""
 
 from __future__ import annotations
 
+import glob
 import os
 import struct
 
@@ -120,7 +121,8 @@ def test_corruption_detected(tmp_path):
     with open(path, "rb") as f:
         t = hf.read_trailer(f)
     # flip one byte inside the first cell's VALUE (offset 31 = 8 length
-    # bytes + 23 key bytes), so unverified decode stays structurally valid
+    # bytes + 23 key bytes): the block stays structurally valid, so only
+    # the checksum can reject it
     with open(path, "r+b") as f:
         f.seek(t.first_data_offset + hf.HEADER_SIZE + 31)
         b = f.read(1)
@@ -128,8 +130,6 @@ def test_corruption_detected(tmp_path):
         f.write(bytes([b[0] ^ 0xFF]))
     with pytest.raises(ValueError, match="checksum"):
         list(hf.iter_hfile(path))
-    # verify=False skips validation and decodes the (corrupt) bytes
-    assert len(list(hf.iter_hfile(path, verify=False))) == 400
 
 
 def test_block_headers_on_disk(tmp_path):
@@ -195,9 +195,9 @@ def test_row_bloom(tmp_path, monkeypatch):
     reads = []
     orig = hf._read_block
 
-    def spy(f, offset, codec, expect_magic=None, verify=True):
+    def spy(f, offset, codec, expect_magic=None):
         reads.append(expect_magic)
-        return orig(f, offset, codec, expect_magic, verify)
+        return orig(f, offset, codec, expect_magic)
 
     monkeypatch.setattr(hf, "_read_block", spy)
     assert hf.hfile_get(path, b"zzzz-not-there") == []
@@ -460,11 +460,7 @@ def test_compact_region_version_cap(tmp_path):
 # ---------------------------------------------------------------------------
 
 def test_spark_roundtrip(spark, sf_dir, tmp_path):
-    from hbase_bulkload_spark.operators.bulkload import (
-        bulkload_pipeline,
-        bulkload_wide,
-        region_align_wide,
-    )
+    from hbase_bulkload_spark.operators.bulkload import bulkload_pipeline, bulkload_wide
     from hbase_bulkload_spark.sources import records
 
     args = (
@@ -474,7 +470,7 @@ def test_spark_roundtrip(spark, sf_dir, tmp_path):
     wide, quals = bulkload_wide(*args)
     boundaries = [format(i, "x").encode() for i in range(16)]
     out = str(tmp_path / "load")
-    hl.bulkload_to_table(region_align_wide(wide), out, boundaries, quals)
+    hl.bulkload_to_table(wide, out, boundaries, quals)
     scanned = hl.scan_hfiles(spark, out)
     want = kv.select("rowkey", "family", "qualifier", "value").orderBy(
         "rowkey", "qualifier"
@@ -566,19 +562,37 @@ def test_write_region_hfiles_rejects_missing_key_columns(spark, tmp_path):
     assert not out.exists()
 
 
+def test_null_bucket_rejected(spark, tmp_path):
+    """A wide row with a null bucket has no region: its write task
+    raises a ValueError naming the bucket column (surfaced by Spark as
+    the task's Python error), and the bulk load places no file in any
+    region directory."""
+    from pyspark.errors import PythonException
+
+    wide = spark.createDataFrame(
+        [("0a", "v0", "0"), ("1b", "v1", None), ("2c", "v2", "2")],
+        "rowkey string, r string, bucket string",
+    )
+    rejected = r"ValueError: bucket column has 1 null"
+    with pytest.raises(PythonException, match=rejected):
+        hl.write_region_hfiles(wide, str(tmp_path / "w"), qualifiers=[b"r"])
+    out = tmp_path / "t"
+    with pytest.raises(PythonException, match=rejected):
+        hl.bulkload_to_table(wide, str(out), [b"", b"1", b"2"], qualifiers=[b"r"])
+    assert glob.glob(str(out / "region-*" / "*" / "*")) == []
+
+
 def test_bulkload_to_table_family(spark, tmp_path):
     """One family end to end: ``bulkload_to_table(..., family="i")``
     writes every cell with family ``i`` and places the files under
     store directories named ``i``."""
-    from hbase_bulkload_spark.operators.bulkload import region_align_wide
-
     wide = spark.createDataFrame(
         [("0a", "v0", "0"), ("1b", "v1", "1")],
         "rowkey string, r string, bucket string",
     )
     out = str(tmp_path / "t")
     loaded = hl.bulkload_to_table(
-        region_align_wide(wide), out, [b"", b"1"], qualifiers=[b"r"], family="i"
+        wide, out, [b"", b"1"], qualifiers=[b"r"], family="i"
     )
     assert {m["region"] for m in loaded} == {0, 1}
     assert {os.path.basename(os.path.dirname(m["path"])) for m in loaded} == {"i"}
@@ -600,9 +614,7 @@ def test_spark_roundtrip_with_splits(spark, tmp_path):
         }
     )
     pdf["bucket"] = pdf.rowkey.str[0]
-    wide = spark.createDataFrame(pdf).repartition(4, "bucket").sortWithinPartitions(
-        "bucket", "rowkey"
-    )
+    wide = spark.createDataFrame(pdf)
     boundaries = [f"{i:04d}".encode() for i in range(0, 400, 50)]
     load = tmp_path / "load"
     hl.bulkload_to_table(wide, str(load), boundaries, [b"q"])
@@ -787,9 +799,9 @@ def test_multilevel_point_reads_are_logarithmic(tmp_path, monkeypatch):
     reads: list[bytes | None] = []
     orig = hf._read_block
 
-    def counting(f, offset, codec, expect_magic=None, verify=True):
+    def counting(f, offset, codec, expect_magic=None):
         reads.append(expect_magic)
-        return orig(f, offset, codec, expect_magic, verify)
+        return orig(f, offset, codec, expect_magic)
 
     monkeypatch.setattr(hf, "_read_block", counting)
 

@@ -11,10 +11,7 @@ from hbase_bulkload_spark.operators import hfile_load as hl
 
 @pytest.fixture(scope="module")
 def table_dir(spark, sf_dir, tmp_path_factory):
-    from hbase_bulkload_spark.operators.bulkload import (
-        bulkload_wide,
-        region_align_wide,
-    )
+    from hbase_bulkload_spark.operators.bulkload import bulkload_wide
     from hbase_bulkload_spark.sources import records
 
     base = tmp_path_factory.mktemp("hfile_ds")
@@ -22,9 +19,7 @@ def table_dir(spark, sf_dir, tmp_path_factory):
         records.wide9(spark, sf_dir), records.RECORD_COLS[:4], records.RECORD_COLS
     )
     boundaries = [format(i, "x").encode() for i in range(16)]
-    hl.bulkload_to_table(
-        region_align_wide(wide), str(base / "table"), boundaries, quals
-    )
+    hl.bulkload_to_table(wide, str(base / "table"), boundaries, quals)
     return str(base / "table")
 
 
