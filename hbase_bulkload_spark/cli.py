@@ -30,11 +30,12 @@ one call (`operators.hfile_load.bulkload_to_table`) on the WIDE rows
 them and explodes them into cells inside the writer task, so the Arrow
 hop, like the shuffle, carries each rowkey once instead of once per
 cell. `read_text` and `read_csv` share one split-and-arity-gate body
-and differ only in the split expression. The
+and differ only in the split expression, which runs once per line, as
+the reference mapper's one `split` does. The
 reference sizes its job by region count (one reducer per region); here
 the work is sized by the input and the cores: a text/csv scan splits at
-about two tasks per core (`_scan_splits`), and either sink's write runs
-`min(16, 2 × cores)` tasks, each writing whole buckets
+about one task per core (`_scan_splits`), and either sink's write runs
+`min(16, cores)` tasks, each writing whole buckets
 (`operators.bulkload.write_tasks`).
 
 Deviations (documented, SURVEY.md §2.2/§2.14): key columns default to
@@ -66,8 +67,8 @@ MIN_PARTITION_NUM = "spark.sql.files.minPartitionNum"
 #: Smallest scan split, and the per-file open cost the split planner
 #: counts: an input below this is one scan task. Small next to the
 #: split of a few-MB input, so that input's last split is not much
-#: shorter than the others (at local[2] a 2.46 MB CSV cuts into 3 ×
-#: 679 KB + 417 KB).
+#: shorter than the others (at local[2] a 2.46 MB CSV cuts into
+#: 1.36 MB + 1.10 MB).
 SCAN_SPLIT_FLOOR = 256 << 10
 
 
@@ -76,18 +77,31 @@ def _cols(n: int) -> list[str]:
 
 
 def _split_lines(
-    spark: SparkSession, path: str, n_columns: int, fields, observation
+    spark: SparkSession, path: str, n_columns: int, fields: str, observation
 ) -> DataFrame:
     """The one delimited-line parse of :func:`read_text` and
     :func:`read_csv`: scan ``path`` as lines, split each by the
-    ``fields`` expression over ``value``, keep a line iff it has exactly
-    ``n_columns`` fields, and name them ``z0..``."""
-    cols = _cols(n_columns)
-    lines = _observe_lines(spark.read.text(path), observation)
-    return (
-        lines.select(fields.alias("p"))
-        .filter(F.size("p") == n_columns)
-        .select(*[F.col("p").getItem(i).alias(c) for i, c in enumerate(cols)])
+    ``fields`` SQL expression over ``value``, keep a line iff it has exactly
+    ``n_columns`` fields, and name them ``z0..``.
+
+    The split sits under a Generate (``explode`` of a one-element
+    array), so it runs once per line: the optimizer cannot push the
+    arity filter, which reads the generated array, below it, as it
+    would below a plain projection (and split again there).
+    ``observation`` counts the lines scanned (n_input), those that pass
+    the gate (n_valid) and the highest scan partition that read a line
+    (last_scan_task), all off that one split."""
+    arity = f"size(p) = {n_columns}"
+    parsed = spark.read.text(path).selectExpr(f"explode(array({fields})) AS p")
+    if observation is not None:
+        parsed = parsed.observe(
+            observation,
+            F.expr("count(1) AS n_input"),
+            F.expr(f"count_if({arity}) AS n_valid"),
+            F.expr("max(spark_partition_id()) AS last_scan_task"),
+        )
+    return parsed.where(arity).selectExpr(
+        *[f"p[{i}] AS {c}" for i, c in enumerate(_cols(n_columns))]
     )
 
 
@@ -108,9 +122,9 @@ def read_text(
     surviving line counts are accumulated DURING the one scan — no
     second pass, no accumulator races (observed metrics are
     exactly-once per action)."""
-    return _split_lines(
-        spark, path, n_columns, F.split(F.col("value"), sep), observation
-    )
+    # the separator as a hex literal: any string, with no SQL escaping
+    fields = f"split(value, CAST(X'{sep.encode().hex()}' AS STRING))"
+    return _split_lines(spark, path, n_columns, fields, observation)
 
 
 def read_csv(
@@ -121,7 +135,10 @@ def read_csv(
     (no quoting — a quoted comma splits, as in the reference) followed
     by the strict arity gate `words.length == COLUMN_COUNT`. Java's
     `String.split` drops *trailing* empty strings (Spark's keeps them),
-    reproduced by stripping trailing commas before the split — so a row
+    reproduced by trimming trailing commas before the split — a plain
+    trim, not the regex `,+$`, whose `$` also matches before a final
+    Unicode line terminator (U+2028, U+0085) and so stripped the comma
+    of `a,b,c,\u2028`, which Java splits into 4 fields. So a row
     whose last field is empty fails the gate and is skipped, exactly
     like the reference; that is why the CSV path drops NULL-in-last-
     column rows that the columnar/Avro importers keep (those skip null
@@ -133,7 +150,7 @@ def read_csv(
     actually materializes, so under column pruning (`df.count()`, key-
     only projections) the gate silently vanishes.
     """
-    fields = F.split(F.regexp_replace(F.col("value"), ",+$", ""), ",", -1)
+    fields = "split(TRIM(TRAILING ',' FROM value), ',', -1)"
     return _split_lines(spark, path, n_columns, fields, observation)
 
 
@@ -175,19 +192,6 @@ def read_rcfile(spark: SparkSession, path: str, n_columns: int) -> DataFrame:
     return rcfile.scan_splits(spark, path, _cols(n_columns))
 
 
-def _observe_lines(lines: DataFrame, observation) -> DataFrame:
-    """``lines`` counted into ``observation`` (n_input) as they are
-    scanned, with the highest scan partition that read a line
-    (last_scan_task), so a run reports the scan tasks it ran."""
-    if observation is None:
-        return lines
-    return lines.observe(
-        observation,
-        F.count(F.lit(1)).alias("n_input"),
-        F.max(F.spark_partition_id()).alias("last_scan_task"),
-    )
-
-
 def _input_bytes(df: DataFrame) -> int:
     """Bytes of the files the one file scan under ``df`` lists: the size
     statistic of its leaf relation, as Spark's file index summed it."""
@@ -197,7 +201,8 @@ def _input_bytes(df: DataFrame) -> int:
 @contextlib.contextmanager
 def _scan_splits(spark: SparkSession):
     """File scans planned inside aim at :data:`TASKS_PER_CORE` tasks per
-    core. Spark's planner splits at ``min(maxPartitionBytes,
+    core: one, so at local[2] a few-MB CSV scans in 2 tasks. Spark's
+    planner splits at ``min(maxPartitionBytes,
     max(openCostInBytes, Σ(file + openCostInBytes) / minPartitionNum))``;
     with minPartitionNum at that task count and
     :data:`SCAN_SPLIT_FLOOR` as the open cost instead of 4 MiB (which
@@ -260,16 +265,16 @@ def ingest(
         write_tasks,
     )
 
-    obs_in = obs_valid = None
+    obs = None
     if collect_metrics and fmt in ("text", "csv"):
         from pyspark.sql import Observation
 
-        obs_in, obs_valid = Observation(), Observation()
+        obs = Observation()
 
     if fmt == "text":
-        df = read_text(spark, input_path, n_columns, sep=sep, observation=obs_in)
+        df = read_text(spark, input_path, n_columns, sep=sep, observation=obs)
     elif fmt == "csv":
-        df = read_csv(spark, input_path, n_columns, observation=obs_in)
+        df = read_csv(spark, input_path, n_columns, observation=obs)
     elif fmt == "columnar":
         df = read_columnar(spark, input_path)
     elif fmt == "avro":
@@ -280,9 +285,6 @@ def ingest(
         df = read_jsonl(spark, input_path, n_columns)
     else:  # pragma: no cover - argparse choices gate this
         raise ValueError(f"unknown format {fmt!r}")
-
-    if obs_valid is not None:
-        df = df.observe(obs_valid, F.count(F.lit(1)).alias("n_valid"))
 
     cols = df.columns
     keys = [cols[i] for i in (key_cols or [0, 1, 2, 3])]
@@ -315,11 +317,12 @@ def ingest(
         "scan_tasks": None,
         "write_tasks": write_tasks(spark),
     }
-    if obs_in is None:
+    if obs is None:
         return sizing
-    n_input = obs_in.get["n_input"]
-    n_valid = obs_valid.get["n_valid"]
-    last_scan_task = obs_in.get["last_scan_task"]
+    seen = obs.get
+    n_input, n_valid, last_scan_task = (
+        seen["n_input"], seen["n_valid"], seen["last_scan_task"]
+    )
     # the reference's "skipping record" println, aggregated
     print(
         f"ingest: {n_input} records in, {n_valid} valid, "
@@ -366,7 +369,7 @@ def main(argv: list[str] | None = None) -> int:
         "file per bucket in 16 bucket= directories (the analytics-native "
         "default), or true HFile v3 files bulk-loaded into a 16-region "
         "table layout (the reference's artifact, HFileOutputFormat2 + "
-        "doBulkLoad); either writes with min(16, 2 x cores) tasks",
+        "doBulkLoad); either writes with min(16, cores) tasks",
     )
     p.add_argument("--sep", default=SOH, help="text-format field delimiter (default SOH)")
     p.add_argument(

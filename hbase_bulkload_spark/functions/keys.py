@@ -28,29 +28,56 @@ from pyspark.sql import functions as F
 REGION_COUNT = 10  # reference: RowKeyConverter.java:8
 
 
-def md5_hex(col: Column | str) -> Column:
+def sql_name(name: str) -> str:
+    """``name`` as a backquoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def md5_hex_sql(name: str) -> str:
+    """SQL text of :func:`md5_hex` over the column ``name``."""
+    return f"md5(coalesce(CAST({sql_name(name)} AS STRING), ''))"
+
+
+def composite_rowkey_sql(*names: str) -> str:
+    """SQL text of :func:`composite_rowkey` over the columns ``names``."""
+    if not names:
+        raise ValueError("composite_rowkey needs at least one column")
+    return f"concat({', '.join(md5_hex_sql(c) for c in names)})"
+
+
+def raw_binary_rowkey_sql(*names: str) -> str:
+    """SQL text of :func:`raw_binary_rowkey` over the columns ``names``."""
+    if not names:
+        raise ValueError("raw_binary_rowkey needs at least one column")
+    return f"concat({', '.join(f'unhex({md5_hex_sql(c)})' for c in names)})"
+
+
+def md5_hex(name: str) -> Column:
     """32-char lowercase hex MD5 of the column's UTF-8 bytes.
 
     Matches `Md5Utils.java:12-20` (hex canonical form). Nulls hash as the
     empty string so a composite key is always full-width.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.md5(F.coalesce(c.cast("string"), F.lit("")))
+    return F.expr(md5_hex_sql(name))
 
 
-def composite_rowkey(*cols: Column | str) -> Column:
+def composite_rowkey(*names: str) -> Column:
     """Concatenation of per-field MD5 digests → one fixed-width key.
 
     `RowKeyConverter.java:13-30` packs 4 × 16 raw bytes; we produce
     4 × 32 hex chars. Uniformly distributed by construction — the
     anti-hotspot property the reference bought with hashed keys.
+
+    Like :func:`md5_hex` and :func:`raw_binary_rowkey`, it is built
+    from its SQL text (:func:`composite_rowkey_sql`): one ``expr`` call
+    per key instead of a JVM call per Column node, and one definition
+    for callers that compose the text into a larger ``selectExpr``.
+    The key functions take column names.
     """
-    if not cols:
-        raise ValueError("composite_rowkey needs at least one column")
-    return F.concat(*[md5_hex(c) for c in cols])
+    return F.expr(composite_rowkey_sql(*names))
 
 
-def raw_binary_rowkey(*cols: Column | str) -> Column:
+def raw_binary_rowkey(*names: str) -> Column:
     """Reference-fidelity opt-in: the 64 RAW digest bytes,
     byte-identical to `RowKeyConverter.makeRowKey`
     (`RowKeyConverter.java:7,26-29`: `KEY_WIDTH = 4 * 16`, four
@@ -60,9 +87,7 @@ def raw_binary_rowkey(*cols: Column | str) -> Column:
     byte order a legacy consumer of the reference would see. The hex
     form (:func:`composite_rowkey`) remains the default — it sorts
     identically (hex is order-preserving) and is debuggable."""
-    if not cols:
-        raise ValueError("raw_binary_rowkey needs at least one column")
-    return F.concat(*[F.unhex(md5_hex(c)) for c in cols])
+    return F.expr(raw_binary_rowkey_sql(*names))
 
 
 def positional_qualifier_bytes(i: int) -> bytes:

@@ -38,35 +38,38 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hbase_bulkload_spark.functions.keys import (
-    composite_rowkey,
-    hex_bucket,
+    composite_rowkey,  # noqa: F401 - perfbench traces it under this module
+    composite_rowkey_sql,
     positional_qualifier_bytes,
-    raw_binary_rowkey,
+    raw_binary_rowkey_sql,
+    sql_name,
 )
 from hbase_bulkload_spark.operators.kv import CURRENT_FAMILY, unpivot_kv
 
 #: Tasks per core for an ingest's scan splits (`cli.ingest`) and
 #: bulk-load write partitions (:func:`write_tasks`). At ``local[2]`` on
-#: a 4-vCPU VM, 2 per core (4 scan + 4 write tasks) ran perfbench's
-#: 30k-row CSV → HFile ingest at a median 32.3k rows/s, against 23.2k with
-#: 1 scan task and 16 hash-partitioned write tasks (10 seeds each,
-#: PySpark's DataFrame debugging on in both).
-TASKS_PER_CORE = 2
+#: a 4-vCPU VM (2 scan + 2 write tasks instead of 4 + 4), perfbench's
+#: 30k-row CSV → HFile ingest went 43.2k → 56.9k rows/s (medians of 10
+#: interleaved pairs, 10/10 won) together with the one-split parse and
+#: the SQL-text plan build; the task count alone took an ingest from
+#: 732 to 684 ms, and 2 scan tasks with 1 write task per core
+#: ran no faster than 1 and 1, so one constant sizes both.
+TASKS_PER_CORE = 1
 
 
-def _rowkey(key_cols: Sequence[str], raw_binary_keys: bool) -> Column:
+def _rowkey_sql(key_cols: Sequence[str], raw_binary_keys: bool) -> str:
     return (
-        raw_binary_rowkey(*key_cols) if raw_binary_keys
-        else composite_rowkey(*key_cols)
+        raw_binary_rowkey_sql(*key_cols) if raw_binary_keys
+        else composite_rowkey_sql(*key_cols)
     )
 
 
-def _bucket(raw_binary_keys: bool) -> Column:
+def _bucket_sql(rowkey: str, raw_binary_keys: bool) -> str:
     # the first hex nibble either way: raw digest bytes bucket on their
     # hex form, so layout and sort order match the 128-hex key's
     return (
-        F.lower(F.substring(F.hex(F.col("rowkey")), 1, 1)) if raw_binary_keys
-        else hex_bucket(F.col("rowkey"))
+        f"lower(substring(hex({rowkey}), 1, 1))" if raw_binary_keys
+        else f"substring({rowkey}, 1, 1)"
     )
 
 
@@ -92,7 +95,7 @@ def _cells(
             ]
         )
         kv = kv.withColumn("qualifier", F.element_at(qmap, F.col("qualifier")))
-    return kv.withColumn("bucket", _bucket(raw_binary_keys))
+    return kv.withColumn("bucket", F.expr(_bucket_sql("rowkey", raw_binary_keys)))
 
 
 def bulkload_kv(
@@ -125,7 +128,7 @@ def bulkload_kv(
       legacy consumer of the reference reads these cells unchanged.
     """
     return _cells(
-        df, _rowkey(key_cols, raw_binary_keys), value_cols, family,
+        df, F.expr(_rowkey_sql(key_cols, raw_binary_keys)), value_cols, family,
         raw_binary_keys, positional_qualifiers, ts=ts, drop_null=drop_null,
     )
 
@@ -144,11 +147,15 @@ def bulkload_wide(
     `Bytes.toBytes(i)` with ``positional_qualifiers``. Map-only, like
     :func:`bulkload_kv`, whose key, bucket and fidelity modes it
     shares; the HFile sink applies :func:`region_align_wide`, its
-    exchange."""
-    wide = df.select(
-        _rowkey(key_cols, raw_binary_keys).alias("rowkey"),
-        *[F.col(c).cast("string").alias(c) for c in value_cols],
-    ).withColumn("bucket", _bucket(raw_binary_keys))
+    exchange. One ``selectExpr`` of SQL text: the bucket is the rowkey
+    expression's first character, which whole-stage codegen computes
+    once for both columns."""
+    rowkey = _rowkey_sql(key_cols, raw_binary_keys)
+    wide = df.selectExpr(
+        f"{rowkey} AS rowkey",
+        *[f"CAST({sql_name(c)} AS STRING) AS {sql_name(c)}" for c in value_cols],
+        f"{_bucket_sql(rowkey, raw_binary_keys)} AS bucket",
+    )
     qualifiers = [
         positional_qualifier_bytes(i) if positional_qualifiers else c.encode()
         for i, c in enumerate(value_cols)
@@ -224,7 +231,7 @@ def _to_write_tasks(wide: DataFrame) -> DataFrame:
     balanced. A ``REPARTITION_BY_NUM`` shuffle is never coalesced by
     AQE, so the placement survives planning."""
     n = write_tasks(wide.sparkSession)
-    part = F.expr(f"CAST(conv(bucket, 16, 10) AS INT) * {n} DIV 16").cast("int")
+    part = F.expr(f"CAST(CAST(conv(bucket, 16, 10) AS INT) * {n} DIV 16 AS INT)")
     return wide.repartitionById(n, part)
 
 

@@ -61,6 +61,7 @@ def task_file_label() -> str:
 
 def write_wide_batches(
     batches,
+    value_cols: Sequence[str],
     qualifiers: Sequence[bytes],
     family: str,
     out_dir: str,
@@ -72,9 +73,11 @@ def write_wide_batches(
     bucket, every cell at timestamp 0; returns one manifest dict per
     file. ``task_label`` should come from :func:`task_file_label`.
 
-    Batch columns are rowkey, one value column per entry of
-    ``qualifiers`` (in that order), bucket — sorted by (bucket, rowkey),
-    `operators.bulkload.region_align_wide`. Each row becomes one cell per
+    Batch columns are rowkey, bucket and the ``value_cols``, whose
+    qualifiers are ``qualifiers`` (in that order) — sorted by (bucket,
+    rowkey), `operators.bulkload.region_align_wide`. Rowkeys and values
+    are string or binary; the writer takes their bytes (a string
+    array's UTF-8 buffer is already binary). Each row becomes one cell per
     non-null value (empty values are kept), all of ``family``,
     qualifiers in byte order (``z10`` < ``z2``). Rows sharing a rowkey
     are exploded together and their cells stable-sorted by (rowkey,
@@ -107,6 +110,7 @@ def write_wide_batches(
     quals = pa.array([qualifiers[j] for j in by_bytes], pa.binary())
     fam = pa.array([family.encode()], pa.binary())
     k = len(qualifiers)
+    value_cols = [value_cols[j] for j in by_bytes]
     writers: dict[str, hf.HFileWriter] = {}
 
     def run_starts(col) -> np.ndarray:
@@ -121,9 +125,11 @@ def write_wide_batches(
 
     def write(rb, new_key):
         n = rb.num_rows
-        rk, bkt = rb.column(0), rb.column(k + 1)
+        rk, bkt = rb.column("rowkey"), rb.column("bucket")
         # column-major: value j of row i sits at j*n + i
-        values = pa.concat_arrays([rb.column(1 + j) for j in by_bytes])
+        values = pa.concat_arrays(
+            [rb.column(c).cast(pa.binary()) for c in value_cols]
+        )
         cell = (np.arange(n)[:, None] + n * np.arange(k)[None, :]).ravel()
         valid = values.is_valid().to_numpy(zero_copy_only=False)[cell]
         # first cell of each row (and the end): rows stay contiguous
@@ -154,7 +160,7 @@ def write_wide_batches(
     for rb in batches:
         if rb.num_rows == 0:
             continue
-        nulls = rb.column(k + 1).null_count
+        nulls = rb.column("bucket").null_count
         if nulls:
             raise ValueError(
                 f"bucket column has {nulls} null(s): a row without a "
@@ -163,13 +169,13 @@ def write_wide_batches(
             )
         if carry is not None:
             rb = pa.Table.from_batches([carry, rb]).combine_chunks().to_batches()[0]
-        new_key = run_starts(rb.column(0))
+        new_key = run_starts(rb.column("rowkey"))
         last = int(np.flatnonzero(new_key)[-1])
         if last:
             write(rb.slice(0, last), new_key[:last])
         carry = rb.slice(last)
     if carry is not None:
-        write(carry, run_starts(carry.column(0)))
+        write(carry, run_starts(carry.column("rowkey")))
 
     out = []
     for bucket, w in writers.items():
@@ -201,44 +207,46 @@ def write_region_hfiles(
     returned manifest is one row per file.
 
     ``wide`` has columns rowkey, bucket and one value column per entry
-    of ``qualifiers``, in ``qualifiers`` order. The writer task explodes
+    of ``qualifiers``, in ``qualifiers`` order; rowkey and values are
+    string or binary. The writer task explodes
     each row into cells of ``family`` (:func:`write_wide_batches`), so
     the exchange and the Arrow hop move one row per record instead of
     one cell per value, each repeating the rowkey. A frame missing
-    rowkey or bucket, or whose value columns do not match
-    ``qualifiers``, is rejected here, before any job starts; a null
-    bucket fails the write task.
+    rowkey or bucket, whose value columns do not match ``qualifiers``,
+    or with a column that is neither string nor binary, is rejected
+    here, before any job starts; a null bucket fails the write task.
 
-    Rowkey and value columns are cast to binary JVM-side before the
-    Python hop: codegen does the UTF-8 encode once per value, so the
-    executor loop never runs per-cell Python ``str.encode`` calls (a
-    no-op for callers already passing binary columns). The hop itself
-    is ``mapInArrow`` feeding ``add_many_arrow`` — the mapInPandas
-    object-array materialization was ~2 s of a ~4.7 s write wall at
-    sf0.1 (A/B with a no-op executor body, round 7)."""
+    The hop is ``mapInArrow``, which hands the task Arrow utf8 arrays:
+    their buffers are already the UTF-8 bytes, so the writer
+    reinterprets them as binary without a JVM-side cast or any
+    per-cell Python object (``HFileWriter.add_many_arrow`` takes string
+    or binary arrays)."""
     import pyarrow as pa
-    from pyspark.sql import functions as F
     from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import BinaryType, StringType
 
     from hbase_bulkload_spark.operators.bulkload import region_align_wide
 
-    cols = wide.columns
-    missing = [c for c in ("rowkey", "bucket") if c not in cols]
+    types = {f.name: f.dataType for f in wide.schema.fields}
+    missing = [c for c in ("rowkey", "bucket") if c not in types]
     if missing:
         raise ValueError(
-            f"the wide frame {cols} needs rowkey and bucket columns; "
+            f"the wide frame {list(types)} needs rowkey and bucket columns; "
             f"missing {missing}"
         )
-    value_cols = [c for c in cols if c not in ("rowkey", "bucket")]
+    value_cols = [c for c in types if c not in ("rowkey", "bucket")]
     if len(value_cols) != len(qualifiers):
         raise ValueError(
             f"{len(qualifiers)} qualifiers for the value columns {value_cols}"
         )
+    not_bytes = [
+        c for c in ("rowkey", *value_cols)
+        if not isinstance(types[c], (StringType, BinaryType))
+    ]
+    if not_bytes:
+        raise ValueError(f"columns {not_bytes} are neither string nor binary")
     qualifiers = list(qualifiers)
-    wide = region_align_wide(wide).select(
-        *[F.col(c).cast("binary").alias(c) for c in ("rowkey", *value_cols)],
-        "bucket",
-    )
+    wide = region_align_wide(wide)
 
     os.makedirs(out_dir, exist_ok=True)
     manifest_schema = pa.schema([
@@ -248,7 +256,7 @@ def write_region_hfiles(
 
     def write_parts(batches):
         out = write_wide_batches(
-            batches, qualifiers, family, out_dir, task_file_label()
+            batches, value_cols, qualifiers, family, out_dir, task_file_label()
         )
         yield pa.RecordBatch.from_pylist(out, schema=manifest_schema)
 
@@ -356,12 +364,18 @@ def bulkload_to_table(
     of `operators.bulkload.bulkload_wide`, whose value columns map onto
     ``qualifiers`` (see :func:`write_region_hfiles`, which aligns it);
     every cell is written with ``family`` and placed under a store
-    directory of that name. Returns the per-file load manifest."""
+    directory of that name. Returns the per-file load manifest. A failed
+    write leaves no staging directory behind."""
     spark = wide.sparkSession
     if os.path.exists(out_dir):
         shutil.rmtree(out_dir)
     staging = os.path.join(out_dir, "_staging")
-    manifest = write_region_hfiles(wide, staging, qualifiers, family=family)
+    try:
+        manifest = write_region_hfiles(wide, staging, qualifiers, family=family)
+    except BaseException:
+        # the files the write tasks that did finish committed
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
     loaded = do_bulk_load(
         [m["path"] for m in manifest], out_dir, boundaries, family=family, spark=spark
     )

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hbase_bulkload_spark.operators.bulkload import (
+    TASKS_PER_CORE,
     bulkload_kv,
     bulkload_pipeline,
     bulkload_wide,
@@ -217,9 +218,10 @@ def test_wide_writer_duplicate_keys_across_batches(spark, tmp_path, monkeypatch)
     """Triplicated key tuples with 2-row Arrow batches: every run of
     equal rowkeys straddles a batch cut, so the writer must carry the
     run over. Cells stay in (rowkey, qualifier) order and each row's
-    cell multiset equals the input's. The 4 write tasks of a 2-core
-    session hold contiguous runs of whole buckets: bucket ``b`` is one
-    file, written by task ``b * 4 // 16``."""
+    cell multiset equals the input's. The ``n`` write tasks of a
+    2-core session (``2 * TASKS_PER_CORE``) hold contiguous runs of
+    whole buckets: bucket ``b`` is one file, written by task
+    ``b * n // 16``."""
     from collections import Counter
 
     from pyspark import SparkContext
@@ -250,7 +252,8 @@ def test_wide_writer_duplicate_keys_across_batches(spark, tmp_path, monkeypatch)
         m["bucket"]: int(os.path.basename(m["path"]).split("-")[1]) for m in manifest
     }
     assert len(task_of) == len(manifest)
-    assert task_of == {b: int(b, 16) * 4 // 16 for b in task_of}
+    n = 2 * TASKS_PER_CORE
+    assert task_of == {b: int(b, 16) * n // 16 for b in task_of}
 
     got: dict[bytes, Counter] = {}
     for path, cells in _file_cells([m["path"] for m in manifest]).items():

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hbase_bulkload_spark import cli
+from hbase_bulkload_spark.operators.bulkload import TASKS_PER_CORE
 from hbase_bulkload_spark.sources import records
 
 
@@ -112,21 +113,49 @@ def test_cli_csv_arity_gate(spark, tmp_path):
     md5("")-keyed records the reference rejects."""
     src = str(tmp_path / "csv_gate_src")
     os.makedirs(src)
-    with open(os.path.join(src, "part.csv"), "w") as fh:
+    with open(os.path.join(src, "part.csv"), "w", encoding="utf-8") as fh:
         fh.write("a1,b1,c1\n")          # valid
         fh.write("a2,b2\n")             # short -> dropped
         fh.write("a3,b3,c3,d3\n")       # long -> dropped
         fh.write("a4,,c4\n")            # mid-row empty -> kept, z1 == ""
         fh.write("a5,b5,\n")            # trailing empty -> dropped (Java)
+        fh.write("a6,b6,c6,,,\n")       # trailing empties dropped -> kept
+        fh.write(",,,\n")               # all empty -> dropped (0 fields)
+        # Java splits on the commas only: 4 fields -> dropped
+        fh.write("a7,b7,c7,\u2028\n")
+        fh.write("a8,b8,c8,\u0085\n")
     df = cli.read_csv(spark, src, 3)
     rows = {r.z0: r for r in df.collect()}
-    assert set(rows) == {"a1", "a4"}
+    assert set(rows) == {"a1", "a4", "a6"}
     assert rows["a4"].z1 == ""  # empty string, not null (reference keeps "")
 
     out = str(tmp_path / "csv_gate_out")
     cli.ingest(spark, src, out, fmt="csv", n_columns=3, key_cols=[0])
     keys = _load_out(spark, out).select("rowkey").distinct().count()
-    assert keys == 2  # only the two valid rows produce rowkeys
+    assert keys == 3  # only the three valid rows produce rowkeys
+
+
+@pytest.mark.parametrize("observed", [False, True])
+@pytest.mark.parametrize("fmt", ["text", "csv"])
+def test_read_splits_each_line_once(spark, tmp_path, fmt, observed):
+    """The executed scan plan splits each line once, with and without
+    the skip-count observation: the arity gate filters the one split's
+    output instead of being pushed below it with a split of its own."""
+    from pyspark.sql import Observation
+
+    src = str(tmp_path / "lines")
+    os.makedirs(src)
+    with open(os.path.join(src, "part"), "w") as fh:
+        fh.write("a,b,c\n")
+    obs = Observation() if observed else None
+    if fmt == "csv":
+        df = cli.read_csv(spark, src, 3, observation=obs)
+    else:
+        df = cli.read_text(spark, src, 3, sep=",", observation=obs)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("split(") == 1, plan
+    assert "regexp_replace" not in plan, plan
+    assert [tuple(r) for r in df.collect()] == [("a", "b", "c")]
 
 
 def test_cli_generic_arity(spark, tmp_path):
@@ -399,9 +428,9 @@ def test_ingest_csv_scan_splits_exact_counts(spark, tmp_path):
         collect_metrics=True,
     )
     assert m["input_bytes"] == len(data)
-    assert m["write_tasks"] == min(16, spark.sparkContext.defaultParallelism * 2)
+    tasks = spark.sparkContext.defaultParallelism * TASKS_PER_CORE
+    assert m["write_tasks"] == min(16, tasks)
     # Spark's maxSplitBytes under the sized confs (far below the cap)
-    tasks = spark.sparkContext.defaultParallelism * 2
     split = max(cli.SCAN_SPLIT_FLOOR, (len(data) + cli.SCAN_SPLIT_FLOOR) // tasks)
     offsets = range(split, len(data), split)
     assert len(offsets) >= 1  # ≥ 2 splits
@@ -431,8 +460,8 @@ def test_ingest_small_csv_is_one_scan_task(spark, tmp_path):
 
 def test_hfile_write_tasks_follow_cores(spark, tmp_path, monkeypatch):
     """At local[2]'s default parallelism the HFile sink writes with
-    2 × 2 = 4 tasks, and the table still has one whole HFile per
-    region: 16 files, none split at load."""
+    2 × TASKS_PER_CORE tasks, and the table still has one whole HFile
+    per region: 16 files, none split at load."""
     import glob
 
     from pyspark import SparkContext
@@ -450,10 +479,10 @@ def test_hfile_write_tasks_follow_cores(spark, tmp_path, monkeypatch):
         )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert m["write_tasks"] == 4
+    assert m["write_tasks"] == 2 * TASKS_PER_CORE
     jobs = sc.statusTracker().getJobIdsForGroup("hfile-write-tasks")
     write_stage = max(s for j in jobs for s in sc.statusTracker().getJobInfo(j).stageIds)
-    assert sc.statusTracker().getStageInfo(write_stage).numTasks == 4
+    assert sc.statusTracker().getStageInfo(write_stage).numTasks == 2 * TASKS_PER_CORE
     loaded = glob.glob(os.path.join(out, "region-*", "c", "*.hfile"))
     assert len({os.path.dirname(p) for p in loaded}) == len(loaded) == 16
     assert not [p for p in loaded if p.endswith((".bottom.hfile", ".top.hfile"))]
@@ -468,7 +497,7 @@ def test_ingest_restores_file_confs(spark, tmp_path, monkeypatch):
     keys = (cli.OPEN_COST_BYTES, cli.MIN_PARTITION_NUM)
     sized = {
         cli.OPEN_COST_BYTES: str(cli.SCAN_SPLIT_FLOOR),
-        cli.MIN_PARTITION_NUM: str(spark.sparkContext.defaultParallelism * 2),
+        cli.MIN_PARTITION_NUM: str(spark.sparkContext.defaultParallelism * TASKS_PER_CORE),
     }
     before = {k: spark.conf.get(k, None) for k in keys}
     assert before[cli.MIN_PARTITION_NUM] is None

@@ -566,7 +566,7 @@ def test_null_bucket_rejected(spark, tmp_path):
     """A wide row with a null bucket has no region: its write task
     raises a ValueError naming the bucket column (surfaced by Spark as
     the task's Python error), and the bulk load places no file in any
-    region directory."""
+    region directory and leaves no staging directory behind."""
     from pyspark.errors import PythonException
 
     wide = spark.createDataFrame(
@@ -580,6 +580,7 @@ def test_null_bucket_rejected(spark, tmp_path):
     with pytest.raises(PythonException, match=rejected):
         hl.bulkload_to_table(wide, str(out), [b"", b"1", b"2"], qualifiers=[b"r"])
     assert glob.glob(str(out / "region-*" / "*" / "*")) == []
+    assert not (out / "_staging").exists()
 
 
 def test_bulkload_to_table_family(spark, tmp_path):
